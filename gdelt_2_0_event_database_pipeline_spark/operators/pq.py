@@ -1094,11 +1094,6 @@ def read_pq_codebooks(spark, path: str):
     return read_pq_meta(spark, path)[0]
 
 
-def read_pq_residual_flag(spark, path: str) -> bool:
-    """Whether the index at ``path`` stores residual-encoded codes."""
-    return read_pq_meta(spark, path)[2]
-
-
 def read_pq_index(spark, path: str):
     """(codes DataFrame, codebooks) from ``write_pq_index`` output."""
     root = resolve_index_root(spark, path)

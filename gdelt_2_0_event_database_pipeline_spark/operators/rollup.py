@@ -51,10 +51,6 @@ _STATS = {
 }
 
 
-def _state_cols(value_cols: Sequence[str]) -> list[str]:
-    return [f"{v}_{s}" for v in value_cols for s in _STATS]
-
-
 def build_rollup(
     df: DataFrame,
     group_cols: Sequence[str],

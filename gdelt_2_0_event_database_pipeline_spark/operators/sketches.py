@@ -18,13 +18,6 @@ def approx_distinct(col: str, rsd: float = 0.05) -> Column:
     return F.approx_count_distinct(col, rsd)
 
 
-def approx_quantiles(
-    df: DataFrame, col: str, probabilities: list[float], relative_error: float = 0.01
-) -> list[float]:
-    """Greenwald-Khanna quantile sketch (single pass, mergeable)."""
-    return df.approxQuantile(col, probabilities, relative_error)
-
-
 def percentile_approx(col: str, percentage: float, accuracy: int = 10000) -> Column:
     """t-digest-style approximate percentile aggregate (group-able)."""
     return F.percentile_approx(col, percentage, accuracy)

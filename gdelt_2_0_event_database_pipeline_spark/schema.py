@@ -63,21 +63,6 @@ DEFAULT_PARTITION_RULES: dict[str, list[str]] = {
 }
 
 
-def spark_type_for(column: str) -> T.DataType:
-    if column in LONG_COLUMNS:
-        return T.LongType()
-    if column in NUMERIC_COLUMNS:
-        return T.DoubleType()
-    return T.StringType()
-
-
-def gdelt_event_schema() -> T.StructType:
-    """Post-conversion (typed) schema of the single logical event table."""
-    return T.StructType(
-        [T.StructField(c, spark_type_for(c), nullable=True) for c in GDELT_COLUMNS]
-    )
-
-
 def gdelt_csv_schema() -> T.StructType:
     """Raw-read schema: all strings, exactly as the reference reads CSVs
     (``converter.py:214-223``, ``dtype=str``); typed casts happen after."""

@@ -496,3 +496,30 @@ def test_quantile_table_shape(spark):
     rows = quantile_table(df, "v", points=5).collect()
     got = {r.p: r.q for r in rows}
     assert got == {0.0: 0.0, 0.25: 25.0, 0.5: 50.0, 0.75: 75.0, 1.0: 100.0}
+
+
+#: join-free registry rows (AQE cannot re-plan them into a different join, so
+#: their generated code is the same on every call) that together use ~150
+#: generated classes at sf0.001 — more than Spark's default cache of 100
+_CODEGEN_ROWS = (
+    "q_profile", "q_gap_stats", "q_spearman", "q_hist_quantile_rollup",
+    "q_autocorr", "q_burst_detection",
+)
+
+
+def test_warm_rows_do_not_recompile(spark):
+    from gdelt_2_0_event_database_pipeline_spark.session import (
+        CODEGEN_CACHE_ENTRIES,
+        codegen_compiles,
+    )
+
+    def walk() -> int:
+        n0 = codegen_compiles(spark)[0]
+        for name in _CODEGEN_ROWS:
+            QUERIES[name].fn(spark, SF_DIR).write.format("noop").mode("overwrite").save()
+        return codegen_compiles(spark)[0] - n0
+
+    walk()
+    # at a cache of 100 the second walk recompiled ~140 evicted classes
+    assert walk() == 0
+    assert spark.conf.get("spark.sql.codegen.cache.maxEntries") == str(CODEGEN_CACHE_ENTRIES)
