@@ -54,6 +54,7 @@ from typing import Sequence
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..functions.sqltext import lit_arr
 from .similarity import _as_double, cosine
 
 #: measured recall@5 vs probed-cell FRACTION (nprobe / n_cells), from the
@@ -206,10 +207,8 @@ def nearest_cells_expr_mapside(
     # calls at k=8, d=64 — the guide §4 construction cost); identical
     # CreateArray-of-DOUBLE-Literals tree, bit-exact D-literal spelling,
     # pinned by the mapside==assign_cells differential in tests/test_ivf.py
-    from .opq import _sql_arr
-
-    cents = F.expr(_sql_arr([[float(w) for w in c] for c in centroids]))
-    csq = F.expr(_sql_arr([float(sum(w * w for w in c)) for c in centroids]))
+    cents = lit_arr(centroids)
+    csq = lit_arr([sum(w * w for w in c) for c in centroids])
 
     def _dot(cent):
         return F.aggregate(

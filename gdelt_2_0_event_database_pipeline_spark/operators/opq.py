@@ -42,11 +42,10 @@ Reference parity: the reference pipeline has no vector stage
 
 from __future__ import annotations
 
-import math
-
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..functions.sqltext import check_expr_col, sql_double
 from .pq import _collect_fit_sample, _fit_pq_on_matrix
 
 
@@ -138,58 +137,6 @@ def fit_opq(
     )
 
 
-def _sql_double(v: float) -> str:
-    """Exact double literal for SQL text: ``repr(float)`` is the shortest
-    round-tripping decimal and the ``D`` suffix makes the parser emit a
-    DOUBLE Literal node directly (``Double.parseDouble`` — bit-identical).
-    A ``CAST('…' AS DOUBLE)`` spelling would parse to the same VALUE but
-    leave thousands of un-folded Cast nodes that every analysis pass of
-    every composed plan re-walks — measured ~20% slower OPQ builds.
-
-    Non-finite values are rejected LOUDLY (r15 ADVICE): ``repr(nan)`` is
-    ``'nan'``, which the SQL parser turns into a Catalyst ParseException
-    pages away from the actual bug — a NaN/Inf cell in a rotation/PCA/
-    projection matrix. Raise a named ValueError at the emit site instead."""
-    f = float(v)
-    if not math.isfinite(f):
-        raise ValueError(
-            f"non-finite matrix value {f!r} cannot be emitted as a SQL "
-            "double literal — the rotation/projection/codebook matrix "
-            "contains NaN/Inf (check the fit inputs)"
-        )
-    return f"{repr(f)}D"
-
-
-def _sql_arr(vals) -> str:
-    """SQL text of a (possibly nested) double array literal —
-    ``array(array(1.0D, …), …)``. Parses to the exact tree PySpark's
-    ``F.lit(nested_list)`` builds (CreateArray over DOUBLE Literals) but
-    in ONE ``F.expr`` round-trip instead of one py4j call per element:
-    ``F.lit`` on a 16×16×4 codebook costs ~1.3k driver round-trips
-    (~1.5–2 s per plan, measured on the append hot path) vs ~1 ms of
-    Catalyst parsing (guide §4 — the r15 rotate_vectors finding applied
-    to every literal-matrix site). Bit-exact via :func:`_sql_double`."""
-    if isinstance(vals, (list, tuple)):
-        return "array(" + ", ".join(_sql_arr(v) for v in vals) + ")"
-    return _sql_double(vals)
-
-
-def _check_expr_col(name: str) -> str:
-    """Column-name contract for the F.expr-generated paths (r15 ADVICE):
-    the generated SQL backtick-quotes ``name``, which resolves TOP-LEVEL
-    columns only — a dotted name is taken literally (not as a nested
-    struct field, unlike ``F.col``), and a backtick inside the name would
-    break out of the quoting. Reject the backtick case loudly; dotted
-    names stay allowed with the literal-name meaning documented here
-    (select/alias the nested field first if you need struct access)."""
-    if "`" in name:
-        raise ValueError(
-            f"column name {name!r} contains a backtick — unsupported on "
-            "the F.expr-generated paths (alias the column first)"
-        )
-    return name
-
-
 def rotate_vectors(
     df: DataFrame,
     rotation: list[list[float]],
@@ -214,11 +161,11 @@ def rotate_vectors(
     d = len(rotation)
     if any(len(row) != d for row in rotation):
         raise ValueError("rotation must be square d×d")
-    _check_expr_col(vec_col)  # top-level-name contract (see helper)
+    check_expr_col(vec_col)  # top-level-name contract (see helper)
     vec = f"CAST(`{vec_col}` AS ARRAY<DOUBLE>)"
     dots = ", ".join(
         f"aggregate(zip_with({vec}, array("
-        + ", ".join(_sql_double(w) for w in row)
+        + ", ".join(sql_double(w) for w in row)
         + "), (a, b) -> a * b), 0.0D, (acc, v) -> acc + v)"
         for row in rotation
     )

@@ -45,9 +45,10 @@ from typing import Iterator
 
 import pandas as pd
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..functions.sqltext import check_expr_col, lit_arr, sql_double
 from .ivf import well_formed_vectors
 
 #: driver-side eigendecomposition is O(max_dim³) time / O(max_dim²) memory;
@@ -331,15 +332,6 @@ def read_pca_model(spark, path: str) -> PCAModel:
     )
 
 
-def _lit_arr(vals: list[float]) -> Column:
-    # one F.expr parse (identical CreateArray-of-DOUBLE-Literals tree,
-    # bit-exact D spelling) instead of a py4j round-trip per element —
-    # guide §4 construction cost, the r15 rotate_vectors finding
-    from .opq import _sql_arr
-
-    return F.expr(_sql_arr([float(v) for v in vals]))
-
-
 def correlation_matrix(
     df: DataFrame, vec_col: str = "embedding"
 ) -> DataFrame:
@@ -443,13 +435,11 @@ def random_projection(
         # r15 measurement); Catalyst parses the same tree from text in
         # ~0.1 s. repr(float) round-trips bit-exactly through the
         # string→DOUBLE cast, so the numbers are unchanged.
-        from .opq import _check_expr_col, _sql_double
-
-        _check_expr_col(vec_col)  # top-level-name contract (see helper)
+        check_expr_col(vec_col)  # top-level-name contract (see helper)
         vec = f"CAST(`{vec_col}` AS ARRAY<DOUBLE>)"
         dots = ", ".join(
             f"aggregate(zip_with({vec}, array("
-            + ", ".join(_sql_double(x) for x in w)
+            + ", ".join(sql_double(x) for x in w)
             + "), (a, b) -> a * b), 0.0D, (acc, v) -> acc + v)"
             for w in rows
         )
@@ -513,7 +503,7 @@ def project_pca(
         F.col(vec_col).isNotNull() & (F.size(vec_col) == d),
         F.zip_with(
             F.col(vec_col).cast("array<double>"),
-            _lit_arr(model.mean),
+            lit_arr(model.mean),
             lambda x, m: x - m,
         ),
     )
@@ -529,11 +519,9 @@ def project_pca(
     # ONE F.expr string for the k aggregate folds (the rotate_vectors /
     # random_projection r15 construction fix — same tree, parsed instead
     # of built through ~3k py4j round-trips; repr round-trips each double)
-    from .opq import _sql_double
-
     dots = ", ".join(
         f"aggregate(zip_with(`{tmp}`, array("
-        + ", ".join(_sql_double(x) for x in w)
+        + ", ".join(sql_double(x) for x in w)
         + "), (a, b) -> a * b), 0.0D, (acc, v) -> acc + v)"
         for w in rows
     )

@@ -73,6 +73,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..functions.sqltext import lit_arr
 from .ivf import well_formed_vectors
 from .similarity import _as_double, cosine
 
@@ -369,15 +370,10 @@ def pq_encode_mapside(
     # the identical CreateArray-of-DOUBLE-Literals, bit-exact via the
     # D-literal spelling; pinned by the mapside==posexplode differential
     # in tests/test_pq.py.
-    from .opq import _sql_arr
-
-    cb = F.expr(_sql_arr(codebooks))
-    csq = F.expr(_sql_arr(
-        [
-            [float(sum(w * w for w in cent)) for cent in books]
-            for books in codebooks
-        ]
-    ))
+    cb = lit_arr(codebooks)
+    csq = lit_arr(
+        [[sum(w * w for w in cent) for cent in books] for books in codebooks]
+    )
 
     def _dot(xs, cent):
         return F.aggregate(

@@ -33,6 +33,8 @@ from itertools import combinations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..functions.sqltext import check_expr_col, sql_double
+
 
 def _fold_sum(arr: Column) -> Column:
     return F.aggregate(arr, F.lit(0.0), lambda acc, x: acc + x)
@@ -113,13 +115,11 @@ def lsh_signature(
     planes = plane_weights(num_planes, dim, seed)
 
     if isinstance(vec, str):
-        from .opq import _check_expr_col, _sql_double
-
-        _check_expr_col(vec)  # top-level-name contract (see helper)
+        check_expr_col(vec)  # top-level-name contract (see helper)
 
         bits = " + ".join(
             "(CASE WHEN aggregate(zip_with(`" + vec + "`, array("
-            + ", ".join(_sql_double(w) for w in planes[p])
+            + ", ".join(sql_double(w) for w in planes[p])
             + "), (x, w) -> x * w), 0.0D, (acc, x) -> acc + x)"
             f" >= 0 THEN {1 << p} ELSE 0 END)"
             for p in range(num_planes)

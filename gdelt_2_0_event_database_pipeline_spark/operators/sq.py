@@ -34,6 +34,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..functions.sqltext import lit_arr
 from .ivf import well_formed_vectors
 from .pq import _assert_size
 from .similarity import _as_double, cosine
@@ -66,21 +67,12 @@ def fit_sq_bounds(
     return mins, maxs
 
 
-def _lit_arr(vals: list[float]) -> Column:
-    # one F.expr parse (identical CreateArray-of-DOUBLE-Literals tree,
-    # bit-exact D spelling) instead of a py4j round-trip per element —
-    # guide §4 construction cost, the r15 rotate_vectors finding
-    from .opq import _sql_arr
-
-    return F.expr(_sql_arr([float(v) for v in vals]))
-
-
 def sq_encode_expr(vec: Column, mins: list[float], maxs: list[float]) -> Column:
     """array<int> of 8-bit codes: floor((x - mn_i)/(mx_i - mn_i) * 255),
     clamped to [0, 255]; constant dimensions (mx == mn) encode as 0.
     Explicit ``floor`` BEFORE the int cast so Spark and the DuckDB oracle
     agree (double→int casts round in DuckDB, truncate in Spark)."""
-    mn, mx = _lit_arr(mins), _lit_arr(maxs)
+    mn, mx = lit_arr(mins), lit_arr(maxs)
 
     def code(x: Column, i: Column) -> Column:
         lo = F.element_at(mn, i + F.lit(1))
@@ -94,7 +86,7 @@ def sq_encode_expr(vec: Column, mins: list[float], maxs: list[float]) -> Column:
 
 def sq_decode_expr(codes: Column, mins: list[float], maxs: list[float]) -> Column:
     """array<double> reconstruction: mn_i + c/255 * (mx_i - mn_i)."""
-    mn, mx = _lit_arr(mins), _lit_arr(maxs)
+    mn, mx = lit_arr(mins), lit_arr(maxs)
 
     def dec(c: Column, i: Column) -> Column:
         lo = F.element_at(mn, i + F.lit(1))

@@ -23,58 +23,8 @@ from . import tpch_plans  # noqa: E402,F401
 # ---------------------------------------------------------------------------
 _DRIVER_PRIORITY = [
     # Regenerated by tools/gen_rotation.py from CORRECTNESS_r* evidence
-    # through r15: ERR'd / row-less queries first, then strictly
+    # through r16: ERR'd / row-less queries first, then strictly
     # oldest-evidence-first (alphabetical within a round).
-    "q_sq_encode",  # last driver row: r10
-    "q_text_quality",  # last driver row: r10
-    "q_token_budget",  # last driver row: r10
-    "q_token_budget_per_lang",  # last driver row: r10
-    "q_token_count_udf",  # last driver row: r10
-    "q_token_histogram",  # last driver row: r10
-    "q_twap",  # last driver row: r10
-    "q_union_by_name",  # last driver row: r10
-    "q_unpivot",  # last driver row: r10
-    "q_zscore",  # last driver row: r10
-    "q_ab_test",  # last driver row: r11
-    "q_apply_changes",  # last driver row: r11
-    "q_attribution_linear",  # last driver row: r11
-    "q_autocorr",  # last driver row: r11
-    "q_benford",  # last driver row: r11
-    "q_class_balance",  # last driver row: r11
-    "q_corpus_venn",  # last driver row: r11
-    "q_coverage_topk",  # last driver row: r11
-    "q_cramers_v",  # last driver row: r11
-    "q_decile_lift",  # last driver row: r11
-    "q_dedup_minhash_index",  # last driver row: r11
-    "q_dp_release",  # last driver row: r11
-    "q_fk_check",  # last driver row: r11
-    "q_fuzzy_blocked",  # last driver row: r11
-    "q_gap_stats",  # last driver row: r11
-    "q_geo_hotspots",  # last driver row: r11
-    "q_geo_radius_join",  # last driver row: r11
-    "q_hard_negatives",  # last driver row: r11
-    "q_hhi",  # last driver row: r11
-    "q_interpolate",  # last driver row: r11
-    "q_interval_intersect",  # last driver row: r11
-    "q_khop_reach",  # last driver row: r11
-    "q_ks_drift",  # last driver row: r11
-    "q_life_table",  # last driver row: r11
-    "q_lorenz",  # last driver row: r11
-    "q_mode_per_group",  # last driver row: r11
-    "q_mom_growth",  # last driver row: r11
-    "q_odds_ratio",  # last driver row: r11
-    "q_pagerank",  # last driver row: r11
-    "q_pca_cov",  # last driver row: r11
-    "q_pct_ref_bucketed",  # last driver row: r11
-    "q_peak_hour",  # last driver row: r11
-    "q_percentile_vs_ref",  # last driver row: r11
-    "q_pk_check",  # last driver row: r11
-    "q_quantile_table",  # last driver row: r11
-    "q_runs_test",  # last driver row: r11
-    "q_scd2_build",  # last driver row: r11
-    "q_scd2_pit",  # last driver row: r11
-    "q_seasonal_decompose",  # last driver row: r11
-    "q_share_of_parent",  # last driver row: r11
     "q_skyline",  # last driver row: r11
     "q_stickiness",  # last driver row: r11
     "q_streaks",  # last driver row: r11
@@ -275,6 +225,56 @@ _DRIVER_PRIORITY = [
     "q_topk_per_group",  # last driver row: r15
     "q_window_range_frame",  # last driver row: r15
     "q_window_running",  # last driver row: r15
+    "q_ab_test",  # last driver row: r16
+    "q_apply_changes",  # last driver row: r16
+    "q_attribution_linear",  # last driver row: r16
+    "q_autocorr",  # last driver row: r16
+    "q_benford",  # last driver row: r16
+    "q_class_balance",  # last driver row: r16
+    "q_corpus_venn",  # last driver row: r16
+    "q_coverage_topk",  # last driver row: r16
+    "q_cramers_v",  # last driver row: r16
+    "q_decile_lift",  # last driver row: r16
+    "q_dedup_minhash_index",  # last driver row: r16
+    "q_dp_release",  # last driver row: r16
+    "q_fk_check",  # last driver row: r16
+    "q_fuzzy_blocked",  # last driver row: r16
+    "q_gap_stats",  # last driver row: r16
+    "q_geo_hotspots",  # last driver row: r16
+    "q_geo_radius_join",  # last driver row: r16
+    "q_hard_negatives",  # last driver row: r16
+    "q_hhi",  # last driver row: r16
+    "q_interpolate",  # last driver row: r16
+    "q_interval_intersect",  # last driver row: r16
+    "q_khop_reach",  # last driver row: r16
+    "q_ks_drift",  # last driver row: r16
+    "q_life_table",  # last driver row: r16
+    "q_lorenz",  # last driver row: r16
+    "q_mode_per_group",  # last driver row: r16
+    "q_mom_growth",  # last driver row: r16
+    "q_odds_ratio",  # last driver row: r16
+    "q_pagerank",  # last driver row: r16
+    "q_pca_cov",  # last driver row: r16
+    "q_pct_ref_bucketed",  # last driver row: r16
+    "q_peak_hour",  # last driver row: r16
+    "q_percentile_vs_ref",  # last driver row: r16
+    "q_pk_check",  # last driver row: r16
+    "q_quantile_table",  # last driver row: r16
+    "q_runs_test",  # last driver row: r16
+    "q_scd2_build",  # last driver row: r16
+    "q_scd2_pit",  # last driver row: r16
+    "q_seasonal_decompose",  # last driver row: r16
+    "q_share_of_parent",  # last driver row: r16
+    "q_sq_encode",  # last driver row: r16
+    "q_text_quality",  # last driver row: r16
+    "q_token_budget",  # last driver row: r16
+    "q_token_budget_per_lang",  # last driver row: r16
+    "q_token_count_udf",  # last driver row: r16
+    "q_token_histogram",  # last driver row: r16
+    "q_twap",  # last driver row: r16
+    "q_union_by_name",  # last driver row: r16
+    "q_unpivot",  # last driver row: r16
+    "q_zscore",  # last driver row: r16
 ]
 
 

@@ -18,7 +18,7 @@ from pyspark.sql import functions as F
 from ..operators import dedup as D
 from ..operators import similarity as S
 from ..operators import text as X
-from .registry import ORACLE_ARTIFACTS as _ORACLE_ARTIFACTS, register
+from .registry import ORACLE_ARTIFACTS as _ORACLE_ARTIFACTS, once, register
 from .relational import _events, _t
 
 # DuckDB twin of operators.text.tokens() — documents.text is ASCII lowercase,
@@ -27,18 +27,66 @@ _SQL_TOKENS = (
     "list_filter(regexp_split_to_array(lower(text), '[^a-z0-9]+'), x -> x != '')"
 )
 
-#: session-scoped codebook cache for q_ivf_topk: (sf_dir, k, iters) → centroids
-_IVF_FIT_CACHE: dict[tuple, list] = {}
-
 import os as _os
+
+
+# Shared fits. Each is deterministic per (sf_dir, parameters) — hash-seeded
+# init, fixed iteration counts, immutable test parquet — so every query
+# that uses one reads the same ``once`` slot: fitted once per process, not
+# at every plan-build.
+def _ivf_cents(emb, sf_dir):
+    from ..operators.ivf import fit_ivf_centroids
+
+    return once(
+        "ivf_cents", (sf_dir, 8, 2), lambda: fit_ivf_centroids(emb, k=8, iters=2)
+    )
+
+
+def _pq_books(emb, sf_dir):
+    from ..operators.pq import fit_pq_codebooks
+
+    return once(
+        "pq_books", (sf_dir, 16, 16, 3),
+        lambda: fit_pq_codebooks(emb, m=16, ncodes=16, iters=3),
+    )
+
+
+def _opq_fit(emb, sf_dir):
+    from ..operators.opq import fit_opq
+
+    return once(
+        "opq_fit", (sf_dir, 16, 16, 3, 6),
+        lambda: fit_opq(emb, m=16, ncodes=16, iters=3, opq_iters=6),
+    )
+
+
+def _base_cents(emb, sf_dir):
+    """IVF centroids fit on the 90% base split (vec_id % 10 != 9) that the
+    drift and residual indexes are built over."""
+    from ..operators.ivf import fit_ivf_centroids
+
+    return once(
+        "base_cents", (sf_dir, 8, 2),
+        lambda: fit_ivf_centroids(
+            emb.filter(F.col("vec_id") % 10 != 9), k=8, iters=2
+        ),
+    )
+
+
+def _sq_bounds(emb, sf_dir):
+    from ..operators.sq import fit_sq_bounds
+
+    return once("sq_bounds", sf_dir, lambda: fit_sq_bounds(emb))
+
 
 #: at-rest location for q_pq_topk's persisted index (codes parquet +
 #: codebook JSON): the DuckDB oracle replays the ADC scan + rerank over the
 #: SAME artifacts, so the path must be knowable at module-import time (the
 #: sql string is static). Rooted at the PER-PROCESS ORACLE_ARTIFACTS dir
 #: (registry.py, r14 ADVICE) so concurrent runs never overwrite each
-#: other; the query rebuilds the artifacts whenever a different sf_dir
-#: was last materialized here.
+#: other. Every at-rest root here is written through ``once(root, sf_dir,
+#: build)``, so it is rebuilt whenever a different sf_dir was last
+#: materialized there.
 _PQ_ORACLE_ROOT = _os.path.join(_ORACLE_ARTIFACTS, "pq_oracle_index")
 
 
@@ -1133,15 +1181,9 @@ def q_ivf_topk(spark, sf_dir):
     # default (nprobe_for_recall: measured worst-case recall@5 >= 0.75 —
     # 4 of these 8 cells); the old fixed nprobe=3 measured 0.47 on the
     # near-uniform synthetic embeddings (ANN_RECALL.json, r8 verdict #6).
-    # The fit is deterministic per (sf_dir, k, iters) — hash-seeded init,
-    # fixed iteration count, immutable test parquet — so memoize it: the
-    # codebook is fitted once per session, not at every plan-build.
-    key = (sf_dir, 8, 2)
-    centroids = _IVF_FIT_CACHE.get(key)
-    if centroids is None:
-        centroids = I.fit_ivf_centroids(emb, k=8, iters=2)
-        _IVF_FIT_CACHE[key] = centroids
-    if _IVF_FIT_CACHE.get("ivf_oracle_sf") != sf_dir:
+    centroids = _ivf_cents(emb, sf_dir)
+
+    def _write():
         I.assign_cells(
             I.well_formed_vectors(emb, "embedding"), centroids, nprobe=1
         ).write.mode("overwrite").parquet(f"{_IVF_ORACLE_ROOT}/cells")
@@ -1152,7 +1194,8 @@ def q_ivf_topk(spark, sf_dir):
             spark, emb.filter(F.col("vec_id") < 5), centroids,
             I.nprobe_for_recall(len(centroids)), _IVF_ORACLE_ROOT,
         )
-        _IVF_FIT_CACHE["ivf_oracle_sf"] = sf_dir
+
+    once(_IVF_ORACLE_ROOT, sf_dir, _write)
     cells = spark.read.parquet(f"{_IVF_ORACLE_ROOT}/cells")
     return I.ivf_topk(
         emb, emb.filter(F.col("vec_id") < 5), centroids, k=5,
@@ -1233,22 +1276,11 @@ def q_pq_topk(spark, sf_dir):
     from ..operators import pq as Q
 
     emb = _t(spark, sf_dir, "embeddings")
-    # same memoization contract as q_ivf_topk: the codebook fit is
-    # deterministic per (sf_dir, m, ncodes, iters) on the immutable test
-    # parquet, so fit once per session instead of at every plan-build.
-    key = (sf_dir, "pq", 16, 16, 3)
-    books = _IVF_FIT_CACHE.get(key)
-    if books is None:
-        books = Q.fit_pq_codebooks(emb, m=16, ncodes=16, iters=3)
-        _IVF_FIT_CACHE[key] = books
-    # materialize the at-rest form the oracle reads; rebuilt when a
-    # different sf was last written here (encode is deterministic, so
-    # same-session re-invocations skip straight to the read)
-    if _IVF_FIT_CACHE.get("pq_oracle_sf") != sf_dir:
-        Q.write_pq_index(
-            Q.pq_encode(emb, books), books, _PQ_ORACLE_ROOT, mode="overwrite"
-        )
-        _IVF_FIT_CACHE["pq_oracle_sf"] = sf_dir
+    books = _pq_books(emb, sf_dir)
+    # materialize the at-rest form the oracle reads
+    once(_PQ_ORACLE_ROOT, sf_dir, lambda: Q.write_pq_index(
+        Q.pq_encode(emb, books), books, _PQ_ORACLE_ROOT, mode="overwrite"
+    ))
     codes, books2 = Q.read_pq_index(spark, _PQ_ORACLE_ROOT)
     return Q.pq_topk(
         codes, emb.filter(F.col("vec_id") < 5), books2, k=5, rerank=100, corpus=emb
@@ -1357,12 +1389,7 @@ def q_opq_maintained(spark, sf_dir):
 
     emb = _t(spark, sf_dir, "embeddings")
     root = _OPQ_MAINT_ORACLE_ROOT
-    key = (sf_dir, "opq", 16, 16)
-    fit = _IVF_FIT_CACHE.get(key)
-    if fit is None:
-        fit = O.fit_opq(emb, m=16, ncodes=16, iters=3, opq_iters=6)
-        _IVF_FIT_CACHE[key] = fit
-    rot, books = fit
+    rot, books = _opq_fit(emb, sf_dir)
 
     def _rot_emb():
         # built lazily: the d²-literal Column tree costs seconds of py4j
@@ -1372,12 +1399,12 @@ def q_opq_maintained(spark, sf_dir):
             "vec_id", F.col("rotated").alias("embedding")
         )
 
-    ckey = (sf_dir, "opq_maint_cents", 8, 2)
-    cents = _IVF_FIT_CACHE.get(ckey)
-    if cents is None:
-        cents = fit_ivf_centroids(_rot_emb(), k=8, iters=2)
-        _IVF_FIT_CACHE[ckey] = cents
-    if _IVF_FIT_CACHE.get("opq_maint_oracle_sf") != sf_dir:
+    cents = once(
+        "opq_maint_cents", (sf_dir, 8, 2),
+        lambda: fit_ivf_centroids(_rot_emb(), k=8, iters=2),
+    )
+
+    def _write():
         base = _rot_emb().filter(F.col("vec_id") % 10 != 9)
         codes = (
             Q.pq_encode(base, books)
@@ -1399,7 +1426,8 @@ def q_opq_maintained(spark, sf_dir):
             [(r[0], int(c)) for r, prow in zip(rows, probes) for c in prow],
             "query_id bigint, cell int",
         ).coalesce(1).write.mode("overwrite").parquet(f"{root}/probes")
-        _IVF_FIT_CACHE["opq_maint_oracle_sf"] = sf_dir
+
+    once(root, sf_dir, _write)
     # the steady maintenance op: append the RAW 10% delta (the index
     # rotates it internally) — idempotent, so re-invocation converges
     Q.append_pq_index(
@@ -1497,13 +1525,9 @@ def q_opq_topk(spark, sf_dir):
     from ..util import single_partition_df
 
     emb = _t(spark, sf_dir, "embeddings")
-    key = (sf_dir, "opq", 16, 16)
-    fit = _IVF_FIT_CACHE.get(key)
-    if fit is None:
-        fit = O.fit_opq(emb, m=16, ncodes=16, iters=3, opq_iters=6)
-        _IVF_FIT_CACHE[key] = fit
-    rot, books = fit
-    if _IVF_FIT_CACHE.get("opq_oracle_sf") != sf_dir:
+    rot, books = _opq_fit(emb, sf_dir)
+
+    def _write():
         enc = Q.pq_encode(
             O.rotate_vectors(emb, rot).select(
                 "vec_id", F.col("rotated").alias("embedding")
@@ -1514,7 +1538,8 @@ def q_opq_topk(spark, sf_dir):
         single_partition_df(
             spark, [(rot,)], "rotation array<array<double>>"
         ).write.mode("overwrite").json(f"{_OPQ_ORACLE_ROOT}/rotation")
-        _IVF_FIT_CACHE["opq_oracle_sf"] = sf_dir
+
+    once(_OPQ_ORACLE_ROOT, sf_dir, _write)
     codes, books2 = Q.read_pq_index(spark, _OPQ_ORACLE_ROOT)
     return O.opq_topk(
         codes, emb.filter(F.col("vec_id") < 5), rot, books2,
@@ -1594,29 +1619,23 @@ def q_pq_append(spark, sf_dir):
     from ..operators import pq as Q
 
     emb = _t(spark, sf_dir, "embeddings")
-    key = (sf_dir, "pq", 16, 16, 3)
-    books = _IVF_FIT_CACHE.get(key)
-    if books is None:
-        books = Q.fit_pq_codebooks(emb, m=16, ncodes=16, iters=3)
-        _IVF_FIT_CACHE[key] = books
+    books = _pq_books(emb, sf_dir)
     root = _PQ_APPEND_ORACLE_ROOT
     # 90/10 split: the appended batch is a realistic daily delta (10% of
     # the corpus), so the steady cost is delta-encode + touched-partition
     # upsert + search — not a half-corpus re-encode.
     half = emb.filter(F.col("vec_id") % 10 != 9)
     rest = emb.filter(F.col("vec_id") % 10 == 9)
-    # bootstrap the base index once per session (the q_bucketed_join
-    # reuse_existing precedent), at the FIXED oracle path — rebuilt when a
-    # different sf was last materialized there: repeated invocations then
-    # measure the STEADY maintenance cost — append + search — not index
-    # creation. Re-appending the same batch is the idempotence property
-    # (test_streaming_ann.py), so the result is invocation-independent.
-    if _IVF_FIT_CACHE.get("pq_append_oracle_sf") != sf_dir:
-        base = Q.pq_encode(half, books).withColumn("ingest_day", F.lit("d0"))
-        Q.write_pq_index(
-            base, books, root, mode="overwrite", partition_col="ingest_day"
-        )
-        _IVF_FIT_CACHE["pq_append_oracle_sf"] = sf_dir
+    # bootstrap the base index once per sf_dir (the q_bucketed_join
+    # reuse_existing precedent), at the FIXED oracle path: repeated
+    # invocations then measure the STEADY maintenance cost — append +
+    # search — not index creation. Re-appending the same batch is the
+    # idempotence property (test_streaming_ann.py), so the result is
+    # invocation-independent.
+    once(root, sf_dir, lambda: Q.write_pq_index(
+        Q.pq_encode(half, books).withColumn("ingest_day", F.lit("d0")),
+        books, root, mode="overwrite", partition_col="ingest_day",
+    ))
     Q.append_pq_index(spark, root, rest.withColumn("ingest_day", F.lit("d1")))
     codes, books2 = Q.read_pq_index(spark, root)
     return Q.pq_topk(
@@ -1685,20 +1704,12 @@ _IVFPQ_DRIFT_ORACLE_ROOT = _os.path.join(_ORACLE_ARTIFACTS, "ivfpq_drift_oracle_
 )
 def q_ivf_pq_drift(spark, sf_dir):
     from ..operators import pq as Q
-    from ..operators.ivf import assign_cells, fit_ivf_centroids
+    from ..operators.ivf import assign_cells
 
     emb = _t(spark, sf_dir, "embeddings")
     root = _IVFPQ_DRIFT_ORACLE_ROOT
-    key = (sf_dir, "pq", 16, 16, 3)
-    books = _IVF_FIT_CACHE.get(key)
-    if books is None:
-        books = Q.fit_pq_codebooks(emb, m=16, ncodes=16, iters=3)
-        _IVF_FIT_CACHE[key] = books
-    ckey = (sf_dir, "ivfpq_drift_cents", 8, 2)
-    cents = _IVF_FIT_CACHE.get(ckey)
-    if cents is None:
-        cents = fit_ivf_centroids(emb.filter(F.col("vec_id") % 10 != 9), k=8, iters=2)
-        _IVF_FIT_CACHE[ckey] = cents
+    books = _pq_books(emb, sf_dir)
+    cents = _base_cents(emb, sf_dir)
     base = emb.filter(F.col("vec_id") % 10 != 9)
     drifted = (
         emb.filter(F.col("vec_id") % 10 == 9)
@@ -1713,7 +1724,7 @@ def q_ivf_pq_drift(spark, sf_dir):
     )
     # bootstrap index + planted-drift append once per sf (q_pq_append
     # precedent): the steady, invocation-independent cost is the MONITOR
-    if _IVF_FIT_CACHE.get("ivfpq_drift_oracle_sf") != sf_dir:
+    def _write():
         codes = (
             Q.pq_encode(base, books)
             .join(assign_cells(base, cents).select("vec_id", "cell"), "vec_id")
@@ -1726,7 +1737,8 @@ def q_ivf_pq_drift(spark, sf_dir):
         Q.append_pq_index(
             spark, root, drifted.withColumn("ingest_day", F.lit("d1"))
         )
-        _IVF_FIT_CACHE["ivfpq_drift_oracle_sf"] = sf_dir
+
+    once(root, sf_dir, _write)
     cur = (
         spark.read.parquet(f"{root}/codes")
         .groupBy("cell")
@@ -1845,32 +1857,27 @@ def q_ivf_pq_drift(spark, sf_dir):
 )
 def q_ivf_pq_residual(spark, sf_dir):
     from ..operators import pq as Q
-    from ..operators.ivf import fit_ivf_centroids
+    from ..operators.ivf import nprobe_for_recall
 
     emb = _t(spark, sf_dir, "embeddings")
-    ckey = (sf_dir, "ivfpq_drift_cents", 8, 2)  # share the drift query's fit
-    cents = _IVF_FIT_CACHE.get(ckey)
-    if cents is None:
-        cents = fit_ivf_centroids(emb.filter(F.col("vec_id") % 10 != 9), k=8, iters=2)
-        _IVF_FIT_CACHE[ckey] = cents
-    rkey = (sf_dir, "res_books", 16, 16, 3)
-    res_books = _IVF_FIT_CACHE.get(rkey)
-    if res_books is None:
-        res_books = Q.fit_residual_codebooks(emb, cents, m=16, ncodes=16, iters=3)
-        _IVF_FIT_CACHE[rkey] = res_books
-    if _IVF_FIT_CACHE.get("ivfpq_oracle_sf") != sf_dir:
+    cents = _base_cents(emb, sf_dir)  # share the drift query's fit
+    res_books = once(
+        "res_books", (sf_dir, 16, 16, 3),
+        lambda: Q.fit_residual_codebooks(emb, cents, m=16, ncodes=16, iters=3),
+    )
+
+    def _write():
         enc = Q.ivf_pq_encode_residual(emb, res_books, cents)
         Q.write_pq_index(
             enc, res_books, _IVFPQ_ORACLE_ROOT, mode="overwrite",
             centroids=cents, residual=True,
         )
-        from ..operators.ivf import nprobe_for_recall
-
         _write_probes_artifact(
             spark, emb.filter(F.col("vec_id") < 5), cents,
             nprobe_for_recall(len(cents)), _IVFPQ_ORACLE_ROOT,
         )
-        _IVF_FIT_CACHE["ivfpq_oracle_sf"] = sf_dir
+
+    once(_IVFPQ_ORACLE_ROOT, sf_dir, _write)
     return Q.ivf_pq_search_index(
         spark, _IVFPQ_ORACLE_ROOT, emb.filter(F.col("vec_id") < 5),
         corpus=emb, k=5, rerank=100,
@@ -1916,11 +1923,7 @@ def q_sq_encode(spark, sf_dir):
     from ..operators import sq as SQ
 
     emb = _t(spark, sf_dir, "embeddings")
-    key = (sf_dir, "sq")
-    bounds = _IVF_FIT_CACHE.get(key)
-    if bounds is None:
-        bounds = SQ.fit_sq_bounds(emb)
-        _IVF_FIT_CACHE[key] = bounds
+    bounds = _sq_bounds(emb, sf_dir)
     enc = SQ.sq_encode(emb, *bounds)
     return enc.select(
         "vec_id", F.posexplode("codes").alias("pos", "code")
@@ -1969,11 +1972,7 @@ def q_sq_topk(spark, sf_dir):
     from ..operators import sq as SQ
 
     emb = _t(spark, sf_dir, "embeddings")
-    key = (sf_dir, "sq")
-    bounds = _IVF_FIT_CACHE.get(key)
-    if bounds is None:
-        bounds = SQ.fit_sq_bounds(emb)
-        _IVF_FIT_CACHE[key] = bounds
+    bounds = _sq_bounds(emb, sf_dir)
     enc = SQ.sq_encode(emb, *bounds)
     return SQ.sq_topk(enc, emb.filter(F.col("vec_id") < 5), *bounds, k=5)
 
@@ -2055,17 +2054,10 @@ def q_ivf_pq_topk(spark, sf_dir):
     from ..operators import pq as Q
 
     emb = _t(spark, sf_dir, "embeddings")
-    ckey = (sf_dir, 8, 2)
-    centroids = _IVF_FIT_CACHE.get(ckey)
-    if centroids is None:
-        centroids = I.fit_ivf_centroids(emb, k=8, iters=2)
-        _IVF_FIT_CACHE[ckey] = centroids
-    bkey = (sf_dir, "pq", 16, 16, 3)
-    books = _IVF_FIT_CACHE.get(bkey)
-    if books is None:
-        books = Q.fit_pq_codebooks(emb, m=16, ncodes=16, iters=3)
-        _IVF_FIT_CACHE[bkey] = books
-    if _IVF_FIT_CACHE.get("ivfpq_raw_oracle_sf") != sf_dir:
+    centroids = _ivf_cents(emb, sf_dir)
+    books = _pq_books(emb, sf_dir)
+
+    def _write():
         wf = I.well_formed_vectors(emb, "embedding")
         codes = Q.pq_encode(emb, books).join(
             I.assign_cells(wf, centroids, nprobe=1).select("vec_id", "cell"),
@@ -2079,7 +2071,8 @@ def q_ivf_pq_topk(spark, sf_dir):
             spark, emb.filter(F.col("vec_id") < 5), centroids, 4,
             _IVFPQ_RAW_ORACLE_ROOT,
         )
-        _IVF_FIT_CACHE["ivfpq_raw_oracle_sf"] = sf_dir
+
+    once(_IVFPQ_RAW_ORACLE_ROOT, sf_dir, _write)
     return Q.ivf_pq_search_index(
         spark, _IVFPQ_RAW_ORACLE_ROOT, emb.filter(F.col("vec_id") < 5),
         corpus=emb, k=5, nprobe=4, rerank=100,
@@ -2701,6 +2694,24 @@ _SQL_INDEP_SIG = ", ".join(
 )
 
 
+#: at-rest MinHash signature index over the reference snapshot, shared by
+#: q_minhash_index and q_dedup_minhash_index
+_MINHASH_INDEX_ROOT = _os.path.join(_ORACLE_ARTIFACTS, "minhash_index")
+
+
+def _minhash_new_batch(spark, sf_dir):
+    """The new batch (doc_id < 150), after indexing the reference snapshot
+    (doc_id 150-299) at ``_MINHASH_INDEX_ROOT`` once per sf_dir — repeated
+    invocations measure matching against the index, not its build."""
+    d = _t(spark, sf_dir, "documents")
+    ref = d.filter((F.col("doc_id") >= 150) & (F.col("doc_id") < 300))
+    once(_MINHASH_INDEX_ROOT, sf_dir, lambda: D.write_minhash_index(
+        ref, _MINHASH_INDEX_ROOT, "doc_id", "text", hash_family="md5",
+        mode="overwrite",
+    ))
+    return d.filter(F.col("doc_id") < 150)
+
+
 @register(
     "q_minhash_index",
     sql=f"""
@@ -2735,31 +2746,16 @@ _SQL_INDEP_SIG = ", ".join(
         "(agreeing-minhash fraction, the standard k-sample estimator); "
         "the oracle replays signatures on both sides, the bucket join, "
         "and the agreement count — the full pipeline, hash-checked. "
-        "Index bootstrap is session-memoized (q_pq_append precedent); "
+        "Index bootstrap runs once per sf_dir (q_pq_append precedent); "
         "incremental append==one-shot-build parity is pinned in "
         "tests/test_minhash_index.py."
     ),
 )
 def q_minhash_index(spark, sf_dir):
-    import os
-    import re
-
-    d = _t(spark, sf_dir, "documents")
-    new = d.filter(F.col("doc_id") < 150)
-    ref = d.filter((F.col("doc_id") >= 150) & (F.col("doc_id") < 300))
-    tag = re.sub(r"[^0-9a-zA-Z]+", "_", sf_dir.rstrip("/").rsplit("/", 1)[-1])
-    root = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))),
-        "spark-warehouse",
-        f"minhash_index_{tag}",
+    return D.minhash_match_index(
+        spark, _MINHASH_INDEX_ROOT, _minhash_new_batch(spark, sf_dir),
+        "doc_id", "text", threshold=0.6,
     )
-    boot_key = (sf_dir, "minhash_index_built")
-    if boot_key not in _IVF_FIT_CACHE:
-        D.write_minhash_index(
-            ref, root, "doc_id", "text", hash_family="md5", mode="overwrite"
-        )
-        _IVF_FIT_CACHE[boot_key] = True
-    return D.minhash_match_index(spark, root, new, "doc_id", "text", threshold=0.6)
 
 
 @register(
@@ -2799,31 +2795,14 @@ def q_minhash_index(spark, sf_dir):
         "stored or re-read). md5 family, so the oracle replays the ENTIRE "
         "decision — both signature sides, the bucket join, the agreement "
         "estimate, and the NOT IN — making the keep-set hash-checked, not "
-        "just row-counted. Shares q_minhash_index's session-memoized "
-        "index bootstrap (same root, same memo key)."
+        "just row-counted. Shares q_minhash_index's once-per-sf_dir "
+        "index bootstrap (same root)."
     ),
 )
 def q_dedup_minhash_index(spark, sf_dir):
-    import os
-    import re
-
-    d = _t(spark, sf_dir, "documents")
-    new = d.filter(F.col("doc_id") < 150)
-    ref = d.filter((F.col("doc_id") >= 150) & (F.col("doc_id") < 300))
-    tag = re.sub(r"[^0-9a-zA-Z]+", "_", sf_dir.rstrip("/").rsplit("/", 1)[-1])
-    root = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))),
-        "spark-warehouse",
-        f"minhash_index_{tag}",
-    )
-    boot_key = (sf_dir, "minhash_index_built")
-    if boot_key not in _IVF_FIT_CACHE:
-        D.write_minhash_index(
-            ref, root, "doc_id", "text", hash_family="md5", mode="overwrite"
-        )
-        _IVF_FIT_CACHE[boot_key] = True
     kept = D.dedup_against_minhash_index(
-        spark, root, new, "doc_id", "text", threshold=0.6
+        spark, _MINHASH_INDEX_ROOT, _minhash_new_batch(spark, sf_dir),
+        "doc_id", "text", threshold=0.6,
     )
     return kept.select("doc_id", "source", "n_chars")
 
@@ -3358,7 +3337,8 @@ def q_model_fit_score(spark, sf_dir):
     from ..util import single_partition_df
 
     d = _t(spark, sf_dir, "documents").filter(F.col("doc_id") < 400)
-    if _IVF_FIT_CACHE.get("model_oracle_sf") != sf_dir:
+
+    def _write():
         labeled = d.withColumn(
             "label", F.when(F.col("lang") == "en", F.lit(1)).otherwise(F.lit(-1))
         )
@@ -3369,7 +3349,8 @@ def q_model_fit_score(spark, sf_dir):
         single_partition_df(
             spark, [(i, int(wi)) for i, wi in enumerate(w)], "i long, w long"
         ).write.mode("overwrite").json(_MODEL_ORACLE_ROOT)
-        _IVF_FIT_CACHE["model_oracle_sf"] = sf_dir
+
+    once(_MODEL_ORACLE_ROOT, sf_dir, _write)
     # score over exactly what the oracle reads (at-rest weights), even
     # when the in-process fit is warm
     at_rest = sorted(
@@ -3652,11 +3633,9 @@ def q_compression_ratio(spark, sf_dir):
             F.concat_ws(" ", F.array_repeat(F.lit("spam spam spam"), 40)),
         ).otherwise(F.col("text")).alias("text"),
     )
-    if _IVF_FIT_CACHE.get("zlib_oracle_sf") != sf_dir:
-        docs.select(
-            "doc_id", compressed_size("text").alias("zlen")
-        ).write.mode("overwrite").parquet(_ZLIB_ORACLE_ROOT)
-        _IVF_FIT_CACHE["zlib_oracle_sf"] = sf_dir
+    once(_ZLIB_ORACLE_ROOT, sf_dir, lambda: docs.select(
+        "doc_id", compressed_size("text").alias("zlen")
+    ).write.mode("overwrite").parquet(_ZLIB_ORACLE_ROOT))
     z = spark.read.parquet(_ZLIB_ORACLE_ROOT)
     return docs.join(z, "doc_id").select(
         "doc_id",
@@ -4282,14 +4261,16 @@ def q_bpe_train(spark, sf_dir):
     from ..util import single_partition_df
 
     d = _t(spark, sf_dir, "documents")
-    if _IVF_FIT_CACHE.get("bpe_oracle_sf") != sf_dir:
+
+    def _write():
         merges = train_bpe(d.filter(F.col("doc_id") < 200), "text", num_merges=6)
         single_partition_df(
             spark,
             [(i, a, b, c) for i, (a, b, c) in enumerate(merges)],
             "merge_idx long, left string, right string, pair_count long",
         ).write.mode("overwrite").json(_BPE_ORACLE_ROOT)
-        _IVF_FIT_CACHE["bpe_oracle_sf"] = sf_dir
+
+    once(_BPE_ORACLE_ROOT, sf_dir, _write)
     # read the merges BACK from the artifact — the encode must run over
     # exactly what the oracle reads, even when the in-process fit is warm
     at_rest = sorted(

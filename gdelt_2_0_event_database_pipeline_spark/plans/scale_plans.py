@@ -4,14 +4,14 @@ entries so the driver exercises them (SURVEY.md §4 scale paths + §2.10 X6).
 
 from __future__ import annotations
 
+import hashlib
 import os
-import re
 
 from pyspark.sql import functions as F
 
 from ..operators.multimodal import media_stats
 from ..operators.skew import explain_shuffles, salted_group_agg, write_bucketed
-from .registry import ORACLE_ARTIFACTS, register
+from .registry import ORACLE_ARTIFACTS, once, register
 from .relational import _events, _li, _t
 
 #: Persisted-signature oracle roots (r14): the multimodal near-dup family
@@ -20,9 +20,9 @@ from .relational import _events, _li, _t
 #: DuckDB replays the banded Hamming join (pigeonhole chunks via exact
 #: HUGEINT div/mod on the unsigned reinterpretation, bit_count(xor)
 #: verification) over the SAME artifact. Decode→signature stays pytest
-#: (planted-pair exactness in test_multimodal.py).
+#: (planted-pair exactness in test_multimodal.py). The corpora are seeded,
+#: not read from sf_dir, so each root is written once per process (key None).
 _SIG_ORACLE_ROOT = ORACLE_ARTIFACTS
-_SIG_CACHE: dict[str, bool] = {}
 
 
 def _banded_hamming_sql(
@@ -126,16 +126,15 @@ def q_salted_agg(spark, sf_dir):
     ),
 )
 def q_bucketed_join(spark, sf_dir):
-    import os
-
     # pid-keyed MANAGED tables (r13): two concurrent processes running this
     # query used to collide on a shared external path under the repo's
-    # spark-warehouse (drop/recreate race — the r12 judge hit it). A
+    # warehouse dir (drop/recreate race — the r12 judge hit it). A
     # pid-suffixed name in the session warehouse (get_spark sessions put it
     # in a per-process tmpdir; a driver session's default is its own cwd)
     # makes cross-process collision impossible while keeping the in-process
-    # reuse_existing memoization intact.
-    tag = re.sub(r"[^0-9a-zA-Z]+", "_", sf_dir.rstrip("/").rsplit("/", 1)[-1])
+    # reuse_existing memoization intact. The tag hashes the whole sf_dir, not
+    # its basename: reuse is only sound for a table built from this input.
+    tag = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
     pid = os.getpid()
     t_orders = f"bkt_orders_{tag}_{pid}"
     t_customer = f"bkt_customer_{tag}_{pid}"
@@ -468,7 +467,8 @@ def q_media_near_dup(spark, sf_dir):
     )
 
     root = f"{_SIG_ORACLE_ROOT}/media_sig_oracle"
-    if not _SIG_CACHE.get("media"):
+
+    def _write():
         rng = random.Random(42)
         w, h = 24, 16
         rows = []
@@ -484,7 +484,8 @@ def q_media_near_dup(spark, sf_dir):
             rows.append((100 + j, bytearray(encode_png(w, h, rgb))))
         df = spark.createDataFrame(rows, "media_id long, payload binary")
         media_dhash(df).write.mode("overwrite").parquet(root)
-        _SIG_CACHE["media"] = True
+
+    once(root, None, _write)
     sig = spark.read.parquet(root)
     return hamming_near_dup_pairs(sig, "media_id", "dhash", max_hamming=6)
 
@@ -526,7 +527,8 @@ def q_audio_near_dup(spark, sf_dir):
         return b"RIFF" + st.pack("<I", len(body)) + body
 
     root = f"{_SIG_ORACLE_ROOT}/audio_sig_oracle"
-    if not _SIG_CACHE.get("audio"):
+
+    def _write():
         rows = []
         tones = []
         for k in range(10):
@@ -540,7 +542,8 @@ def q_audio_near_dup(spark, sf_dir):
             rows.append((100 + j, bytearray(wav([s // 3 for s in tones[j]]))))
         df = spark.createDataFrame(rows, "media_id long, payload binary")
         media_audio_fingerprint(df).write.mode("overwrite").parquet(root)
-        _SIG_CACHE["audio"] = True
+
+    once(root, None, _write)
     sig = spark.read.parquet(root)
     return hamming_near_dup_pairs(sig, "media_id", "afp", max_hamming=4)
 
@@ -571,13 +574,15 @@ def q_video_near_dup(spark, sf_dir):
     )
 
     root = f"{_SIG_ORACLE_ROOT}/video_sig_oracle"
-    if not _SIG_CACHE.get("video"):
+
+    def _write():
         frames = video_frame_dhashes(make_video_df(spark, n=24), every_k=1)
         uid = (F.col("media_id") * F.lit(1 << 20) + F.col("frame_idx")).alias(
             "frame_uid"
         )
         frames.select(uid, "fhash").write.mode("overwrite").parquet(root)
-        _SIG_CACHE["video"] = True
+
+    once(root, None, _write)
     sig = spark.read.parquet(root)
     return video_pairs_from_frame_sigs(sig, max_hamming=4, min_matched_frames=2)
 
@@ -986,17 +991,11 @@ def q_random_projection(spark, sf_dir):
     ),
 )
 def q_moments_maintained(spark, sf_dir):
-    import os
     import shutil
 
     from ..streaming.moments import merge_moments_batch, read_moments_state
 
-    tag = re.sub(r"[^0-9a-zA-Z]+", "_", sf_dir.rstrip("/").rsplit("/", 1)[-1])
-    root = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))),
-        "spark-warehouse",
-        f"moments_{tag}",
-    )
+    root = os.path.join(ORACLE_ARTIFACTS, "moments_maintained")
     # deterministic rebuild per invocation: the query's contract is the
     # VALUE of the maintained state, not cross-session reuse
     shutil.rmtree(root, ignore_errors=True)

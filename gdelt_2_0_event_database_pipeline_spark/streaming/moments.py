@@ -40,9 +40,9 @@ from ..operators.pca import MAX_FIT_DIM, PCAModel, embedding_moments, model_from
 from .rollup import (
     _already_applied,
     _append_ledger_atomic,
-    _applied_batch_ids,
     _fs,
     _pending_path,
+    _recover_pending,
     _try_read_parquet,
 )
 
@@ -69,33 +69,10 @@ def _publish_pending_whole(
         fs.delete(root, True)
 
 
-def _recover_pending_whole(spark: SparkSession, state_path: str) -> None:
-    """Rollup's recovery loop with the whole-grain publish: finish every
-    COMMITTED pending batch, drop every uncommitted staging, clear a
-    stale ledger temp dir. Runs at the head of every batch; one listing
-    when there is nothing to repair."""
-    jvm, fs, root = _fs(spark, _pending_path(state_path))
-    if fs.exists(root):
-        applied = _applied_batch_ids(spark, state_path)
-        for status in fs.listStatus(root):
-            name = status.getPath().getName()
-            try:
-                bid = int(name)
-            except ValueError:
-                continue
-            if bid in applied:
-                _publish_pending_whole(spark, state_path, bid)
-            else:
-                fs.delete(status.getPath(), True)
-    tmp = jvm.org.apache.hadoop.fs.Path(f"{state_path}/_applied_batches_tmp")
-    if fs.exists(tmp):
-        fs.delete(tmp, True)
-
-
 def recover_moments_state(spark: SparkSession, state_path: str) -> None:
     """Bring the state current after a crash without waiting for the
     next micro-batch. Safe whenever the maintainer is not running."""
-    _recover_pending_whole(spark, state_path)
+    _recover_pending(spark, state_path, _publish_pending_whole)
 
 
 def merge_moments_batch(
@@ -116,7 +93,7 @@ def merge_moments_batch(
     comes from a streaming source (foreachBatch hands out one-shot
     frames); batch-mode callers replaying history from a plain table can
     pass False and skip that materialization job."""
-    _recover_pending_whole(spark, state_path)
+    _recover_pending(spark, state_path, _publish_pending_whole)
     if _already_applied(spark, state_path, batch_id):
         return False
     if sever:

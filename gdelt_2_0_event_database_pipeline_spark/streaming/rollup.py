@@ -42,7 +42,7 @@ plain-parquet writer in this repo (``lake.compact_parquet`` caveats).
 
 from __future__ import annotations
 
-from typing import Sequence
+from typing import Callable, Sequence
 
 from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
@@ -194,13 +194,19 @@ def _publish_pending(spark: SparkSession, state_path: str, batch_id: int) -> Non
         fs.delete(root, True)  # keep the state dir tidy between batches
 
 
-def _recover_pending(spark: SparkSession, state_path: str) -> None:
+def _recover_pending(
+    spark: SparkSession,
+    state_path: str,
+    publish: Callable[[SparkSession, str, int], None],
+) -> None:
     """Repair any crash window before proceeding: finish the publish of
-    every COMMITTED pending batch (ledger entry present), drop every
-    UNCOMMITTED staging (no entry — the replay will re-stage it against
-    the unchanged state), and clear a stale ledger temp dir. Runs at the
-    head of every batch and via :func:`recover_rollup_state`; cost is
-    one listing when there is nothing to repair."""
+    every COMMITTED pending batch (ledger entry present) with
+    ``publish``, drop every UNCOMMITTED staging (no entry — the replay
+    will re-stage it against the unchanged state), and clear a stale
+    ledger temp dir. Runs at the head of every batch and via the
+    ``recover_*_state`` functions; cost is one listing when there is
+    nothing to repair. Callers pass their module's publish function at
+    call time, so a patched one is the one that runs."""
     jvm, fs, root = _fs(spark, _pending_path(state_path))
     if fs.exists(root):
         applied = _applied_batch_ids(spark, state_path)
@@ -211,7 +217,7 @@ def _recover_pending(spark: SparkSession, state_path: str) -> None:
             except ValueError:
                 continue
             if bid in applied:
-                _publish_pending(spark, state_path, bid)
+                publish(spark, state_path, bid)
             else:
                 fs.delete(status.getPath(), True)
     tmp = jvm.org.apache.hadoop.fs.Path(f"{state_path}/_applied_batches_tmp")
@@ -224,7 +230,7 @@ def recover_rollup_state(spark: SparkSession, state_path: str) -> None:
     the next micro-batch: publishes committed-but-unpublished batches
     and discards aborted stagings. Safe to call any time the maintainer
     is not running."""
-    _recover_pending(spark, state_path)
+    _recover_pending(spark, state_path, _publish_pending)
 
 
 def merge_rollup_batch(
@@ -241,7 +247,7 @@ def merge_rollup_batch(
     when ``batch_id`` was already applied (replay: finishes any pending
     publish, never re-merges). State lives under ``state_path/state``
     partitioned by ``day_col``."""
-    _recover_pending(spark, state_path)
+    _recover_pending(spark, state_path, _publish_pending)
     if _already_applied(spark, state_path, batch_id):
         return False
     batch = batch.localCheckpoint(eager=True)  # sever from the stream source
