@@ -56,6 +56,18 @@ def sql_arr(vals) -> str:
     return "array(" + ", ".join(sql_arr(v) for v in vals) + ")"
 
 
+def sql_dots(vec_sql: str, rows) -> list[str]:
+    """SQL text of one dot product of the array expression ``vec_sql`` with
+    each literal row. Keep the operand order (vector element × weight,
+    summed left to right from 0.0): rotation, projection and LSH results
+    are pinned to it bit for bit."""
+    return [
+        f"aggregate(zip_with({vec_sql}, {sql_arr(row)}, (a, b) -> a * b), "
+        "0.0D, (acc, v) -> acc + v)"
+        for row in rows
+    ]
+
+
 def lit_arr(vals) -> Column:
     """A (possibly nested) double array literal as a Column, parsed from
     :func:`sql_arr` text in one ``F.expr`` call."""

@@ -26,6 +26,7 @@ from typing import Sequence
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..util import hadoop_fs
 from .text import char_ngrams, simhash64, tokens
 
 
@@ -1376,9 +1377,7 @@ def read_minhash_index_meta(spark, path: str) -> dict:
     missing/extra fields read as None."""
     import json as _json
 
-    jvm = spark.sparkContext._jvm
-    meta_dir = jvm.org.apache.hadoop.fs.Path(f"{path}/meta")
-    fs = meta_dir.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration())
+    jvm, fs, meta_dir = hadoop_fs(spark, f"{path}/meta")
     rows = []
     for status in fs.listStatus(meta_dir):
         name = status.getPath().getName()

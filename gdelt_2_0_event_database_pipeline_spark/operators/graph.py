@@ -10,13 +10,18 @@ Each power-iteration round is one join (edges × ranks on ``src``) plus one
 grouped sum on ``dst`` — both shuffles on integer keys, never on payloads.
 Dangling-node mass and the teleport term are 1-row driver aggregates
 (bounded driver work, the IVF/CC discipline), and ``localCheckpoint``
-truncates lineage each round so 10+ iterations don't stack a 10-deep plan.
+truncates lineage every :data:`CHECKPOINT_INTERVAL` rounds so 10+
+iterations don't stack a 10-deep plan.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+
+#: rounds between ``localCheckpoint``s of iterative state (and after the
+#: last): bounded lineage at half the jobs of checkpointing every round
+CHECKPOINT_INTERVAL = 2
 
 
 def pagerank(
@@ -27,7 +32,6 @@ def pagerank(
     damping: float = 0.85,
     max_iter: int = 10,
     dedup_edges: bool = True,
-    checkpoint_interval: int = 2,
 ) -> DataFrame:
     """Power-iteration PageRank over a directed edge list.
 
@@ -113,10 +117,7 @@ def pagerank(
             joined = joined.crossJoin(F.broadcast(dang))
             new_rank = new_rank + F.lit(damping) * (F.col("__dang__") / n)
         ranks = joined.select("node", new_rank.alias("rank"), "outdeg")
-        # checkpoint every k rounds: lineage stays bounded at k plan layers
-        # while halving (k=2) the materialization jobs — on huge graphs set
-        # checkpoint_interval=1 to trade jobs for minimal recompute surface
-        if (it + 1) % max(checkpoint_interval, 1) == 0 or it == max_iter - 1:
+        if (it + 1) % CHECKPOINT_INTERVAL == 0 or it == max_iter - 1:
             ranks = ranks.localCheckpoint()
     return ranks.select("node", "rank")
 
@@ -248,7 +249,6 @@ def label_propagation(
     *,
     max_iter: int = 4,
     weight_col: str | None = None,
-    checkpoint_interval: int = 2,
 ) -> DataFrame:
     """Synchronous label-propagation community detection (Raghavan 2007,
     public method; the GraphFrames ``labelPropagation`` shape — fixed
@@ -270,7 +270,7 @@ def label_propagation(
     against the (node, label) frame + one grouped sum + one per-node
     window over that node's candidate labels (bounded by its degree's
     distinct labels). Labels are ids, never payloads; ``localCheckpoint``
-    every ``checkpoint_interval`` rounds truncates the iterative lineage
+    every :data:`CHECKPOINT_INTERVAL` rounds truncates the iterative lineage
     (the pagerank discipline).
     """
     if max_iter < 1:
@@ -305,6 +305,6 @@ def label_propagation(
             .filter(F.col("__rn__") == 1)
             .select(F.col("me").alias("node"), "label")
         )
-        if (i + 1) % checkpoint_interval == 0 or i == max_iter - 1:
+        if (i + 1) % CHECKPOINT_INTERVAL == 0 or i == max_iter - 1:
             labels = labels.localCheckpoint()
     return labels

@@ -45,7 +45,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.sqltext import check_expr_col, sql_double
+from ..functions.sqltext import check_expr_col, sql_dots
 from .pq import _collect_fit_sample, _fit_pq_on_matrix
 
 
@@ -163,12 +163,7 @@ def rotate_vectors(
         raise ValueError("rotation must be square d×d")
     check_expr_col(vec_col)  # top-level-name contract (see helper)
     vec = f"CAST(`{vec_col}` AS ARRAY<DOUBLE>)"
-    dots = ", ".join(
-        f"aggregate(zip_with({vec}, array("
-        + ", ".join(sql_double(w) for w in row)
-        + "), (a, b) -> a * b), 0.0D, (acc, v) -> acc + v)"
-        for row in rotation
-    )
+    dots = ", ".join(sql_dots(vec, rotation))
     return df.withColumn(
         out_col,
         F.expr(

@@ -48,7 +48,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.sqltext import check_expr_col, lit_arr, sql_double
+from ..functions.sqltext import check_expr_col, lit_arr, sql_dots
 from .ivf import well_formed_vectors
 
 #: driver-side eigendecomposition is O(max_dim³) time / O(max_dim²) memory;
@@ -437,12 +437,7 @@ def random_projection(
         # string→DOUBLE cast, so the numbers are unchanged.
         check_expr_col(vec_col)  # top-level-name contract (see helper)
         vec = f"CAST(`{vec_col}` AS ARRAY<DOUBLE>)"
-        dots = ", ".join(
-            f"aggregate(zip_with({vec}, array("
-            + ", ".join(sql_double(x) for x in w)
-            + "), (a, b) -> a * b), 0.0D, (acc, v) -> acc + v)"
-            for w in rows
-        )
+        dots = ", ".join(sql_dots(vec, rows))
         return df.withColumn(
             out_col,
             F.expr(
@@ -519,12 +514,7 @@ def project_pca(
     # ONE F.expr string for the k aggregate folds (the rotate_vectors /
     # random_projection r15 construction fix — same tree, parsed instead
     # of built through ~3k py4j round-trips; repr round-trips each double)
-    dots = ", ".join(
-        f"aggregate(zip_with(`{tmp}`, array("
-        + ", ".join(sql_double(x) for x in w)
-        + "), (a, b) -> a * b), 0.0D, (acc, v) -> acc + v)"
-        for w in rows
-    )
+    dots = ", ".join(sql_dots(f"`{tmp}`", rows))
     return (
         df.withColumn(tmp, centered)
         .withColumn(

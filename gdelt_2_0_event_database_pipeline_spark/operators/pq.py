@@ -74,6 +74,8 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.sqltext import lit_arr
+from ..sources import lake
+from ..util import hadoop_fs
 from .ivf import well_formed_vectors
 from .similarity import _as_double, cosine
 
@@ -935,35 +937,6 @@ def write_pq_index(
         )
 
 
-def _index_fs(spark, path: str):
-    """(Hadoop FileSystem, Path) for ``path`` — the FS half of the
-    version-commit protocol (same jvm seam as streaming/rollup.py)."""
-    jvm = spark.sparkContext._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = hpath.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration())
-    return jvm, fs, hpath
-
-
-def _list_versions(spark, path: str) -> list[int]:
-    """Committed version numbers under ``path`` (``v_%05d`` dirs holding a
-    ``_COMMITTED`` marker). Uncommitted version dirs — a refit that died
-    mid-write — are invisible to readers by construction."""
-    jvm, fs, hpath = _index_fs(spark, path)
-    if not fs.exists(hpath):
-        return []
-    out = []
-    for st in fs.listStatus(hpath):
-        name = st.getPath().getName()
-        if st.isDirectory() and name.startswith("v_"):
-            try:
-                n = int(name[2:])
-            except ValueError:
-                continue
-            if fs.exists(jvm.org.apache.hadoop.fs.Path(f"{path}/{name}/_COMMITTED")):
-                out.append(n)
-    return sorted(out)
-
-
 def resolve_index_root(spark, path: str, version: int | None = None) -> str:
     """The directory whose codes/codebooks a reader should use: the
     HIGHEST committed ``v_%05d`` version under ``path``, else ``path``
@@ -977,15 +950,15 @@ def resolve_index_root(spark, path: str, version: int | None = None) -> str:
     the reproducibility handle (re-run yesterday's search against the
     pre-refit index while it is retained). Raises if that version is not
     committed/retained; retention is ``refit_pq_index(keep_versions=…)``."""
-    vs = _list_versions(spark, path)
+    vs = lake.list_versions(spark, path)
     if version is not None:
         if version not in vs:
             raise ValueError(
                 f"index version {version} not committed/retained at {path} "
                 f"(committed: {vs or 'none — legacy un-versioned layout'})"
             )
-        return f"{path}/v_{version:05d}"
-    return f"{path}/v_{vs[-1]:05d}" if vs else path
+        return lake.version_dir(path, version)
+    return lake.version_dir(path, vs[-1]) if vs else path
 
 
 def read_pq_meta(
@@ -1043,7 +1016,7 @@ _META_CACHE: dict[str, tuple[tuple, tuple]] = {}
 
 
 def _codebooks_token(spark, root: str):
-    jvm, fs, _ = _index_fs(spark, root)
+    jvm, fs, _ = hadoop_fs(spark, root)
     p = jvm.org.apache.hadoop.fs.Path(f"{root}/codebooks")
     if not fs.exists(p):
         return None
@@ -1442,13 +1415,15 @@ def refit_pq_index(
        m/ncodes) on a bounded hash-ranked sample of the CURRENT corpus.
     2. Re-encode the corpus — one deterministic map pass.
     3. Write the new (codes, codebooks, cell_stats) to a fresh sibling
-       version dir ``<path>/v_%05d`` (never touching the live files).
-    4. Commit: atomically create the version's ``_COMMITTED`` marker.
-       Readers resolve the live version per call (``resolve_index_root``),
-       so every search sees old-or-new in full — never new codebooks with
-       old codes. A crash before the marker leaves the old version live
-       and the half-written dir invisible (a later refit reuses the next
-       free number; the dead dir is cleaned by the next successful refit).
+       version dir (never touching the live files).
+    4. Commit it by its ``_COMMITTED`` marker. Steps 3–5 are the lake's
+       one versioned-directory rule (``sources.lake``: ``next_version``,
+       ``commit_version``, ``vacuum_versions``). Readers resolve the live
+       version per call (``resolve_index_root``), so every search sees
+       old-or-new in full — never new codebooks with old codes. A crash
+       before the marker leaves the old version live and the half-written
+       dir invisible (a later refit takes the next number past it; the
+       dead dir is cleaned by the next successful refit).
     5. Retention: keep the newest ``keep_versions`` committed versions
        besides the new one (default 1 — the immediately-previous version
        stays for searches that resolved before the commit), delete older
@@ -1466,6 +1441,8 @@ def refit_pq_index(
     SCALE_PROBE.json ``refit_ivf_pq``)."""
     from .ivf import assign_cells, fit_ivf_centroids
 
+    if keep_versions < 0:
+        raise ValueError(f"keep_versions must be >= 0, got {keep_versions}")
     old_root = resolve_index_root(spark, path)
     codebooks, centroids, residual, rotation = read_pq_meta(spark, old_root)
     if centroids is None:
@@ -1477,7 +1454,7 @@ def refit_pq_index(
     n_cells = len(centroids)
     if partition_col is not None and partition_col not in corpus.columns:
         raise ValueError(f"corpus must carry partition column {partition_col!r}")
-    jvm, fs, _ = _index_fs(spark, path)
+    jvm, fs, _ = hadoop_fs(spark, path)
     # layout guard: a Hive-partitioned index silently rewritten flat would
     # break append_pq_index's O(touched partitions) contract — sniff the
     # live codes dir for `col=` partition subdirs and demand a match
@@ -1537,37 +1514,18 @@ def refit_pq_index(
     if partition_col is not None:
         enc = enc.join(corpus.select(id_col, partition_col), id_col)
 
-    committed = _list_versions(spark, path)
-    new_ver = (committed[-1] + 1) if committed else 1
-    # skip past uncommitted debris (a refit that died mid-write) rather
-    # than colliding with its directory
-    while fs.exists(jvm.org.apache.hadoop.fs.Path(f"{path}/v_{new_ver:05d}")):
-        new_ver += 1
-    vdir = f"{path}/v_{new_ver:05d}"
+    committed = lake.list_versions(spark, path)
+    new_ver = lake.next_version(spark, path)
+    vdir = lake.version_dir(path, new_ver)
     write_pq_index(
         enc, new_codebooks, vdir, mode="error", partition_col=partition_col,
         centroids=new_centroids, residual=residual, rotation=rotation,
     )
     n_rows = int(spark.read.parquet(f"{vdir}/codes").count())
-
-    # THE commit point: marker creation is a single atomic FS operation
-    marker = jvm.org.apache.hadoop.fs.Path(f"{vdir}/_COMMITTED")
-    if not fs.createNewFile(marker):
-        raise IOError(f"refit commit failed: could not create {marker}")
-
-    # retention: newest keep_versions committed predecessors survive for
-    # in-flight readers; older versions and uncommitted debris go
-    survivors = set(committed[-keep_versions:] if keep_versions else [])
-    for st in fs.listStatus(jvm.org.apache.hadoop.fs.Path(path)):
-        name = st.getPath().getName()
-        if not (st.isDirectory() and name.startswith("v_")):
-            continue
-        try:
-            n = int(name[2:])
-        except ValueError:
-            continue
-        if n != new_ver and n not in survivors:
-            fs.delete(st.getPath(), True)
+    lake.commit_version(spark, vdir)
+    # retention: the newest keep_versions committed predecessors survive
+    # for in-flight readers; older versions and uncommitted debris go
+    lake.vacuum_versions(spark, path, keep_last=keep_versions + 1)
     if committed:
         # the legacy un-versioned root files (the pre-first-refit index)
         # are now at least TWO generations old — no reader can have

@@ -33,7 +33,7 @@ from itertools import combinations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..functions.sqltext import check_expr_col, sql_double
+from ..functions.sqltext import check_expr_col, sql_dots
 
 
 def _fold_sum(arr: Column) -> Column:
@@ -99,46 +99,23 @@ def plane_weights(num_planes: int, dim: int, seed: int) -> list[list[float]]:
     ]
 
 
-def lsh_signature(
-    vec: Column | str, num_planes: int, dim: int, seed: int = 42
-) -> Column:
-    """Random-hyperplane signature: int with ``num_planes`` sign bits.
-    Map-only — each bit is one fold of the vector against a literal plane.
+def lsh_signature(vec: str, num_planes: int, dim: int, seed: int = 42) -> Column:
+    """Random-hyperplane signature of the array column named ``vec``: int
+    with ``num_planes`` sign bits. Map-only — each bit is one fold of the
+    vector against a literal plane.
 
-    Pass the COLUMN NAME (str) on hot paths: the expression is then built
-    as one ``F.expr`` SQL string — the num_planes·dim literal tree built
-    through chained Column calls costs a py4j round-trip per node (the
-    rotate_vectors r15 construction finding), while Catalyst parses the
-    identical tree from text in milliseconds. The Column form is kept for
-    composed expressions; both produce the same plan and numbers
-    (repr(float) round-trips bit-exactly through the string literal)."""
+    Built as one ``F.expr`` SQL string (:func:`sql_dots`): the
+    num_planes·dim literal tree built through chained Column calls costs
+    a py4j round-trip per node (the rotate_vectors r15 construction
+    finding), while Catalyst parses the identical tree from text in
+    milliseconds."""
+    check_expr_col(vec)  # top-level-name contract (see helper)
     planes = plane_weights(num_planes, dim, seed)
-
-    if isinstance(vec, str):
-        check_expr_col(vec)  # top-level-name contract (see helper)
-
-        bits = " + ".join(
-            "(CASE WHEN aggregate(zip_with(`" + vec + "`, array("
-            + ", ".join(sql_double(w) for w in planes[p])
-            + "), (x, w) -> x * w), 0.0D, (acc, x) -> acc + x)"
-            f" >= 0 THEN {1 << p} ELSE 0 END)"
-            for p in range(num_planes)
-        )
-        return F.expr(f"CAST({bits} AS INT)")
-
-    def bit(p: int) -> Column:
-        warr = F.array(*[F.lit(w) for w in planes[p]])
-        proj = F.aggregate(
-            F.zip_with(vec, warr, lambda x, w: x * w),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-        return F.when(proj >= 0, F.lit(1 << p)).otherwise(F.lit(0))
-
-    sig = bit(0)
-    for p in range(1, num_planes):
-        sig = sig + bit(p)
-    return sig.cast("int")
+    bits = " + ".join(
+        f"(CASE WHEN {dot} >= 0 THEN {1 << p} ELSE 0 END)"
+        for p, dot in enumerate(sql_dots(f"`{vec}`", planes))
+    )
+    return F.expr(f"CAST({bits} AS INT)")
 
 
 def _infer_dim(df: DataFrame, vec_col: str) -> int:

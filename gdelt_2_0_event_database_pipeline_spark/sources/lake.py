@@ -11,7 +11,14 @@ Reference behaviors re-expressed:
 - NULL-drop with missing-column tolerance + retention report
   (``filter.py:155-249``);
 - ``.done``-marker idempotency (``converter.py:118-125``) → a processed-file
-  manifest parquet, diffed against the input listing.
+  manifest parquet, diffed against the input listing;
+- ``.done``-marker crash safety → the package's one versioned-directory
+  rule (``versioned_write``, ``operators.pq.refit_pq_index``): version N
+  is ``<root>/v_%05d``, visible only once one atomic ``_COMMITTED`` marker
+  creation succeeds, so a write that dies leaves debris no reader lists;
+  new numbers skip debris; vacuum keeps the newest committed versions and
+  deletes debris. One writer per root, vacuum included. Its FS calls go
+  through ``util.hadoop_fs`` (``compact_parquet`` stays local-FS only).
 """
 
 from __future__ import annotations
@@ -21,6 +28,8 @@ from typing import Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from ..util import hadoop_fs
 
 
 def _historical_trees(historical_dir: str) -> list[str]:
@@ -426,62 +435,96 @@ def write_with_metrics(
 
 
 # ------------------------------------------------------------- versioning
-def versioned_write(df: DataFrame, root: str, *, mode: str = "error") -> int:
-    """Append-only snapshot versioning without a table format: each write
-    lands in ``root/v=N`` (N = 1 + current max), so readers of version
-    ``N-1`` are never disturbed and "time travel" is a directory choice.
-    Returns the new version number.
+#: the versioned-directory rule of the module docstring
+COMMIT_MARKER = "_COMMITTED"
 
-    This is the poor-man's subset of Delta/Iceberg semantics that plain
-    parquet can deliver safely: IMMUTABLE whole-version directories.
-    Concurrent writers may race to the same N (first rename wins at the
-    FS level) — single-writer-per-root is the documented contract, same
-    stance as ``compact_parquet``.
-    """
-    versions = list_versions(df.sparkSession, root)
-    n = (max(versions) if versions else 0) + 1
-    df.write.mode(mode).parquet(f"{root}/v={n}")
+
+def version_dir(root: str, n: int) -> str:
+    return f"{root}/v_{n:05d}"
+
+
+def _version_dirs(spark: SparkSession, root: str) -> list[tuple[int, bool]]:
+    """Ascending ``(N, committed)`` of every ``v_%05d`` dir, debris too."""
+    jvm, fs, hroot = hadoop_fs(spark, root)
+    if not fs.exists(hroot):
+        return []
+    out = []
+    for st in fs.listStatus(hroot):
+        name = st.getPath().getName()
+        if st.isDirectory() and name.startswith("v_") and name[2:].isdigit():
+            marker = jvm.org.apache.hadoop.fs.Path(f"{root}/{name}/{COMMIT_MARKER}")
+            out.append((int(name[2:]), bool(fs.exists(marker))))
+    return sorted(out)
+
+
+def next_version(spark: SparkSession, root: str) -> int:
+    """One past every version dir, debris included (never reuse a dead
+    writer's directory)."""
+    dirs = _version_dirs(spark, root)
+    return dirs[-1][0] + 1 if dirs else 1
+
+
+def commit_version(spark: SparkSession, vdir: str) -> None:
+    """THE commit point: one atomic marker creation publishes ``vdir``."""
+    _, fs, marker = hadoop_fs(spark, f"{vdir}/{COMMIT_MARKER}")
+    if not fs.createNewFile(marker):
+        raise IOError(f"commit failed: could not create {marker}")
+
+
+def versioned_write(df: DataFrame, root: str) -> int:
+    """Append-only snapshot versioning without a table format — the poor
+    man's subset of Delta/Iceberg that plain parquet delivers safely:
+    IMMUTABLE whole-version directories. Each write lands in a new
+    ``root/v_%05d`` and gets its ``_COMMITTED`` marker only after the job
+    succeeds, so readers of older versions are never disturbed, "time
+    travel" is a directory choice, and a failed write is debris no reader
+    lists (:func:`vacuum_versions` deletes it). Returns the new version.
+    Single writer per root, vacuum included: two writers could pick the
+    same N, and a vacuum deletes a write still in flight."""
+    spark = df.sparkSession
+    n = next_version(spark, root)
+    vdir = version_dir(root, n)
+    df.write.parquet(vdir)
+    commit_version(spark, vdir)
     return n
 
 
 def list_versions(spark: SparkSession, root: str) -> list[int]:
-    """Existing snapshot versions under ``root`` (ascending)."""
-    import os
-
-    if not os.path.isdir(root):
-        return []
-    out = []
-    for name in os.listdir(root):
-        if name.startswith("v=") and name[2:].isdigit():
-            out.append(int(name[2:]))
-    return sorted(out)
+    """Committed snapshot versions under ``root`` (ascending)."""
+    return [n for n, committed in _version_dirs(spark, root) if committed]
 
 
 def read_versioned(
     spark: SparkSession, root: str, version: int | None = None
 ) -> DataFrame:
-    """Read snapshot ``version`` (default: latest)."""
+    """Read snapshot ``version`` (default: latest committed)."""
     versions = list_versions(spark, root)
     if not versions:
         raise FileNotFoundError(f"no versions under {root}")
     v = version if version is not None else versions[-1]
     if v not in versions:
         raise FileNotFoundError(f"version {v} not in {versions}")
-    return spark.read.parquet(f"{root}/v={v}")
+    return spark.read.parquet(version_dir(root, v))
 
 
 def vacuum_versions(spark: SparkSession, root: str, keep_last: int) -> list[int]:
-    """Delete all but the newest ``keep_last`` version directories.
-    Deletes ONLY whole ``v=N`` directories this module created — never
-    individual files of a live version (the lesson from compact_parquet's
-    review: name-scoped deletion, not rmtree over shared space). Returns
-    the versions removed."""
-    import shutil
-
+    """Keep the newest ``keep_last`` committed versions; delete older ones
+    and all debris, whole ``v_%05d`` dirs only (never files of a live
+    version). A version loses its marker before its files, so a crash
+    mid-delete leaves debris, not a committed version with holes.
+    Returns the committed versions removed."""
     if keep_last < 1:
         raise ValueError("keep_last must be >= 1")
-    versions = list_versions(spark, root)
-    drop = versions[:-keep_last] if len(versions) > keep_last else []
-    for v in drop:
-        shutil.rmtree(f"{root}/v={v}")
-    return drop
+    dirs = _version_dirs(spark, root)
+    keep = set([n for n, committed in dirs if committed][-keep_last:])
+    jvm, fs, _ = hadoop_fs(spark, root)
+    dropped = []
+    for n, committed in dirs:
+        if n in keep:
+            continue
+        vdir = version_dir(root, n)
+        if committed:
+            fs.delete(jvm.org.apache.hadoop.fs.Path(f"{vdir}/{COMMIT_MARKER}"), False)
+            dropped.append(n)
+        fs.delete(jvm.org.apache.hadoop.fs.Path(vdir), True)
+    return dropped

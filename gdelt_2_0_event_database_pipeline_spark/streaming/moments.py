@@ -37,10 +37,10 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.pca import MAX_FIT_DIM, PCAModel, embedding_moments, model_from_moments
+from ..util import hadoop_fs
 from .rollup import (
     _already_applied,
     _append_ledger_atomic,
-    _fs,
     _pending_path,
     _recover_pending,
     _try_read_parquet,
@@ -56,7 +56,7 @@ def _publish_pending_whole(
     rename, so any crash mid-publish (even between the delete and the
     rename) is repaired by re-running until the pending dir is gone."""
     pending = _pending_path(state_path, batch_id)
-    jvm, fs, ppath = _fs(spark, pending)
+    jvm, fs, ppath = hadoop_fs(spark, pending)
     if not fs.exists(ppath):
         return  # already fully published (or nothing staged)
     data = jvm.org.apache.hadoop.fs.Path(f"{state_path}/state")

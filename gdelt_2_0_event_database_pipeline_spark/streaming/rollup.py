@@ -49,6 +49,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.rollup import build_rollup, merge_rollup
+from ..util import hadoop_fs
 
 
 def _ledger_path(state_path: str) -> str:
@@ -58,15 +59,6 @@ def _ledger_path(state_path: str) -> str:
 def _pending_path(state_path: str, batch_id: int | None = None) -> str:
     root = f"{state_path}/_pending"
     return root if batch_id is None else f"{root}/{int(batch_id)}"
-
-
-def _fs(spark: SparkSession, path: str):
-    """(jvm, Hadoop FileSystem, Path) for ``path`` — the FS-level half of
-    the commit protocol (Spark has no atomic-rename API of its own)."""
-    jvm = spark.sparkContext._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = hpath.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration())
-    return jvm, fs, hpath
 
 
 def _try_read_parquet(spark: SparkSession, path: str) -> DataFrame | None:
@@ -91,7 +83,7 @@ def _applied_batch_ids(spark: SparkSession, state_path: str) -> set[int]:
     discipline; r15 verdict item 2). The parquet *content* (the batch_id
     row) stays — it is the audit record and external readers may still
     read the ledger as a table."""
-    jvm, fs, lpath = _fs(spark, _ledger_path(state_path))
+    jvm, fs, lpath = hadoop_fs(spark, _ledger_path(state_path))
     if not fs.exists(lpath):
         return set()
     out: set[int] = set()
@@ -106,7 +98,7 @@ def _applied_batch_ids(spark: SparkSession, state_path: str) -> set[int]:
 
 
 def _already_applied(spark: SparkSession, state_path: str, batch_id: int) -> bool:
-    jvm, fs, entry = _fs(
+    jvm, fs, entry = hadoop_fs(
         spark, f"{_ledger_path(state_path)}/batch-{int(batch_id)}.parquet"
     )
     return fs.exists(entry)
@@ -147,7 +139,7 @@ def _append_ledger_atomic(
         buf,
     )
     tmp = f"{state_path}/_applied_batches_tmp/{int(batch_id)}.parquet"
-    jvm, fs, tpath = _fs(spark, tmp)
+    jvm, fs, tpath = hadoop_fs(spark, tmp)
     stream = fs.create(tpath, True)
     try:
         stream.write(buf.getvalue())
@@ -171,7 +163,7 @@ def _publish_pending(spark: SparkSession, state_path: str, batch_id: int) -> Non
     re-replacing a day with identical content is a no-op in effect — so
     this can be re-run after any crash until the pending dir is gone."""
     pending = _pending_path(state_path, batch_id)
-    jvm, fs, ppath = _fs(spark, pending)
+    jvm, fs, ppath = hadoop_fs(spark, pending)
     if not fs.exists(ppath):
         return  # nothing staged (empty batch) or already fully published
     data = f"{state_path}/state"
@@ -207,7 +199,7 @@ def _recover_pending(
     ``recover_*_state`` functions; cost is one listing when there is
     nothing to repair. Callers pass their module's publish function at
     call time, so a patched one is the one that runs."""
-    jvm, fs, root = _fs(spark, _pending_path(state_path))
+    jvm, fs, root = hadoop_fs(spark, _pending_path(state_path))
     if fs.exists(root):
         applied = _applied_batch_ids(spark, state_path)
         for status in fs.listStatus(root):

@@ -20,3 +20,15 @@ def single_partition_df(spark: SparkSession, rows, schema: str) -> DataFrame:
     For tiny metadata frames only — a single partition is the point.
     """
     return spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), schema)
+
+
+def hadoop_fs(spark: SparkSession, path: str):
+    """(jvm, Hadoop FileSystem, Path) for ``path`` — the one seam through
+    which the package lists, renames, deletes and commit-marks at-rest
+    state. Going through the session's Hadoop configuration keeps every
+    such call scheme-agnostic (local, HDFS, object stores); Spark has no
+    atomic-rename or marker API of its own."""
+    jvm = spark.sparkContext._jvm
+    hpath = jvm.org.apache.hadoop.fs.Path(path)
+    fs = hpath.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration())
+    return jvm, fs, hpath

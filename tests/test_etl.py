@@ -781,3 +781,34 @@ def test_versioned_write_read_vacuum(spark, tmp_path):
 
     with _pytest.raises(FileNotFoundError):
         read_versioned(spark, root, 1)
+
+
+def test_versioned_write_failed_job_leaves_no_version(spark, tmp_path):
+    """A snapshot whose write job fails never becomes a version: it is not
+    listed or read, vacuum deletes it without counting it, and the next
+    write becomes the latest."""
+    import os
+
+    from gdelt_2_0_event_database_pipeline_spark.sources.lake import (
+        list_versions,
+        read_versioned,
+        vacuum_versions,
+        versioned_write,
+    )
+
+    root = str(tmp_path / "snapshots")
+    assert versioned_write(spark.range(5), root) == 1
+    failing = spark.range(3).select(
+        F.raise_error(F.lit("boom")).cast("long").alias("id")
+    )
+    with pytest.raises(Exception, match="boom"):
+        versioned_write(failing, root)
+    assert list_versions(spark, root) == [1]
+    assert sorted(r.id for r in read_versioned(spark, root).collect()) == list(
+        range(5)
+    )
+    assert vacuum_versions(spark, root, keep_last=1) == []
+    assert sorted(os.listdir(root)) == ["v_00001"]
+    v = versioned_write(spark.range(2), root)
+    assert list_versions(spark, root) == [1, v]
+    assert read_versioned(spark, root).count() == 2

@@ -262,12 +262,12 @@ def test_refit_preserves_rotation_frame(spark, tmp_path, vec_df, fitted):
         fit_ivf_centroids,
     )
     from gdelt_2_0_event_database_pipeline_spark.operators.pq import (
-        _list_versions,
         ivf_pq_search_index,
         read_pq_meta,
         refit_pq_index,
         write_pq_index,
     )
+    from gdelt_2_0_event_database_pipeline_spark.sources.lake import list_versions
 
     rotation, _ = fitted
     rot_all = (
@@ -294,7 +294,7 @@ def test_refit_preserves_rotation_frame(spark, tmp_path, vec_df, fitted):
         partition_col="ingest_day", iters=2,
     )
     assert report["version"] == 1
-    assert _list_versions(spark, index) == [1]
+    assert list_versions(spark, index) == [1]
     _, _, _, rot2 = read_pq_meta(spark, index)
     assert rot2 == rotation  # the frame survived the version swap
 

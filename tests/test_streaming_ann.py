@@ -171,9 +171,9 @@ def test_drift_check_triggers_exactly_one_refit(spark, tmp_path):
         fit_ivf_centroids,
     )
     from gdelt_2_0_event_database_pipeline_spark.operators.pq import (
-        _list_versions,
         index_drift_report,
     )
+    from gdelt_2_0_event_database_pipeline_spark.sources.lake import list_versions
 
     index = str(tmp_path / "idx")
     src = str(tmp_path / "src")
@@ -219,7 +219,7 @@ def test_drift_check_triggers_exactly_one_refit(spark, tmp_path):
     q.awaitTermination(180)
 
     # exactly one refit: one committed version, one decision row with action=refit
-    assert _list_versions(spark, index) == [1]
+    assert list_versions(spark, index) == [1]
     rows = spark.read.parquet(sink).collect()
     assert len(rows) == 1
     assert rows[0]["action"] == "refit" and rows[0]["refit_recommended"]
