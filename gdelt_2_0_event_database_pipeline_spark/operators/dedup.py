@@ -26,7 +26,7 @@ from typing import Sequence
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..util import hadoop_fs
+from ..util import hadoop_fs, is_hidden
 from .text import char_ngrams, simhash64, tokens
 
 
@@ -1381,7 +1381,7 @@ def read_minhash_index_meta(spark, path: str) -> dict:
     rows = []
     for status in fs.listStatus(meta_dir):
         name = status.getPath().getName()
-        if not status.isFile() or name.startswith(("_", ".")) or status.getLen() == 0:
+        if not status.isFile() or is_hidden(name) or status.getLen() == 0:
             continue
         stream = fs.open(status.getPath())
         try:

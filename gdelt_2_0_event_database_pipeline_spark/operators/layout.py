@@ -12,12 +12,13 @@ The per-directory kernel is ``sources/lake.compact_parquet`` — snapshot
 the file list, read EXACTLY those files, ``coalesce`` (concatenate, never
 shuffle) to ``ceil(bytes/target)``, move in, delete only the snapshot —
 so concurrent appenders (a streaming micro-batch landing mid-compaction)
-are safe by construction, and its constraints (POSIX fs, one compactor
-per directory) are documented there. This module adds the tree walk:
-find every leaf partition directory, compact each independently, report
-per partition. Work is proportional to the REWRITTEN partitions' bytes
-only; healthy partitions are never read — each leaf decision is a
-driver-side listing.
+are safe by construction, and its constraints (one compactor per
+directory, the crash caveat) are documented there. This module adds the
+tree walk: find every leaf partition directory, compact each
+independently, report per partition. Work is proportional to the
+REWRITTEN partitions' bytes only; healthy partitions are never read —
+each leaf decision is a driver-side listing through the Hadoop
+FileSystem (``util.list_visible``), so any scheme the session reads works.
 
 Content is preserved row-for-row but NOT order-for-order (a parquet
 directory never promises row order); ``tests/test_layout.py`` pins
@@ -26,12 +27,12 @@ row-multiset equality across the whole tree.
 
 from __future__ import annotations
 
-import os
 from typing import NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
 
-from ..sources.lake import compact_parquet
+from ..sources.lake import compact_parquet, parquet_files
+from ..util import list_visible
 
 
 class CompactionResult(NamedTuple):
@@ -41,10 +42,11 @@ class CompactionResult(NamedTuple):
     bytes: int
 
 
-def _leaf_dirs(path: str) -> list[str]:
-    """Relative paths of every directory under ``path`` that directly
-    holds parquet data files (Hive leaves; '' for a flat directory).
-    Listing only — no data read.
+def _leaves(spark: SparkSession, path: str) -> list[tuple[str, list]]:
+    """``(relative path, parquet FileStatuses)`` of every directory under
+    ``path`` that directly holds parquet data files (Hive leaves; '' for a
+    flat directory), sorted by path. Listing only — no data read; a
+    directory that vanishes mid-walk is skipped.
 
     Hidden/system subtrees are pruned, not just their files: a concurrent
     Spark writer's ``_temporary`` staging tree contains real
@@ -54,38 +56,32 @@ def _leaf_dirs(path: str) -> list[str]:
     output, not a partition. Spark's own readers skip these trees for
     the same reason."""
     out = []
-    for dirpath, dirnames, filenames in os.walk(path):
-        dirnames[:] = [
-            d
-            for d in dirnames
-            if not d.startswith((".", "_")) and not d.endswith(".__compact_tmp__")
-        ]
-        if any(
-            f.endswith(".parquet") and not f.startswith((".", "_"))
-            for f in filenames
-        ):
-            out.append(os.path.relpath(dirpath, path))
-    return sorted("" if d == "." else d for d in out)
+
+    def walk(d: str, rel: str) -> None:
+        try:
+            children = list_visible(spark, d)
+        except FileNotFoundError:
+            return
+        files = parquet_files(children)
+        if files:
+            out.append((rel, files))
+        for st in children:
+            name = st.getPath().getName()
+            if st.isDirectory() and not name.endswith(".__compact_tmp__"):
+                walk(st.getPath().toString(), f"{rel}/{name}" if rel else name)
+
+    walk(path, "")
+    return sorted(out, key=lambda leaf: leaf[0])
 
 
 def partition_file_stats(spark: SparkSession, path: str) -> list[CompactionResult]:
     """(partition, n_files, n_files, bytes) per leaf partition directory —
     the read-only report behind :func:`compact_partitions` (files_after
     echoes files_before)."""
-    out = []
-    for leaf in _leaf_dirs(path):
-        full = os.path.join(path, leaf) if leaf else path
-        files = [
-            os.path.join(full, f)
-            for f in os.listdir(full)
-            if f.endswith(".parquet") and not f.startswith((".", "_"))
-        ]
-        out.append(
-            CompactionResult(
-                leaf, len(files), len(files), sum(map(os.path.getsize, files))
-            )
-        )
-    return out
+    return [
+        CompactionResult(leaf, len(files), len(files), sum(st.getLen() for st in files))
+        for leaf, files in _leaves(spark, path)
+    ]
 
 
 def compact_partitions(
@@ -102,8 +98,8 @@ def compact_partitions(
     if target_file_mb <= 0:
         raise ValueError("target_file_mb must be positive")
     results = []
-    for leaf in _leaf_dirs(path):
-        full = os.path.join(path, leaf) if leaf else path
+    for leaf, _ in _leaves(spark, path):
+        full = f"{path.rstrip('/')}/{leaf}" if leaf else path
         rep = compact_parquet(
             spark, full, target_file_mb=target_file_mb, min_files=min_files
         )

@@ -1130,10 +1130,11 @@ def append_pq_index(
     if residual:
         # residual indexes carry their encoding rule in the meta: the
         # batch is encoded against the SAME frozen (centroids, residual
-        # codebooks), so maintained==rebuild parity holds identically
+        # codebooks), so maintained==rebuild parity holds identically; the
+        # join re-attaches the partition value (the encode keeps only the id)
         enc = ivf_pq_encode_residual(
             new_docs, codebooks, centroids, id_col=id_col, vec_col=vec_col
-        )
+        ).join(new_docs.select(id_col, partition_col), id_col)
     else:
         # micro-batch hot path: the map-side twins (bit-identical to the
         # posexplode shapes — see their docstrings + differential tests)
@@ -1153,24 +1154,7 @@ def append_pq_index(
             new_docs, codebooks, id_col=id_col, vec_col=vec_col,
             carry=(partition_col,), extra=extra,
         )
-        merge_upsert_batch(
-            spark, enc, f"{path}/codes", [id_col], partition_col
-        )
-        live_after = resolve_index_root(spark, logical_root)
-        if live_after != path:
-            raise RuntimeError(
-                f"append_pq_index raced a refit: the batch merged into {path} "
-                f"but the live version is now {live_after} — the batch is NOT "
-                "in the live index. Replay it (the refit's corpus snapshot "
-                "predates this batch)."
-            )
-        return
-    batch = enc.join(
-        new_docs.select(id_col, partition_col), id_col
-    )  # re-attach the partition value (the residual encode keeps only the id)
-    merge_upsert_batch(
-        spark, batch, f"{path}/codes", [id_col], partition_col
-    )
+    merge_upsert_batch(spark, enc, f"{path}/codes", [id_col], partition_col)
     live_after = resolve_index_root(spark, logical_root)
     if live_after != path:
         raise RuntimeError(

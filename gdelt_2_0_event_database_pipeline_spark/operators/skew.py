@@ -23,6 +23,8 @@ from typing import Sequence
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..util import hadoop_fs
+
 
 def salted_group_agg(
     df: DataFrame,
@@ -106,16 +108,10 @@ def bucket_spec_matches(
     return n == str(num_buckets) and cols == want_cols
 
 
-def _looks_like_table_dir(d: str) -> bool:
+def _looks_like_table_dir(names: Sequence[str]) -> bool:
     """Heuristic guard before deleting an orphaned table directory: a Spark
     table dir contains only part-files / _SUCCESS / hidden markers. Anything
-    else (a lake root, user data) must NOT be silently rmtree'd."""
-    import os
-
-    try:
-        names = os.listdir(d)
-    except OSError:
-        return False
+    else (a lake root, user data) must NOT be silently deleted."""
     return all(
         n == "_SUCCESS" or n.startswith("part-") or n.startswith(".") or n == "_temporary"
         for n in names
@@ -156,27 +152,25 @@ def write_bucketed(
     table dir otherwise fails CREATE with LOCATION_ALREADY_EXISTS. Not safe
     for two concurrent sessions writing the same table name/path.
     """
-    import os
-    import shutil
-    from urllib.parse import urlparse
-
     spark = df.sparkSession
     if reuse_existing and bucket_spec_matches(spark, table_name, bucket_cols, num_buckets):
         return False
     spark.sql(f"DROP TABLE IF EXISTS `{table_name}`")
-    if path is None:
+    orphan = path
+    if orphan is None:
         wh = spark.conf.get("spark.sql.warehouse.dir", "spark-warehouse")
-        wh_path = urlparse(wh).path or wh
-        orphan = os.path.join(wh_path, table_name.lower())
-    else:
-        orphan = urlparse(path).path or path
-    if os.path.isdir(orphan):
-        if not _looks_like_table_dir(orphan):
+        orphan = f"{wh.rstrip('/')}/{table_name.lower()}"
+    _, fs, opath = hadoop_fs(spark, orphan)
+    if fs.exists(opath) and fs.getFileStatus(opath).isDirectory():
+        if not _looks_like_table_dir(
+            [st.getPath().getName() for st in fs.listStatus(opath)]
+        ):
             raise ValueError(
                 f"refusing to clear {orphan!r}: directory does not look like a "
                 "bucketed-table location (pass a dedicated per-table path)"
             )
-        shutil.rmtree(orphan, ignore_errors=True)
+        if not fs.delete(opath, True):
+            raise IOError(f"could not clear orphaned table directory {orphan!r}")
     writer = df.write.mode("overwrite").bucketBy(num_buckets, *bucket_cols)
     if sort_cols:
         writer = writer.sortBy(*sort_cols)

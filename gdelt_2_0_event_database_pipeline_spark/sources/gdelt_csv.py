@@ -20,7 +20,7 @@ import zipfile
 from pathlib import Path
 from typing import Sequence
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from ..schema import (
@@ -30,7 +30,9 @@ from ..schema import (
     NUMERIC_COLUMNS,
     gdelt_csv_schema,
 )
-from ..util import hadoop_fs
+from ..util import hadoop_fs, is_hidden, list_visible
+from .lake import all_not_null, mark_processed, unprocessed
+from .manifest import classify_filename
 
 
 def extract_zips(zip_dir: str, out_dir: str) -> list[Path]:
@@ -131,9 +133,14 @@ def convert(
     (``converter.py:230``); malformed lines are excluded from every write.
 
     Scale shape (r13): routing is PER FILE, so the file list is split
-    driver-side (one Hadoop-FS listing) and each route reads ONLY its own
-    files — every input byte is parsed exactly once, with the report
-    counts riding the write pass itself via ``Observation`` accumulators.
+    driver-side (one Hadoop-FS listing of the visible files, with or
+    without ``manifest_path``, so any scheme the session reads works) and
+    each route reads ONLY its own files — every input byte is parsed
+    exactly once, with the report counts riding the write pass itself via
+    ``Observation`` accumulators. Daily is the route with no partition
+    columns: every route runs the same observe → filter → append write,
+    and a row is kept (and counted) iff it is well-formed and its
+    partition columns are not NULL.
     The previous shape cached the full 58-column parse and re-scanned it
     per route; at a 20M-row drop the cache outgrew memory and the stage
     went ~1.8× superlinear (SCALE_PROBE ``etl_convert``). Files no route
@@ -151,97 +158,54 @@ def convert(
     schema'.
     """
     rules = partition_rules or DEFAULT_PARTITION_RULES
-    from .manifest import classify_filename
-
     counts: dict[str, int] = {"daily": 0, "corrupt": 0, **{ft: 0 for ft in rules}}
 
-    to_mark: list[str] = []
+    files = _list_input_files(spark, csv_dir)
     if manifest_path:
         # incremental re-run (reference .done markers, converter.py:118-125):
         # only files absent from the processed manifest are read at all
-        from glob import glob
-
-        from .lake import unprocessed
-
-        candidates = sorted(
-            p for p in glob(os.path.join(csv_dir, "*")) if os.path.isfile(p)
-        )
-        files = unprocessed(spark, candidates, manifest_path)
+        files = unprocessed(spark, files, manifest_path)
         if not files:
             return counts
-        to_mark = files
-    else:
-        files = _list_input_files(spark, csv_dir)
 
     routed: dict[str, list[str]] = {}
     for f in files:
         routed.setdefault(classify_filename(f) or "__none__", []).append(f)
 
-    from pyspark.sql import Observation
+    # route -> (sink, partition columns); daily is the unpartitioned route
+    sinks = {"daily": (flat_dir, [])}
+    if historical_dir is not None:
+        sinks.update({ft: (f"{historical_dir}/{ft}", cols) for ft, cols in rules.items()})
 
-    good = F.col("_corrupt_record").isNull()
-
-    daily_files = routed.get("daily", [])
-    if daily_files:
-        flat_had_data = _data_files_exist(spark, flat_dir)
-        df = read_gdelt_csv(spark, daily_files, corrupt_col="_corrupt_record")
+    for route, (sink, cols) in sinks.items():
+        if not routed.get(route):
+            continue
+        had_data = _data_files_exist(spark, sink)
+        df = read_gdelt_csv(spark, routed[route], corrupt_col="_corrupt_record")
+        keep = F.col("_corrupt_record").isNull() & all_not_null(cols)
         obs = Observation()
         (
             df.observe(
                 obs,
-                F.count(F.lit(1)).alias("n"),
                 F.count("_corrupt_record").alias("bad"),
+                F.count_if(keep).alias("kept"),
             )
-            .filter(good)
+            .filter(keep)
             .drop("_corrupt_record", "_source_file")
             .write.mode("append")
-            .parquet(flat_dir, compression="snappy")
+            .partitionBy(*cols)
+            .parquet(sink, compression="snappy")
         )
         m = obs.get
         counts["corrupt"] += int(m["bad"])
-        counts["daily"] = int(m["n"]) - int(m["bad"])
-        if counts["daily"] == 0:
-            _drop_empty_sink(spark, flat_dir, flat_had_data)
+        counts[route] = int(m["kept"])
+        if counts[route] == 0:
+            _drop_empty_sink(spark, sink, had_data)
 
     # count-only parse for files no write touches, preserving full-input
     # `corrupt` semantics: unrouted files, and historical files when the
     # historical sink is off
-    leftover: list[str] = list(routed.get("__none__", []))
-    for ft in rules:
-        ft_files = routed.get(ft, [])
-        if not ft_files:
-            continue
-        if historical_dir is None:
-            leftover.extend(ft_files)
-            continue
-        cols = rules[ft]
-        ft_sink = f"{historical_dir}/{ft}"
-        ft_had_data = _data_files_exist(spark, ft_sink)
-        df = read_gdelt_csv(spark, ft_files, corrupt_col="_corrupt_record")
-        obs = Observation()
-        kept = F.sum(
-            (good & F.expr(" AND ".join(f"{c} IS NOT NULL" for c in cols)))
-            .cast("long")
-        ).alias("kept")
-        (
-            df.observe(
-                obs,
-                F.count("_corrupt_record").alias("bad"),
-                kept,
-            )
-            .filter(good)
-            .drop("_corrupt_record", "_source_file")
-            .na.drop(subset=cols)
-            .write.mode("append")
-            .partitionBy(*cols)
-            .parquet(ft_sink, compression="snappy")
-        )
-        m = obs.get
-        counts["corrupt"] += int(m["bad"])
-        counts[ft] = int(m["kept"] or 0)
-        if counts[ft] == 0:
-            _drop_empty_sink(spark, ft_sink, ft_had_data)
-
+    leftover = [f for route, fs in routed.items() if route not in sinks for f in fs]
     if leftover:
         row = (
             read_gdelt_csv(spark, leftover, corrupt_col="_corrupt_record")
@@ -250,10 +214,8 @@ def convert(
         )
         counts["corrupt"] += int(row["bad"])
 
-    if manifest_path and to_mark:
-        from .lake import mark_processed
-
-        mark_processed(spark, manifest_path, to_mark)
+    if manifest_path:
+        mark_processed(spark, manifest_path, files)
     return counts
 
 
@@ -265,8 +227,7 @@ def _data_files_exist(spark: SparkSession, path: str) -> bool:
         return False
     it = fs.listFiles(p, True)
     while it.hasNext():
-        name = it.next().getPath().getName()
-        if not name.startswith("_") and not name.startswith("."):
+        if not is_hidden(it.next().getPath().getName()):
             return True
     return False
 
@@ -286,14 +247,11 @@ def _drop_empty_sink(spark: SparkSession, path: str, pre_existed_with_data: bool
 
 
 def _list_input_files(spark: SparkSession, path: str) -> list[str]:
-    """Files under ``path`` (or ``path`` itself if a file) via the Hadoop
-    FileSystem API — works for any scheme the session can read, not just
-    the local disk the ``glob`` manifest path assumes."""
+    """Visible files under ``path`` (or ``path`` itself if a file) via the
+    Hadoop FileSystem API — works for any scheme the session can read."""
     _, fs, p = hadoop_fs(spark, path)
-    if not fs.exists(p):
-        raise FileNotFoundError(path)
-    if fs.getFileStatus(p).isFile():
+    if fs.exists(p) and fs.getFileStatus(p).isFile():
         return [path]
     return sorted(
-        st.getPath().toString() for st in fs.listStatus(p) if st.isFile()
+        st.getPath().toString() for st in list_visible(spark, path) if st.isFile()
     )

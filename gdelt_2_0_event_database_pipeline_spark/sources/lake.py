@@ -17,38 +17,43 @@ Reference behaviors re-expressed:
   is ``<root>/v_%05d``, visible only once one atomic ``_COMMITTED`` marker
   creation succeeds, so a write that dies leaves debris no reader lists;
   new numbers skip debris; vacuum keeps the newest committed versions and
-  deletes debris. One writer per root, vacuum included. Its FS calls go
-  through ``util.hadoop_fs`` (``compact_parquet`` stays local-FS only).
+  deletes debris. One writer per root, vacuum included.
+
+Every directory walk, rename and delete over at-rest lake data goes
+through ``util.hadoop_fs`` (``util.list_visible`` for listings), so a
+``file://``, HDFS or object-store root behaves like a plain local path.
 """
 
 from __future__ import annotations
 
 import dataclasses
+import functools
+import operator
 from typing import Sequence
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..util import hadoop_fs
+from ..util import hadoop_fs, list_visible
 
 
-def _historical_trees(historical_dir: str) -> list[str]:
+def _historical_trees(spark: SparkSession, historical_dir: str) -> list[str]:
     """A historical root holds one Hive tree per source granularity
     (``yearly/Year=…``, ``monthly/Year=…/MonthYear=…`` — different partition
     depths can't share one root). A root whose children are already
-    ``Col=val`` dirs is a single tree."""
-    import os
-
+    ``Col=val`` dirs is a single tree; a missing root holds none."""
     try:
-        children = sorted(
-            d for d in os.listdir(historical_dir)
-            if os.path.isdir(os.path.join(historical_dir, d))
-        )
+        children = list_visible(spark, historical_dir)
     except FileNotFoundError:
         return []
-    if not children or any("=" in c for c in children):
+    dirs = sorted(
+        (st.getPath().getName(), st.getPath().toString())
+        for st in children
+        if st.isDirectory()
+    )
+    if not dirs or any("=" in name for name, _ in dirs):
         return [historical_dir]
-    return [os.path.join(historical_dir, c) for c in children]
+    return [tree for _, tree in dirs]
 
 
 def read_lake(
@@ -64,7 +69,7 @@ def read_lake(
     if flat_dir:
         dfs.append(spark.read.parquet(flat_dir))
     if historical_dir:
-        for tree in _historical_trees(historical_dir):
+        for tree in _historical_trees(spark, historical_dir):
             dfs.append(spark.read.parquet(tree))
     if not dfs:
         raise ValueError("at least one of flat_dir/historical_dir is required")
@@ -92,6 +97,18 @@ class FilterReport:
         return self.rows_after / self.rows_before if self.rows_before else 1.0
 
 
+def all_not_null(columns: Sequence[str]) -> Column:
+    """``c1 IS NOT NULL AND c2 IS NOT NULL …`` (TRUE for no columns).
+
+    An explicit conjunction, not ``na.drop``: ``na.drop(subset)`` compiles
+    to AtLeastNNonNulls, which parquet can't push down — the conjunction
+    reaches the scan as PushedFilters and skips row groups via null
+    counts. It also keeps NaN, which ``na.drop`` drops."""
+    return functools.reduce(
+        operator.and_, [F.col(c).isNotNull() for c in columns], F.lit(True)
+    )
+
+
 def filter_nulls(df: DataFrame, columns: Sequence[str]) -> tuple[DataFrame, FilterReport]:
     """Drop rows with NULL in any configured column — conjunctive
     ``IS NOT NULL`` (reference filter.py:176-208). Columns absent from the
@@ -103,21 +120,9 @@ def filter_nulls(df: DataFrame, columns: Sequence[str]) -> tuple[DataFrame, Filt
     """
     existing = [c for c in columns if c in df.columns]
     missing = [c for c in columns if c not in df.columns]
-    if not existing:
-        n = df.count()
-        return df, FilterReport(n, n, [], missing)
-    # explicit IS NOT NULL conjunction, not na.drop: na.drop(subset) compiles
-    # to AtLeastNNonNulls, which parquet can't push down — the conjunction
-    # reaches the scan as PushedFilters and skips row groups via null counts
-    import functools
-
-    pred = functools.reduce(
-        lambda a, b: a & b, [F.col(c).isNotNull() for c in existing]
-    )
-    filtered = df.filter(pred)
-    before = df.count()
-    after = filtered.count()
-    return filtered, FilterReport(before, after, existing, missing)
+    pred = all_not_null(existing)
+    before, after = df.agg(F.count(F.lit(1)), F.count_if(pred)).first()
+    return df.filter(pred), FilterReport(before, after, existing, missing)
 
 
 def per_file_retention(df: DataFrame, columns: Sequence[str]) -> DataFrame:
@@ -126,15 +131,7 @@ def per_file_retention(df: DataFrame, columns: Sequence[str]) -> DataFrame:
     twin. One pass: ``groupBy(input_file_name())`` with a conditional count,
     no second scan of the data. Returns (file, rows_before, rows_after,
     retention) ordered by file for stable logs."""
-    existing = [c for c in columns if c in df.columns]
-    if existing:
-        import functools
-
-        pred = functools.reduce(
-            lambda a, b: a & b, [F.col(c).isNotNull() for c in existing]
-        )
-    else:
-        pred = F.lit(True)
+    pred = all_not_null([c for c in columns if c in df.columns])
     return (
         df.groupBy(F.input_file_name().alias("file"))
         .agg(
@@ -202,8 +199,20 @@ def mark_processed(spark: SparkSession, manifest_path: str, files: Sequence[str]
 def unprocessed(
     spark: SparkSession, candidates: Sequence[str], manifest_path: str
 ) -> list[str]:
-    done = processed_files(spark, manifest_path)
-    return [c for c in candidates if c not in done]
+    """``candidates`` absent from the manifest, compared in the Hadoop
+    listing's spelling on both sides: a manifest written by the earlier
+    local-glob listing holds plain paths (``/a/b``) where the listing now
+    gives ``file:/a/b``, and those files must still count as processed."""
+    done = {_as_listed(f) for f in processed_files(spark, manifest_path)}
+    return [c for c in candidates if _as_listed(c) not in done]
+
+
+def _as_listed(path: str) -> str:
+    """A scheme-less path names a local file (``/a/b`` → ``file:/a/b``)."""
+    import os
+    from urllib.parse import urlparse
+
+    return path if urlparse(path).scheme else "file:" + os.path.abspath(path)
 
 
 # ---------------------------------------------------------------- compaction
@@ -234,53 +243,60 @@ def compact_parquet(
     files or is already at target size.
 
     Constraints (by design, stated here so operators don't learn them the
-    hard way): local/POSIX filesystem only (``os.listdir``/``os.rename`` —
-    an object store needs a manifest-based compactor instead); at most ONE
-    compactor per directory at a time (concurrent *appenders* are safe,
-    concurrent *compactors* would double-delete); a crash between the
-    move-in and the snapshot deletes leaves duplicate rows (never data
-    loss) — re-running after such a crash is not safe to do blindly; check
-    for a leftover ``.__compact_tmp__`` sibling first.
+    hard way): at most ONE compactor per directory at a time (concurrent
+    *appenders* are safe, concurrent *compactors* would double-delete); a
+    crash between the move-in and the snapshot deletes leaves duplicate
+    rows (never data loss) — re-running after such a crash is not safe to
+    do blindly; check for a leftover ``.__compact_tmp__`` sibling first.
+    The move-in is one FileSystem ``rename`` per output file, so on an
+    object store (copy + delete) the window for that crash is longer.
     """
     import math
-    import os
-    import shutil
     import uuid
 
-    def _data_files() -> list[str]:
-        return [
-            os.path.join(path, f)
-            for f in os.listdir(path)
-            if f.endswith(".parquet") and not f.startswith((".", "_"))
-        ]
-
-    files = _data_files()
-    total = sum(os.path.getsize(f) for f in files)
+    jvm, fs, _ = hadoop_fs(spark, path)
+    Path = jvm.org.apache.hadoop.fs.Path
+    root = path.rstrip("/")
+    snapshot = parquet_files(list_visible(spark, path))
+    total = sum(st.getLen() for st in snapshot)
     n_out = max(1, math.ceil(total / (target_file_mb * 1024 * 1024)))
-    report = {"files_before": len(files), "files_after": len(files), "bytes": total}
-    if len(files) < min_files or n_out >= len(files):
+    report = {"files_before": len(snapshot), "files_after": len(snapshot), "bytes": total}
+    if len(snapshot) < min_files or n_out >= len(snapshot):
         return report
 
-    tmp = path.rstrip("/") + ".__compact_tmp__"
-    shutil.rmtree(tmp, ignore_errors=True)
+    tmp = Path(root + ".__compact_tmp__")
+    if fs.exists(tmp) and not fs.delete(tmp, True):
+        raise IOError(f"compaction failed: could not clear {tmp}")
     # Read the snapshot by explicit file list, not the directory: files that
     # land after the listing must not be read (they won't be deleted either).
-    spark.read.parquet(*files).coalesce(n_out).write.parquet(
-        tmp, compression="snappy"
-    )
+    spark.read.parquet(*[st.getPath().toString() for st in snapshot]).coalesce(
+        n_out
+    ).write.parquet(tmp.toString(), compression="snappy")
     prefix = f"compact-{uuid.uuid4().hex[:12]}"
-    for i, part in enumerate(
-        sorted(f for f in os.listdir(tmp) if f.endswith(".parquet"))
-    ):
-        os.rename(
-            os.path.join(tmp, part),
-            os.path.join(path, f"{prefix}-{i:05d}.snappy.parquet"),
-        )
-    for f in files:
-        os.remove(f)
-    shutil.rmtree(tmp)
-    report["files_after"] = len(_data_files())
+    parts = sorted(
+        st.getPath().toString()
+        for st in parquet_files(list_visible(spark, tmp.toString()))
+    )
+    for i, part in enumerate(parts):
+        dest = Path(f"{root}/{prefix}-{i:05d}.snappy.parquet")
+        if not fs.rename(Path(part), dest):
+            raise IOError(f"compaction failed: rename {part} -> {dest} returned false")
+    for st in snapshot:
+        if not fs.delete(st.getPath(), False):
+            raise IOError(f"compaction failed: could not delete {st.getPath()}")
+    if not fs.delete(tmp, True):
+        raise IOError(f"compaction failed: could not delete {tmp}")
+    report["files_after"] = len(parquet_files(list_visible(spark, path)))
     return report
+
+
+def parquet_files(statuses: Sequence) -> list:
+    """The data files among Hadoop ``FileStatus``es: ``.parquet`` files
+    (hidden names are already gone from :func:`util.list_visible`)."""
+    return [
+        st for st in statuses
+        if st.isFile() and st.getPath().getName().endswith(".parquet")
+    ]
 
 
 def write_clustered(

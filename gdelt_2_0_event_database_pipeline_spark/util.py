@@ -32,3 +32,19 @@ def hadoop_fs(spark: SparkSession, path: str):
     hpath = jvm.org.apache.hadoop.fs.Path(path)
     fs = hpath.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration())
     return jvm, fs, hpath
+
+
+def is_hidden(name: str) -> bool:
+    """Spark's and Hadoop's hidden-name rule: a name starting with ``_`` or
+    ``.`` is a marker, checksum, metadata or staging entry, never data."""
+    return name.startswith(("_", "."))
+
+
+def list_visible(spark: SparkSession, path: str) -> list:
+    """Hadoop ``FileStatus`` of every child of ``path`` that is not
+    :func:`hidden <is_hidden>` — ``os.listdir`` for any scheme the session
+    reads, and like it, raises ``FileNotFoundError`` for a missing path."""
+    _, fs, p = hadoop_fs(spark, path)
+    if not fs.exists(p):
+        raise FileNotFoundError(path)
+    return [st for st in fs.listStatus(p) if not is_hidden(st.getPath().getName())]

@@ -129,6 +129,40 @@ def test_run_filter_stage_per_file_report(spark, converted, tmp_path):
     assert sum(b for _, b, _, _ in report.per_file) == report.rows_before
 
 
+def test_filter_nulls_runs_one_aggregate(spark, converted):
+    """Both report counts come from one aggregate: as many Spark jobs as a
+    single ``count()`` of the frame (under AQE a global aggregate runs its
+    map stage as a job of its own, so that is two jobs, not one)."""
+    _, flat, hist, _ = converted
+    df = lake.read_lake(spark, flat, hist)
+    sc = spark.sparkContext
+
+    def jobs(group, action):
+        sc.setJobGroup(group, group)
+        try:
+            action()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    one_count = jobs("filter_nulls_one_count", df.count)
+    assert one_count >= 1
+    assert jobs(
+        "filter_nulls_jobs",
+        lambda: lake.filter_nulls(df, ["Actor1Code", "ActionGeo_Lat"]),
+    ) == one_count
+
+
+def test_read_lake_uri_historical_root(spark, converted):
+    """A ``file://`` historical root lists its trees through the Hadoop
+    FileSystem, so it reads the same rows as the plain path."""
+    _, flat, hist, _ = converted
+    plain = lake.read_lake(spark, flat, hist)
+    uri = lake.read_lake(spark, flat, "file://" + hist)
+    assert uri.count() == plain.count() == 600
+    assert uri.exceptAll(plain).count() == 0 == plain.exceptAll(uri).count()
+
+
 def test_filter_nulls_missing_columns_noop(spark, converted):
     _, flat, _, _ = converted
     df = lake.read_lake(spark, flat)
@@ -147,6 +181,43 @@ def test_convert_incremental_with_manifest(spark, tmp_path):
     second = gdelt_csv.convert(spark, csv_dir, flat, historical_dir=hist, manifest_path=mani)
     assert second == {"daily": 0, "corrupt": 0, "yearly": 0, "monthly": 0}
     assert spark.read.parquet(flat).count() == n1
+
+
+def test_convert_uri_csv_dir_with_manifest(spark, tmp_path):
+    """With a manifest, a ``file://`` input dir converts like the plain
+    path: one Hadoop-FS listing serves both modes."""
+    csv_dir = _write_csvs(tmp_path)
+    runs = {}
+    for name, src in (("plain", csv_dir), ("uri", "file://" + csv_dir)):
+        out = tmp_path / name
+        runs[name] = gdelt_csv.convert(
+            spark, src, str(out / "f"), historical_dir=str(out / "h"),
+            manifest_path=str(out / "m"),
+        )
+    assert runs["uri"] == runs["plain"] == {
+        "daily": 200, "corrupt": 0, "yearly": 200, "monthly": 200,
+    }
+
+
+def test_convert_manifest_with_plain_local_paths_marks_files_processed(
+    spark, tmp_path
+):
+    """A manifest recorded with plain local paths (``/…/x.CSV``) still
+    marks those files processed now that the listing yields ``file:/…``
+    names; otherwise a re-run would append every file a second time."""
+    import os
+
+    csv_dir = _write_csvs(tmp_path)
+    mani = str(tmp_path / "m")
+    lake.mark_processed(
+        spark, mani, sorted(os.path.join(csv_dir, f) for f in os.listdir(csv_dir))
+    )
+    flat = str(tmp_path / "f")
+    counts = gdelt_csv.convert(
+        spark, csv_dir, flat, historical_dir=str(tmp_path / "h"), manifest_path=mani
+    )
+    assert counts == {"daily": 0, "corrupt": 0, "yearly": 0, "monthly": 0}
+    assert not os.path.exists(flat)
 
 
 def test_manifest_idempotency(spark, tmp_path):
@@ -428,26 +499,26 @@ def test_compact_parquet_spares_files_landing_mid_compaction(
     """Concurrent-appender safety: a file that lands AFTER the snapshot
     listing (e.g. a streaming micro-batch) is neither read nor deleted — it
     survives the compaction alongside the compacted output."""
-    import os as _os
-
     p = str(tmp_path / "lake")
     spark.range(0, 1_000).repartition(10).write.parquet(p)
 
-    real_getsize = _os.path.getsize
+    real_list_visible = lake.list_visible
     fired = {"done": False}
 
-    def getsize_dropping_late_file(f):
+    def list_visible_dropping_late_file(spark_, path):
         # simulate a micro-batch landing in the race window between the
         # file-listing snapshot and the deletes
+        listed = real_list_visible(spark_, path)
         if not fired["done"]:
             fired["done"] = True
             spark.range(5_000, 5_100).coalesce(1).write.mode("append").parquet(p)
-        return real_getsize(f)
+        return listed
 
-    monkeypatch.setattr("os.path.getsize", getsize_dropping_late_file)
+    monkeypatch.setattr(lake, "list_visible", list_visible_dropping_late_file)
     rep = lake.compact_parquet(spark, p, target_file_mb=128)
     monkeypatch.undo()
 
+    assert fired["done"]
     assert rep["files_before"] == 10
     out = spark.read.parquet(p)
     assert out.count() == 1_100  # 1000 compacted + 100 late, nothing lost

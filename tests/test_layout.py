@@ -76,6 +76,18 @@ def test_flat_directory_is_a_single_unnamed_leaf(spark, tmp_path):
     assert results[0].partition == "" and results[0].files_after == 1
 
 
+def test_compact_uri_root(spark, tmp_path):
+    """A ``file://`` root is walked and compacted through the Hadoop
+    FileSystem like the plain path."""
+    path = str(tmp_path / "flat")
+    spark.range(100).repartition(4).write.parquet(path)
+    results = compact_partitions(spark, "file://" + path, target_file_mb=1024)
+    assert [(r.partition, r.files_before, r.files_after) for r in results] == [
+        ("", 4, 1)
+    ]
+    assert sorted(r.id for r in spark.read.parquet(path).collect()) == list(range(100))
+
+
 def test_report_dataframe_shape(spark, lake):
     path, _ = lake
     rep = compaction_report(

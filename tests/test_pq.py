@@ -899,6 +899,57 @@ def test_residual_index_roundtrip_append_and_search(spark, tmp_path):
     assert got == want
 
 
+@pytest.mark.parametrize("residual", [False, True])
+def test_append_detects_refit_commit_after_merge(spark, tmp_path, monkeypatch, residual):
+    """A version committed between the batch's merge and the re-resolve of
+    the live root means the batch landed in a superseded version: the
+    append must raise, for a raw and a residual index alike."""
+    from gdelt_2_0_event_database_pipeline_spark.operators.ivf import (
+        fit_ivf_centroids,
+    )
+    from gdelt_2_0_event_database_pipeline_spark.operators.pq import (
+        append_pq_index,
+        fit_residual_codebooks,
+        ivf_pq_encode_residual,
+        write_pq_index,
+    )
+    from gdelt_2_0_event_database_pipeline_spark.sources import lake
+    from gdelt_2_0_event_database_pipeline_spark.streaming import upsert
+
+    x = np.random.RandomState(3).randn(64, 8)
+    df = _vec_df(spark, range(64), x)
+    half = df.filter(F.col("vec_id") % 2 == 0)
+    rest = df.filter(F.col("vec_id") % 2 == 1).withColumn("ingest_day", F.lit("d1"))
+    path = str(tmp_path / "idx")
+    if residual:
+        cents = fit_ivf_centroids(df, k=2, iters=2)
+        books = fit_residual_codebooks(df, cents, m=2, ncodes=4, iters=2)
+        base = ivf_pq_encode_residual(half, books, cents)
+        extra = {"centroids": cents, "residual": True}
+    else:
+        books = fit_pq_codebooks(df, m=2, ncodes=4, iters=2)
+        base = pq_encode(half, books)
+        extra = {}
+    write_pq_index(
+        base.withColumn("ingest_day", F.lit("d0")), books, path,
+        partition_col="ingest_day", **extra,
+    )
+
+    real_merge = upsert.merge_upsert_batch
+    committed = []
+
+    def merge_then_commit_a_version(*args, **kwargs):
+        real_merge(*args, **kwargs)
+        vdir = lake.version_dir(path, lake.next_version(spark, path))
+        lake.commit_version(spark, vdir)
+        committed.append(vdir)
+
+    monkeypatch.setattr(upsert, "merge_upsert_batch", merge_then_commit_a_version)
+    with pytest.raises(RuntimeError, match="raced a refit"):
+        append_pq_index(spark, path, rest)
+    assert len(committed) == 1
+
+
 def test_residual_guards(spark, emb, books, tmp_path):
     from gdelt_2_0_event_database_pipeline_spark.operators.pq import (
         fit_residual_codebooks,
