@@ -93,17 +93,6 @@ def dedup_against(df: DataFrame, ref: DataFrame, text_col: str = "text") -> Data
 
 
 # ---------------------------------------------------------------- minhash/LSH
-def minhash_signature(col: Column | str, num_hashes: int = 64, shingle_n: int = 3) -> Column:
-    """k-MinHash signature as array<long>: hash family h_i(s) =
-    xxhash64(s, i); signature[i] = min over shingles. Pure expression —
-    computed in the scan stage."""
-    shingles = F.array_distinct(char_ngrams(col, shingle_n))
-    return F.transform(
-        F.sequence(F.lit(0), F.lit(num_hashes - 1)),
-        lambda i: F.array_min(F.transform(shingles, lambda s: F.xxhash64(s, i))),
-    )
-
-
 def jaccard(a: Column, b: Column) -> Column:
     """Exact set Jaccard of two string arrays (ratio of ints → cross-engine
     bit-identical)."""
@@ -158,8 +147,7 @@ def _minhash_sig_frame(
 
     Signature via explode + k min-aggregates: flat, codegen-eligible, with
     map-side partial aggregation — the shuffle carries k longs per doc, not
-    shingle text. (The pure-expression minhash_signature() Column is kept
-    for composition, but nested interpreted HOFs are ~100× slower here.)
+    shingle text (nested interpreted HOFs would be ~100× slower here).
     Shared verbatim by the join paths AND the persisted signature index so
     their hash arithmetic can never drift."""
     if hash_family not in ("xxhash64", "md5"):

@@ -7,12 +7,13 @@ cells and exact-rescores inside them — corpus scanned once to assign cells,
 then every search touches ~nprobe/k of the data.
 
 Spark-first shape:
-- **fit**: Lloyd iterations as DataFrame aggregations. Centroids are tiny
-  (k×dim floats) so they round-trip through the driver each iteration and
-  enter the next plan as literals — no MLlib model object, fully
-  deterministic (hash-seeded init, fixed iteration count).
-- **search**: cell assignment is a pure expression against literal
-  centroids (map-only); the probe join is an equi-join on cell id.
+- **fit**: Lloyd iterations in driver-side numpy on a hash-ranked bounded
+  sample (``pq.fit_pq_codebooks`` with one subspace) — fully
+  deterministic, no MLlib model object; the corpus never leaves the
+  executors.
+- **search**: corpus cells come from ``assign_cells`` (or from an at-rest
+  assignment), query probes from ``probe_assignments``; the probe join is
+  an equi-join on cell id.
 
 Sign-LSH vs IVF: LSH is stateless/streaming-friendly; IVF adapts to the
 data distribution (clustered corpora get far better recall at the same
@@ -35,21 +36,23 @@ clustered corpora beat it at the same fraction, pinned by
 pipeline; the curve-derived default lands ≥0.75 even on uniform data, and
 ``tests/test_ivf.py::test_default_nprobe_recall_sf01`` re-measures it.
 
-Two assignment paths, measured trade-off:
-- ``nearest_cells`` — pure expression against literal centroids, map-only
-  (zero shuffles, zero extra stages). Interpreted HOF folds cost
-  ~k×dim×2 µs per row, which WINS below ~10⁵ rows where distributed stage
-  latency (each extra stage ≈ 0.5 s on local[32]) dominates compute.
-- ``assign_cells`` — posexplode + broadcast weight-table join + one wide
-  codegen aggregate (k conditional dot sums), argmin at expression level.
-  ONE shuffle of (id, k dots); this is the ≥10⁶-row path where per-row
-  interpreter cost would dominate. Equality of the two paths is pinned by
-  ``tests/test_ivf.py::test_assignment_paths_agree``.
+One nearest-code rule (argmin |c|² − 2·v·c, lower id on ties), spelled
+once per execution shape. The coarse quantizer is a one-subspace PQ
+codebook (Jégou et al. 2011, IVFADC), so IVF and ``pq.py`` share:
+- ``nearest_codes`` — posexplode + broadcast weight-table join + one
+  codegen groupBy(id, sub) of conditional dot sums, argmin at expression
+  level: the large-corpus path behind ``assign_cells`` and
+  ``pq.pq_encode``.
+- ``nearest_code_expr`` — the same scores as one map-side HOF
+  expression over literal codebooks, for small batches where per-stage
+  latency beats per-row interpreter cost (``pq.pq_encode_mapside`` and
+  the IVF-PQ append's cell). Bit-identical to ``nearest_codes``; pinned
+  by ``tests/test_pq.py::test_nearest_code_kernels_bit_parity``.
+- ``probe_assignments`` — numpy, for bounded driver-side sets: query
+  probes, the Lloyd steps of every fit, the residual fit's cells.
 """
 
 from __future__ import annotations
-
-from typing import Sequence
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
@@ -98,34 +101,126 @@ def nprobe_for_recall(n_cells: int, recall_target: float = 0.75) -> int:
 
 def well_formed_vectors(df: DataFrame, vec_col: str = "embedding") -> DataFrame:
     """Rows whose vector is usable for distance math (non-NULL, non-empty).
-    Both assignment paths require this; filtering explicitly keeps their
-    outputs row-aligned (``assign_cells`` silently drops such rows,
-    ``nearest_cells`` emits a degenerate cell for them)."""
+    Every nearest-code kernel below applies it, so search paths that
+    filter their own sides with it see the same row sets as the cells
+    and codes they join against."""
     return df.filter(F.col(vec_col).isNotNull() & (F.size(vec_col) > 0))
 
 
-def _sq_dist_to(vec: Column, center: Sequence[float]) -> Column:
-    carr = F.array(*[F.lit(float(w)) for w in center])
-    return F.aggregate(
-        F.zip_with(vec, carr, lambda x, w: (x - w) * (x - w)),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
+def _assert_size(df: DataFrame, col: str, expected: int, what: str) -> DataFrame:
+    """Fail LOUDLY (job error) if any row's array column has the wrong
+    length, instead of the silent NULL-scores/truncated-codes degradation
+    a mismatched corpus would otherwise produce. The assert lives inside
+    a filter condition so column pruning cannot drop it; cost is one
+    comparison per row."""
+    return df.filter(
+        F.coalesce(
+            F.assert_true(
+                F.size(F.col(col)) == expected,
+                F.concat(
+                    F.lit(f"{what}: expected {col} of length {expected}, got "),
+                    F.size(F.col(col)).cast("string"),
+                ),
+            ),
+            F.lit(True),
+        )
     )
 
 
-def nearest_cells(vec: Column, centroids: list[list[float]], nprobe: int = 1) -> Column:
-    """array<int> of the ``nprobe`` nearest centroid ids (ascending distance;
-    ties break toward the lower id via the packed sort key)."""
-    dists = F.array(
+def _check_codebooks(codebooks) -> tuple[int, int, int]:
+    """(m, ncodes, subdim) with rectangularity validated."""
+    try:
+        m = len(codebooks)
+        ncodes = len(codebooks[0]) if m else 0
+        subdim = len(codebooks[0][0]) if m and ncodes else 0
+    except TypeError as e:  # None / non-sequence from a corrupt sidecar
+        raise ValueError(f"malformed codebooks: {e}") from None
+    if m == 0 or ncodes == 0 or subdim == 0:
+        raise ValueError("codebooks must be non-empty m×ncodes×subdim")
+    for cb in codebooks:
+        if len(cb) != ncodes or any(len(c) != subdim for c in cb):
+            raise ValueError("codebooks must be rectangular m×ncodes×subdim")
+    return m, ncodes, subdim
+
+
+def nearest_codes(
+    df: DataFrame, codebooks, id_col: str, vec_col: str, what: str
+) -> DataFrame:
+    """(__eid__, __sub__, __code__, __csq__): one row per (vector,
+    subspace) with the nearest code id and its |c|² — the codegen
+    nearest-code kernel behind both :func:`assign_cells` (one subspace)
+    and ``pq.pq_encode`` (m subspaces).
+
+    posexplode → broadcast (pos → sub, code, weight) join → one codegen
+    groupBy(id, sub) of ``ncodes`` conditional dot sums → argmin of
+    |c|² − 2·v_sub·c at expression level (|v_sub|² is row-constant, so
+    it cannot move the argmin), lower code id on ties. Each id's exploded
+    rows stay in position order inside one partial aggregate, which is
+    what lets :func:`nearest_code_expr` fold the same dots bit-for-bit.
+    Grouping by (id, sub) keeps the expression tree ncodes-sized at any m.
+
+    Rows with NULL/empty vectors are dropped (``well_formed_vectors``);
+    a vector whose length is not m×subdim fails the job with an error
+    naming ``what``."""
+    m, ncodes, subdim = _check_codebooks(codebooks)
+    spark = df.sparkSession
+    wtab = spark.createDataFrame(
+        [
+            (s * subdim + j, s, c, float(w))
+            for s, cb in enumerate(codebooks)
+            for c, cent in enumerate(cb)
+            for j, w in enumerate(cent)
+        ],
+        "__pos__ int, __sub__ int, __code__ int, __w__ double",
+    )
+    # per-sub |c|² lookup rides the same broadcast pattern as data, not a
+    # literal tree: (sub, array of ncodes squared norms)
+    csq_df = spark.createDataFrame(
+        [
+            (s, [float(sum(w * w for w in cent)) for cent in cb])
+            for s, cb in enumerate(codebooks)
+        ],
+        "__sub__ int, __sq__ array<double>",
+    )
+    persub = (
+        _assert_size(well_formed_vectors(df, vec_col), vec_col, m * subdim, what)
+        .select(
+            F.col(id_col).alias("__eid__"),
+            F.posexplode(_as_double(vec_col)).alias("__pos__", "__val__"),
+        )
+        .join(F.broadcast(wtab), "__pos__")
+        # one subspace groups by id alone (a literal key is dropped by the
+        # optimizer): the output then stays hash-partitioned by id, so the
+        # joins on id that follow (cells ⋈ codes, residuals) add no shuffle
+        .groupBy("__eid__", (F.col("__sub__") if m > 1 else F.lit(0)).alias("__sub__"))
+        .agg(
+            *[
+                F.sum(
+                    F.when(
+                        F.col("__code__") == c, F.col("__val__") * F.col("__w__")
+                    )
+                ).alias(f"__d{c}__")
+                for c in range(ncodes)
+            ]
+        )
+        .join(F.broadcast(csq_df), "__sub__")
+    )
+    scores = F.array(
         *[
             F.struct(
-                _sq_dist_to(vec, c).alias("d"), F.lit(i).alias("cid")
+                (F.element_at("__sq__", c + 1) - 2 * F.col(f"__d{c}__")).alias("s"),
+                F.lit(c).alias("cid"),
             )
-            for i, c in enumerate(centroids)
+            for c in range(ncodes)
         ]
     )
-    ordered = F.array_sort(dists)  # struct sort: by d, then cid
-    return F.transform(F.slice(ordered, 1, nprobe), lambda s: s["cid"])
+    best = F.array_sort(scores).getItem(0).getField("cid")
+    return persub.select(
+        "__eid__",
+        "__sub__",
+        best.alias("__code__"),
+        F.element_at("__sq__", best + F.lit(1)).alias("__csq__"),
+    )
 
 
 def assign_cells(
@@ -133,133 +228,74 @@ def assign_cells(
     centroids: list[list[float]],
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    nprobe: int = 1,
 ) -> DataFrame:
-    """(id, cell) pairs: each row's ``nprobe`` nearest centroids (ascending
-    distance, lower cell id on ties) — the large-corpus assignment path
-    (see module doc). One shuffle: the exploded (id, pos, val) view joins
-    the broadcast (cell, pos, weight) table and aggregates k conditional
-    dot sums per id in a single codegen groupBy; |v|² is row-constant so
-    argmin |v-c|² reduces to argmin(|c|² - 2·v·c) over k small columns.
-
-    Precondition: vectors must be non-NULL, non-empty, and dim-consistent.
-    Rows with NULL/empty vectors produce no posexplode output and are
-    DROPPED from the result (``nearest_cells`` would instead emit a
-    degenerate assignment for them) — callers filter with
-    ``well_formed_vectors`` first. Tie caveat: this path scores with
-    |c|² − 2·v·c while ``nearest_cells`` folds |v−c|² exactly; on
-    floating-point near-ties the argmin can differ between paths."""
-    k = len(centroids)
-    spark = df.sparkSession
-    cent = spark.createDataFrame(
-        [
-            (cid, j, float(w))
-            for cid, c in enumerate(centroids)
-            for j, w in enumerate(c)
-        ],
-        "cell int, __pos__ int, __w__ double",
-    )
-    csq = [float(sum(w * w for w in c)) for c in centroids]
-    wide = (
-        df.select(
-            F.col(id_col).alias("__aid__"),
-            F.posexplode(_as_double(vec_col)).alias("__pos__", "__val__"),
-        )
-        .join(F.broadcast(cent), "__pos__")
-        .groupBy("__aid__")
-        .agg(
-            *[
-                F.sum(
-                    F.when(F.col("cell") == i, F.col("__val__") * F.col("__w__"))
-                ).alias(f"__d{i}__")
-                for i in range(k)
-            ]
-        )
-    )
-    scores = F.array(
-        *[
-            F.struct(
-                (F.lit(csq[i]) - 2 * F.col(f"__d{i}__")).alias("s"),
-                F.lit(i).alias("cid"),
-            )
-            for i in range(k)
-        ]
-    )
-    picked = F.transform(F.slice(F.array_sort(scores), 1, nprobe), lambda s: s["cid"])
-    return wide.select(
-        F.col("__aid__").alias(id_col), F.explode(picked).alias("cell")
-    )
+    """(id, cell) pairs: each row's nearest centroid — the coarse
+    quantizer as a one-subspace codebook through :func:`nearest_codes`
+    (one shuffle of (id, k dots), lower cell id on ties), so a cell is
+    exactly ``codes[0]`` of ``pq.pq_encode(df, [centroids])``. NULL/empty
+    vectors are dropped; a vector of the wrong length fails the job."""
+    return nearest_codes(
+        df, [centroids], id_col=id_col, vec_col=vec_col, what="assign_cells"
+    ).select(F.col("__eid__").alias(id_col), F.col("__code__").alias("cell"))
 
 
-def nearest_cells_expr_mapside(
-    centroids: list[list[float]], vec: Column, nprobe: int = 1
-) -> Column:
-    """``array<int>`` of the ``nprobe`` nearest cell ids over an
-    already-cast ``array<double>`` vector Column — :func:`assign_cells`'s
-    scoring as a reusable map-side expression: the same ``|c|² − 2·v·c``
-    score (NOT ``nearest_cells``'s |v−c|² fold — the documented two-path
-    tie caveat), dots folded over ascending positions exactly as the
-    posexplode path's single-partial ``F.sum``, same array_sort tie
-    rule. Centroids ride as ONE nested array literal, so the plan stays
-    O(1) nodes regardless of k×dim."""
-    k = len(centroids)
-    # one F.expr parse instead of one py4j call per literal cell (~520
-    # calls at k=8, d=64 — the guide §4 construction cost); identical
-    # CreateArray-of-DOUBLE-Literals tree, bit-exact D-literal spelling,
-    # pinned by the mapside==assign_cells differential in tests/test_ivf.py
-    cents = lit_arr(centroids)
-    csq = lit_arr([sum(w * w for w in c) for c in centroids])
+def nearest_code_expr(codebooks, vec: Column) -> Column:
+    """``array<struct<s, cid, csq>>`` over an already-cast
+    ``array<double>`` vector Column: per subspace, the nearest code's
+    score, id and |c|² — :func:`nearest_codes` as a map-side expression
+    for small batches (zero shuffles, zero broadcast builds). The same
+    |c|² − 2·v_sub·c score against the same Python-computed |c|², dots
+    folded over ascending positions exactly as the codegen kernel's
+    single-partial ``F.sum``, and array_sort's (score, id) order for the
+    lower-id tie rule, so the two agree bit-for-bit. The codebooks ride
+    as ONE nested array literal parsed in one ``F.expr`` call (one py4j
+    call per literal cell would cost seconds per plan), and the nested
+    HOF lambdas are single plan nodes, so analysis is O(1) in m×ncodes;
+    lambdas evaluate outside whole-stage codegen, which is why large
+    corpora keep the codegen kernel."""
+    m, ncodes, subdim = _check_codebooks(codebooks)
+    cb = lit_arr(codebooks)
+    csq = lit_arr(
+        [[sum(w * w for w in cent) for cent in books] for books in codebooks]
+    )
 
-    def _dot(cent):
+    def _dot(xs, cent):
         return F.aggregate(
-            F.zip_with(vec, cent, lambda a, b: a * b),
+            F.zip_with(xs, cent, lambda a, b: a * b),
             F.lit(0.0),
             lambda acc, x: acc + x,
         )
 
-    scores = F.transform(
-        F.sequence(F.lit(0), F.lit(k - 1)),
-        lambda i: F.struct(
-            (
-                F.element_at(csq, i + 1) - 2 * _dot(F.element_at(cents, i + 1))
-            ).alias("s"),
-            i.alias("cid"),
-        ),
-    )
-    return F.transform(
-        F.slice(F.array_sort(scores), 1, nprobe), lambda s: s["cid"]
-    )
+    def _per_sub(v):
+        def _best(s):
+            def _scored(c):
+                c_sq = F.element_at(F.element_at(csq, s + 1), c + 1)
+                sub = F.slice(v, s * F.lit(subdim) + F.lit(1), F.lit(subdim))
+                return F.struct(
+                    (c_sq - 2 * _dot(sub, F.element_at(F.element_at(cb, s + 1), c + 1))).alias("s"),
+                    c.alias("cid"),
+                    c_sq.alias("csq"),
+                )
 
+            return F.array_sort(
+                F.transform(F.sequence(F.lit(0), F.lit(ncodes - 1)), _scored)
+            ).getItem(0)
 
-def assign_cells_mapside(
-    df: DataFrame,
-    centroids: list[list[float]],
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    nprobe: int = 1,
-) -> DataFrame:
-    """Map-only twin of :func:`assign_cells` for SMALL batches (the
-    streaming-append hot path): zero shuffles, zero per-batch broadcast
-    builds — :func:`nearest_cells_expr_mapside` over the cast vector.
-    BIT-IDENTICAL to ``assign_cells`` by construction (see the
-    expression helper's docstring); pinned by the differential test in
-    tests/test_ivf.py. Same ``well_formed_vectors`` precondition
-    (NULL/empty rows dropped)."""
-    picked = nearest_cells_expr_mapside(
-        centroids, F.col(vec_col).cast("array<double>"), nprobe
-    )
-    return well_formed_vectors(df, vec_col).select(
-        F.col(id_col), F.explode(picked).alias("cell")
-    )
+        return F.transform(F.sequence(F.lit(0), F.lit(m - 1)), _best)
+
+    # the vector enters as a lambda variable, so it is evaluated once per
+    # row; an expression captured inside the lambdas (e.g. the caller's
+    # cast) would be re-evaluated for every (subspace, code)
+    return F.transform(F.array(vec), _per_sub).getItem(0)
 
 
 def probe_assignments(vectors, centroids: list[list[float]], nprobe: int):
-    """Per query vector, its ``nprobe`` nearest centroid ids — ascending
-    |q-c|², stable ties toward the lower cell id (the same rule as
-    ``nearest_cells``' packed struct sort). Driver-side numpy over the
-    bounded query set; the ONE probe rule shared by ``ivf_topk`` and
-    ``pq.ivf_pq_topk`` so the two search paths can never desynchronize.
-    Returns an (n_queries × nprobe) integer matrix."""
+    """Per vector, its ``nprobe`` nearest centroid ids as an (n × nprobe)
+    integer matrix — the numpy nearest-code rule: ascending
+    |c|² − 2·v·c (+ |v|²), lower id on ties. Driver-side over bounded
+    inputs: the query probes of ``ivf_topk`` / ``pq.ivf_pq_topk``, the
+    Lloyd steps of ``pq.fit_pq_codebooks`` (and so of
+    :func:`fit_ivf_centroids`) and the residual fit's cell argmin."""
     import numpy as np
 
     qm = np.asarray(vectors, dtype=np.float64)
@@ -269,7 +305,39 @@ def probe_assignments(vectors, centroids: list[list[float]], nprobe: int):
         + (cm * cm).sum(axis=1)[None, :]
         - 2.0 * (qm @ cm.T)
     )
+    if nprobe == 1:
+        # argmin returns the first minimum — the stable sort's head, in
+        # O(k) per row instead of O(k log k) inside every Lloyd step
+        return d2.argmin(axis=1)[:, None]
     return d2.argsort(axis=1, kind="stable")[:, :nprobe]
+
+
+def query_probe_cells(
+    query_ids, vectors, centroids, nprobe: int, query_probes
+) -> list[list[int]]:
+    """Per query (in ``query_ids`` order), the probed cell ids: from the
+    persisted ``query_probes`` (query id, cell) frame when given —
+    bounded, collected driver-side — else :func:`probe_assignments`. A
+    probes frame that lacks any query raises instead of letting that
+    query silently vanish from the results."""
+    if not query_ids:
+        return []
+    if query_probes is None:
+        return [
+            [int(c) for c in row]
+            for row in probe_assignments(vectors, centroids, nprobe)
+        ]
+    pm: dict = {}
+    for r in query_probes.collect():  # bounded: queries × nprobe rows
+        pm.setdefault(r[0], []).append(int(r[1]))
+    missing = [q for q in query_ids if q not in pm]
+    if missing:
+        raise ValueError(
+            f"query_probes has no rows for {len(missing)} query id(s) "
+            f"(e.g. {missing[:5]!r}) — regenerate the probes artifact "
+            "or pass query_probes=None to assign probes inline"
+        )
+    return [pm[q] for q in query_ids]
 
 
 def fit_ivf_centroids(
@@ -281,58 +349,25 @@ def fit_ivf_centroids(
     seed: int = 42,
     fit_sample_n: int | None = 100_000,
 ) -> list[list[float]]:
-    """Deterministic k-means-lite: init = k rows ranked by xxhash64(id, seed)
-    (reproducible on any partitioning), then ``iters`` Lloyd steps. Each step
-    is one groupBy over the fit set with dim avg-aggregates; centroids travel
-    driver↔plan as literals. Empty cells keep their previous centroid.
+    """The coarse quantizer: a one-subspace PQ codebook of ``k``
+    centroids, ``pq.fit_pq_codebooks(m=1, ncodes=k)[0]`` — deterministic
+    k-means-lite (init = the k rows ranked lowest by xxhash64(id, seed),
+    then ``iters`` Lloyd steps; empty cells keep their previous centroid).
 
     ``fit_sample_n`` caps the FIT set with the hash-ranked deterministic
     sampler (TakeOrderedAndProject — no full shuffle): a coarse quantizer
     needs a representative sample, not the corpus, so at 10⁹ rows the fit
     touches ≤100k vectors while cell ASSIGNMENT of the full corpus stays on
     the codegen ``assign_cells`` path. ``None`` fits on everything that
-    fits the driver (local experiments).
+    fits the driver (local experiments). The Lloyd steps run driver-side
+    in numpy on that bounded sample — one collect beats ``iters`` Spark
+    jobs each carrying a k×dim-literal tree through analysis/codegen."""
+    from .pq import fit_pq_codebooks
 
-    The Lloyd iterations run DRIVER-SIDE on the collected sample (numpy,
-    vectorized): the fit set is bounded by construction (≤100k×dim doubles
-    ≈ 50 MB at dim 64), and one bounded collect + local matrix math beats
-    ``iters`` separate Spark jobs each carrying a k×dim-literal expression
-    tree through analysis/codegen — plan-build latency dominated the fit at
-    every scale since compute is capped. This is model fitting on a bounded
-    sample, not a data-sized driver loop; the corpus itself never leaves
-    the executors."""
-    import numpy as np
-
-    df = well_formed_vectors(df, vec_col)
-    v = _as_double(vec_col)
-    sel = df.select(
-        v.alias("__v__"), F.xxhash64(F.col(id_col), F.lit(seed)).alias("__h__")
-    )
-    if fit_sample_n is not None:
-        # hash-ranked top-n: deterministic on any partitioning, executes as
-        # TakeOrderedAndProject (per-partition heap, no full shuffle/sort)
-        sel = sel.orderBy("__h__").limit(fit_sample_n)
-    rows = sel.collect()
-    if not rows:
-        raise ValueError("cannot fit IVF on an empty corpus")
-    # fix the row order locally (hash asc) so init AND summation order are
-    # partitioning-independent — numpy reductions are then bit-reproducible
-    rows.sort(key=lambda r: r["__h__"])
-    x = np.asarray([r["__v__"] for r in rows], dtype=np.float64)
-    cents = x[:k].copy()  # init = k hash-lowest rows (same rule as before)
-    k_eff = cents.shape[0]
-
-    x_sq = (x * x).sum(axis=1)
-    for _ in range(iters):
-        # argmin_c |v-c|² = argmin_c (|c|² - 2 v·c) + |v|²; ties -> lower cid
-        # (np.argmin picks the first minimum, matching nearest_cells)
-        d2 = x_sq[:, None] + (cents * cents).sum(axis=1)[None, :] - 2.0 * (x @ cents.T)
-        assign = d2.argmin(axis=1)
-        for c in range(k_eff):
-            members = x[assign == c]
-            if len(members):  # empty cells keep their previous centroid
-                cents[c] = members.mean(axis=0)
-    return [list(map(float, c)) for c in cents]
+    return fit_pq_codebooks(
+        df, vec_col=vec_col, id_col=id_col, m=1, ncodes=k, iters=iters,
+        seed=seed, fit_sample_n=fit_sample_n,
+    )[0]
 
 
 def ivf_topk(
@@ -377,20 +412,20 @@ def ivf_topk(
     aggregate — one bounded shuffle of (id, k dots), no per-row interpreted
     k×dim fold, the shape that survives a 10⁹-row corpus); the QUERY side —
     small by construction (it is broadcast into the probe join regardless) —
-    is collected and probe-assigned driver-side with numpy. Building the
-    probe cells as data instead of a ``nearest_cells`` expression keeps
-    k×dim×nprobe literals out of the plan: analysis + codegen of that
-    literal tree was ~3 s of one-time latency per distinct codebook, for
-    zero distributed work (the same bounded-collect reasoning as
-    ``fit_ivf_centroids``). Both sides are pre-filtered to well-formed
-    vectors so the paths see identical row sets (see ``assign_cells``
-    precondition)."""
+    is collected and probe-assigned driver-side with numpy
+    (``query_probe_cells``). Building the probe cells as data instead of
+    a literal-centroid expression keeps k×dim×nprobe literals out of the
+    plan: analysis + codegen of that literal tree was ~3 s of one-time
+    latency per distinct codebook, for zero distributed work (the same
+    bounded-collect reasoning as ``fit_ivf_centroids``). Both sides are
+    pre-filtered to well-formed vectors so the paths see identical row
+    sets."""
     if nprobe is None:
         nprobe = nprobe_for_recall(len(centroids), recall_target)
     corpus_wf = well_formed_vectors(corpus, vec_col)
     if corpus_cells is None:
         corpus_cells = assign_cells(
-            corpus_wf, centroids, id_col=id_col, vec_col=vec_col, nprobe=1
+            corpus_wf, centroids, id_col=id_col, vec_col=vec_col
         )
     cells = corpus_cells.select(
         F.col(id_col).alias("__cell_id__"), F.col("cell").alias("__cell__")
@@ -414,41 +449,21 @@ def ivf_topk(
             T.StructField("__cell__", T.IntegerType()),
         ]
     )
-    if not q_rows:
-        q = spark.createDataFrame([], q_schema)
-    elif query_probes is not None:
-        pm: dict = {}
-        for r in query_probes.collect():  # bounded: queries × nprobe rows
-            pm.setdefault(r[0], []).append(int(r[1]))
-        missing = [r["query_id"] for r in q_rows if r["query_id"] not in pm]
-        if missing:
-            # stale/partial probes artifact → loud failure, not vanishing
-            # queries (r13 ADVICE; same guard as pq.ivf_pq_topk)
-            raise ValueError(
-                f"query_probes has no rows for {len(missing)} query id(s) "
-                f"(e.g. {missing[:5]!r}) — regenerate the probes artifact "
-                "or pass query_probes=None to assign probes inline"
-            )
-        q = spark.createDataFrame(
-            [
-                (r["query_id"], list(r["__qv__"]), cell)
-                for r in q_rows
-                for cell in pm.get(r["query_id"], [])
-            ],
-            q_schema,
-        )
-    else:
-        probes = probe_assignments(
-            [r["__qv__"] for r in q_rows], centroids, nprobe
-        )
-        q = spark.createDataFrame(
-            [
-                (r["query_id"], list(r["__qv__"]), int(cell))
-                for r, row in zip(q_rows, probes)
-                for cell in row
-            ],
-            q_schema,
-        )
+    probes = query_probe_cells(
+        [r["query_id"] for r in q_rows],
+        [r["__qv__"] for r in q_rows],
+        centroids,
+        nprobe,
+        query_probes,
+    )
+    q = spark.createDataFrame(
+        [
+            (r["query_id"], list(r["__qv__"]), cell)
+            for r, cells in zip(q_rows, probes)
+            for cell in cells
+        ],
+        q_schema,
+    )
 
     scored = (
         c.alias("c")

@@ -46,6 +46,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.sqltext import check_expr_col, sql_dots
+from .ivf import probe_assignments
 from .pq import _collect_fit_sample, _fit_pq_on_matrix
 
 
@@ -71,18 +72,18 @@ def _decode(codes, cb):
 
 
 def _encode_matrix(x, cb):
-    """Per-subspace nearest-code ids for a local matrix (the numpy twin
-    of ``pq_encode``, first-minimum ties)."""
+    """Per-subspace nearest-code ids for a local matrix — the numpy twin
+    of ``pq_encode``: ``ivf.probe_assignments`` on each subspace."""
     import numpy as np
 
     m, ncodes, subdim = cb.shape
-    xs = x.reshape(x.shape[0], m, subdim)
-    d2 = (
-        (xs * xs).sum(axis=2)[:, :, None]
-        + (cb * cb).sum(axis=2)[None, :, :]
-        - 2.0 * np.einsum("nsd,scd->nsc", xs, cb)
+    return np.stack(
+        [
+            probe_assignments(x[:, s * subdim : (s + 1) * subdim], cb[s], 1)[:, 0]
+            for s in range(m)
+        ],
+        axis=1,
     )
-    return d2.argmin(axis=2)
 
 
 def fit_opq(

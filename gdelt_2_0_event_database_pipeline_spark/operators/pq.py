@@ -20,17 +20,18 @@ Spark-first shape, mirroring ``ivf.py``'s adjudicated patterns:
 
 - **fit** (``fit_pq_codebooks``): per-subspace Lloyd on a hash-ranked
   bounded sample, driver-side numpy — model fitting on a ≤100k-row
-  sample, not a data-sized driver loop (same reasoning as
-  ``fit_ivf_centroids``; the corpus never leaves the executors).
-- **encode** (``pq_encode``): posexplode + broadcast weight-table join +
-  a codegen groupBy of ncodes conditional dot sums per (id, subspace),
-  argmin at expression level, then a groupBy(id) that packs the m
-  sub-codes — the ``assign_cells`` shape generalized to m subspaces,
-  grouped by (id, sub) so the expression tree stays ncodes-sized (see
-  ``pq_encode`` doc for the measured wide-vs-tall trade). Two bounded
-  shuffles, no per-row interpreted k×dim fold, so it survives a 10⁹-row
-  corpus. |v_sub|² is constant per row within a subspace, so
-  argmin |v_sub − c|² reduces to argmin(|c|² − 2·v_sub·c).
+  sample, not a data-sized driver loop (the corpus never leaves the
+  executors). The IVF coarse quantizer is this fit with one subspace
+  (``ivf.fit_ivf_centroids``).
+- **encode**: the nearest-code rule (argmin |c|² − 2·v_sub·c, lower code
+  id on ties; |v_sub|² is row-constant) lives once per execution shape
+  in ``ivf.py``, shared with the coarse quantizer: ``pq_encode`` runs
+  the codegen kernel ``ivf.nearest_codes`` (posexplode + broadcast
+  weight join + groupBy(id, sub) argmin — the ≥10⁶-row path, no per-row
+  interpreted k×dim fold) and adds a groupBy(id) that packs the m
+  sub-codes; ``pq_encode_mapside`` packs the map-side
+  ``ivf.nearest_code_expr`` for small append batches; the Lloyd steps
+  and the residual fit assign with numpy ``ivf.probe_assignments``.
 - **search** (``pq_topk``): asymmetric distance computation (ADC). Each
   query precomputes an m×ncodes lookup table of subvector dot products
   driver-side (bounded — the query set is broadcast anyway); scoring a
@@ -69,50 +70,21 @@ its recall floor, and pins encode == numpy-reference equality.
 
 from __future__ import annotations
 
-
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..functions.sqltext import lit_arr
 from ..sources import lake
 from ..util import hadoop_fs
-from .ivf import well_formed_vectors
+from .ivf import (
+    _assert_size,
+    _check_codebooks,
+    nearest_code_expr,
+    nearest_codes,
+    probe_assignments,
+    query_probe_cells,
+    well_formed_vectors,
+)
 from .similarity import _as_double, cosine
-
-def _assert_size(df: DataFrame, col: str, expected: int, what: str) -> DataFrame:
-    """Fail LOUDLY (job error) if any row's array column has the wrong
-    length, instead of the silent NULL-scores/truncated-codes degradation
-    a mismatched corpus would otherwise produce. The assert lives inside
-    a filter condition so column pruning cannot drop it; cost is one
-    comparison per row."""
-    return df.filter(
-        F.coalesce(
-            F.assert_true(
-                F.size(F.col(col)) == expected,
-                F.concat(
-                    F.lit(f"{what}: expected {col} of length {expected}, got "),
-                    F.size(F.col(col)).cast("string"),
-                ),
-            ),
-            F.lit(True),
-        )
-    )
-
-
-def _check_codebooks(codebooks) -> tuple[int, int, int]:
-    """(m, ncodes, subdim) with rectangularity validated."""
-    try:
-        m = len(codebooks)
-        ncodes = len(codebooks[0]) if m else 0
-        subdim = len(codebooks[0][0]) if m and ncodes else 0
-    except TypeError as e:  # None / non-sequence from a corrupt sidecar
-        raise ValueError(f"malformed codebooks: {e}") from None
-    if m == 0 or ncodes == 0 or subdim == 0:
-        raise ValueError("codebooks must be non-empty m×ncodes×subdim")
-    for cb in codebooks:
-        if len(cb) != ncodes or any(len(c) != subdim for c in cb):
-            raise ValueError("codebooks must be rectangular m×ncodes×subdim")
-    return m, ncodes, subdim
 
 
 def _collect_fit_sample(df, vec_col, id_col, seed, fit_sample_n):
@@ -139,7 +111,7 @@ def _fit_pq_on_matrix(x, m: int, ncodes: int, iters: int):
     """Per-subspace Lloyd over a local sample matrix — the deterministic
     k-means-lite kernel of ``fit_pq_codebooks`` (init = the ncodes
     hash-lowest rows' slices; empty cells keep their previous centroid;
-    first-minimum tie rule)."""
+    assignment by ``ivf.probe_assignments``, lower code id on ties)."""
     dim = x.shape[1]
     if dim % m:
         raise ValueError(f"dim {dim} not divisible by m={m}")
@@ -147,16 +119,10 @@ def _fit_pq_on_matrix(x, m: int, ncodes: int, iters: int):
     out = []
     for s in range(m):
         xs = x[:, s * subdim : (s + 1) * subdim]
-        xs_sq = (xs * xs).sum(axis=1)
         cents = xs[:ncodes].copy()
         k_eff = cents.shape[0]
         for _ in range(iters):
-            d2 = (
-                xs_sq[:, None]
-                + (cents * cents).sum(axis=1)[None, :]
-                - 2.0 * (xs @ cents.T)
-            )
-            assign = d2.argmin(axis=1)
+            assign = probe_assignments(xs, cents, 1)[:, 0]
             for c in range(k_eff):
                 members = xs[assign == c]
                 if len(members):
@@ -207,7 +173,7 @@ def fit_residual_codebooks(
     codebooks spend their 2^b codes on the within-cell geometry instead
     of re-describing the global placement the IVF stage already encodes.
     Same determinism contract as :func:`fit_pq_codebooks`; assignment
-    uses the first-minimum rule shared with ``assign_cells``. Pair with
+    uses ``ivf.probe_assignments``, the rule ``assign_cells`` shares. Pair with
     :func:`ivf_pq_encode_residual` / ``ivf_pq_topk(..., residual=True)``
     — residual codes are meaningless without the matching centroids."""
     import numpy as np
@@ -218,12 +184,7 @@ def fit_residual_codebooks(
         raise ValueError(
             f"centroid dim {cm.shape[1]} != vector dim {x.shape[1]}"
         )
-    d2 = (
-        (x * x).sum(axis=1)[:, None]
-        + (cm * cm).sum(axis=1)[None, :]
-        - 2.0 * (x @ cm.T)
-    )
-    resid = x - cm[d2.argmin(axis=1)]
+    resid = x - cm[probe_assignments(x, cm, 1)[:, 0]]
     return _fit_pq_on_matrix(resid, m, ncodes, iters)
 
 
@@ -239,77 +200,26 @@ def pq_encode(
     second pass; the cross-subspace dot terms are zero only in
     expectation, so this is the standard PQ-cosine approximation).
 
-    The large-corpus path (see module doc): posexplode + broadcast
-    (pos → sub, code, weight) table + a codegen groupBy of ``ncodes``
-    conditional dot sums PER (id, subspace), argmin at expression level,
-    then one groupBy(id) packing the m sub-codes into the codes array.
-    Grouping by (id, sub) instead of a single m×ncodes-wide groupBy(id)
-    keeps the expression tree ncodes-sized — the wide form's m×ncodes
-    aggregate columns cost ~9 s of Catalyst analysis + codegen per plan
-    at m=16/ncodes=16 and blow past JIT method limits; the extra
-    pack shuffle carries only m small-int rows per id, which is noise
-    next to the posexplode stage at any scale. Rows with NULL/empty
-    vectors are dropped (``well_formed_vectors`` precondition, as in
-    ``assign_cells``). Ties break toward the lower code id."""
-    m, ncodes, subdim = _check_codebooks(codebooks)
-    spark = df.sparkSession
-    weight_rows = [
-        (s * subdim + j, s, c, float(w))
-        for s, cb in enumerate(codebooks)
-        for c, cent in enumerate(cb)
-        for j, w in enumerate(cent)
-    ]
-    wtab = spark.createDataFrame(
-        weight_rows, "__pos__ int, __sub__ int, __code__ int, __w__ double"
-    )
-    # per-sub |c|² lookup rides the same broadcast pattern as data, not a
-    # literal tree: (sub, array of ncodes squared norms)
-    csq_df = spark.createDataFrame(
-        [
-            (s, [float(sum(w * w for w in cent)) for cent in cb])
-            for s, cb in enumerate(codebooks)
-        ],
-        "__sub__ int, __sq__ array<double>",
-    )
-
-    persub = (
-        _assert_size(well_formed_vectors(df, vec_col), vec_col, m * subdim, "pq_encode")
-        .select(
-            F.col(id_col).alias("__eid__"),
-            F.posexplode(_as_double(vec_col)).alias("__pos__", "__val__"),
-        )
-        .join(F.broadcast(wtab), "__pos__")
-        .groupBy("__eid__", "__sub__")
-        .agg(
-            *[
-                F.sum(
-                    F.when(
-                        F.col("__code__") == c, F.col("__val__") * F.col("__w__")
-                    )
-                ).alias(f"__d{c}__")
-                for c in range(ncodes)
-            ]
-        )
-        .join(F.broadcast(csq_df), "__sub__")
-    )
-    scores = F.array(
-        *[
-            F.struct(
-                (
-                    F.element_at("__sq__", c + 1) - 2 * F.col(f"__d{c}__")
-                ).alias("s"),
-                F.lit(c).alias("cid"),
-            )
-            for c in range(ncodes)
-        ]
-    )
-    best = F.array_sort(scores).getItem(0).getField("cid")
-    coded = persub.select(
+    The large-corpus path (see module doc): the shared codegen kernel
+    ``ivf.nearest_codes`` (one row per (id, subspace) with its nearest
+    code, lower code id on ties — the kernel ``assign_cells`` runs with
+    one subspace), then one groupBy(id) packing the m sub-codes into the
+    codes array. Grouping the kernel by (id, sub) instead of a single
+    m×ncodes-wide groupBy(id) keeps the expression tree ncodes-sized —
+    the wide form's m×ncodes aggregate columns cost ~9 s of Catalyst
+    analysis + codegen per plan at m=16/ncodes=16 and blow past JIT
+    method limits; the extra pack shuffle carries only m small-int rows
+    per id, which is noise next to the posexplode stage at any scale.
+    Rows with NULL/empty vectors are dropped; a vector of the wrong
+    length fails the job."""
+    coded = nearest_codes(
+        df, codebooks, id_col=id_col, vec_col=vec_col, what="pq_encode"
+    ).select(
         "__eid__",
         F.struct(
             F.col("__sub__").alias("sub"),
-            best.alias("code"),
-            F.element_at("__sq__", best + F.lit(1)).alias("csq"),
+            F.col("__code__").alias("code"),
+            F.col("__csq__").alias("csq"),
         ).alias("__sc__"),
     )
     packed = coded.groupBy("__eid__").agg(
@@ -332,107 +242,47 @@ def pq_encode_mapside(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     carry: tuple[str, ...] = (),
-    extra: dict | None = None,
 ) -> DataFrame:
     """Map-only twin of :func:`pq_encode` for SMALL batches — the
-    streaming-append hot path (r12 verdict item 3): zero shuffles, zero
-    per-batch broadcast builds, and an O(1)-node plan (the whole codebook
-    is ONE nested array literal indexed by HOF lambdas), so the fixed
-    per-micro-batch cost is milliseconds of analysis instead of the
+    streaming-append hot path: zero shuffles, zero per-batch broadcast
+    builds, and an O(1)-node plan (``ivf.nearest_code_expr``: the whole
+    codebook is ONE nested array literal indexed by HOF lambdas), so the
+    fixed per-micro-batch cost is milliseconds of analysis instead of the
     posexplode shape's two shuffle stages + broadcast per batch.
 
-    BIT-IDENTICAL to ``pq_encode`` by construction, not by luck: the dot
-    products fold val·w over ascending positions exactly as the
-    posexplode path's partial-aggregated ``F.sum`` does (one partial per
-    id, rows in position order), scores use the same
-    ``|c|² − 2·v·c`` expression against the same Python-computed ``|c|²``
-    values, ties pick the lowest code id, and ``vhat_sq`` folds the
-    chosen ``|c|²`` terms over ascending subspaces — so maintained
-    (append through here) == rebuild (posexplode path) holds exactly;
-    pinned by the differential test in tests/test_pq.py.
+    BIT-IDENTICAL to ``pq_encode``: the expression folds the same dots in
+    the same order as the codegen kernel and picks the same code, and
+    ``vhat_sq`` folds the chosen ``|c|²`` terms over ascending subspaces
+    as ``pq_encode``'s pack does — so maintained (append through here) ==
+    rebuild (posexplode path) holds exactly; pinned by the parity test in
+    tests/test_pq.py.
 
     Large corpora should keep :func:`pq_encode`: HOF lambdas evaluate
     outside whole-stage codegen, which loses to the codegen groupBy shape
     once the data — not the per-plan fixed cost — dominates.
 
     ``carry`` names input columns to pass through to the output (e.g. the
-    ingest partition), and ``extra`` maps output names to Columns
-    evaluated over the staged frame — the cast vector is available there
-    as ``__v__`` (``ivf.nearest_cell_expr`` composes here), so the whole
-    append batch (codes, vhat_sq, cell, partition) is ONE map stage with
-    no joins at all."""
-    m, ncodes, subdim = _check_codebooks(codebooks)
+    ingest partition, or a cell the caller computed with the same
+    expression), so the whole append batch is ONE map stage with no
+    joins at all."""
+    m, _, subdim = _check_codebooks(codebooks)
     wf = _assert_size(
         well_formed_vectors(df, vec_col), vec_col, m * subdim, "pq_encode"
     )
-    # nested-array literals parsed from SQL text in ONE F.expr round-trip:
-    # PySpark's F.lit(nested_list) recurses into array(*[lit(x)...]) — one
-    # py4j call per element, ~1.3k calls / ~1.5–2 s per append plan at
-    # m=16, ncodes=16, subdim=4 (measured; guide §4). The parsed tree is
-    # the identical CreateArray-of-DOUBLE-Literals, bit-exact via the
-    # D-literal spelling; pinned by the mapside==posexplode differential
-    # in tests/test_pq.py.
-    cb = lit_arr(codebooks)
-    csq = lit_arr(
-        [[sum(w * w for w in cent) for cent in books] for books in codebooks]
-    )
-
-    def _dot(xs, cent):
-        return F.aggregate(
-            F.zip_with(xs, cent, lambda a, b: a * b),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-
-    # nested HOF over (subspace, code) — a handful of lambda NODES total
-    # (lambdas iterate per element at runtime; they are single plan nodes,
-    # so analysis cost is O(1) in m×ncodes, unlike an unrolled tree).
-    # array_sort of (score, cid) structs == pq_encode's tie rule:
-    # lowest score, lowest code id on ties.
-    best = F.transform(
-        F.sequence(F.lit(0), F.lit(m - 1)),
-        lambda s: F.array_sort(
-            F.transform(
-                F.sequence(F.lit(0), F.lit(ncodes - 1)),
-                lambda c: F.struct(
-                    (
-                        F.element_at(F.element_at(csq, s + 1), c + 1)
-                        - 2
-                        * _dot(
-                            F.slice(
-                                F.col("__v__"),
-                                s * F.lit(subdim) + F.lit(1),
-                                F.lit(subdim),
-                            ),
-                            F.element_at(F.element_at(cb, s + 1), c + 1),
-                        )
-                    ).alias("s"),
-                    c.alias("cid"),
-                ),
-            )
-        ).getItem(0),
-    )
     staged = wf.select(
         F.col(id_col),
-        _as_double(vec_col).alias("__v__"),
+        nearest_code_expr(codebooks, _as_double(vec_col)).alias("__best__"),
         *[F.col(c) for c in carry],
-    ).withColumn("__best__", best)
+    )
     return staged.select(
         F.col(id_col),
         F.transform("__best__", lambda b: b["cid"]).alias("codes"),
         F.aggregate(
-            F.zip_with(
-                F.sequence(F.lit(0), F.lit(m - 1)),
-                F.col("__best__"),
-                lambda s, b: F.element_at(
-                    F.element_at(csq, s + 1), b["cid"] + 1
-                ),
-            ),
+            F.transform("__best__", lambda b: b["csq"]),
             F.lit(0.0),
             lambda acc, x: acc + x,
         ).alias("vhat_sq"),
         *[F.col(c) for c in carry],
-        *[col.alias(name) for name, col in (extra or {}).items()],
     )
 
 
@@ -487,7 +337,7 @@ def ivf_pq_encode_residual(
     from .ivf import assign_cells
 
     spark = df.sparkSession
-    cells = assign_cells(df, centroids, id_col=id_col, vec_col=vec_col, nprobe=1)
+    cells = assign_cells(df, centroids, id_col=id_col, vec_col=vec_col)
     cent_df = spark.createDataFrame(
         [(i, [float(w) for w in c]) for i, c in enumerate(centroids)],
         "cell int, __cent__ array<double>",
@@ -729,7 +579,8 @@ def ivf_pq_topk(
     assignments — replaces the driver-side ``probe_assignments`` pass,
     making probe selection persisted data rather than a float argsort
     recomputed per engine (see ``ivf.ivf_topk``'s parameter of the same
-    name for the ulp-tie rationale). Bounded; collected driver-side.
+    name for the ulp-tie rationale). Bounded; collected driver-side by
+    ``ivf.query_probe_cells``, the probe rule both searches share.
 
     ``rotation`` (an OPQ matrix) declares that the index — centroids,
     codebooks, codes, cells — lives in ROTATED space (the FAISS
@@ -737,7 +588,7 @@ def ivf_pq_topk(
     their LUT/probe build (explicit left-fold dots, oracle bit-parity),
     and the exact rerank swaps back to RAW query vectors against the RAW
     corpus (orthogonal rotation preserves cosine)."""
-    from .ivf import assign_cells, nprobe_for_recall, probe_assignments
+    from .ivf import assign_cells, nprobe_for_recall
 
     if nprobe is None:
         nprobe = nprobe_for_recall(len(centroids), recall_target)
@@ -778,7 +629,7 @@ def ivf_pq_topk(
             # assign at query time; the maintained-index path passes cells
             # computed once at ingest (write/append_pq_index with centroids)
             corpus_cells = assign_cells(
-                corpus_wf, centroids, id_col=id_col, vec_col=vec_col, nprobe=1
+                corpus_wf, centroids, id_col=id_col, vec_col=vec_col
             )
         cells = corpus_cells.select(
             F.col(id_col).alias("__cid__"), F.col("cell").alias("__ccell__")
@@ -798,25 +649,11 @@ def ivf_pq_topk(
         cm = np.asarray(centroids, dtype=np.float64)
         qcs = np.asarray([d[1] for d in data], dtype=np.float64) @ cm.T
         data = [d + ([float(x) for x in qc],) for d, qc in zip(data, qcs)]
-    if data and query_probes is not None:
-        pm: dict = {}
-        for r in query_probes.collect():  # bounded: queries × nprobe rows
-            pm.setdefault(r[0], []).append(int(r[1]))
-        missing = [d[0] for d in data if d[0] not in pm]
-        if missing:
-            # a stale/partial probes artifact must not make queries
-            # silently vanish from the results (r13 ADVICE)
-            raise ValueError(
-                f"query_probes has no rows for {len(missing)} query id(s) "
-                f"(e.g. {missing[:5]!r}) — regenerate the probes artifact "
-                "or pass query_probes=None to assign probes inline"
-            )
-        data = [d + (cell,) for d in data for cell in pm.get(d[0], [])]
-    elif data:
-        probes = probe_assignments([d[1] for d in data], centroids, nprobe)
-        data = [
-            d + (int(cell),) for d, row in zip(data, probes) for cell in row
-        ]
+    probes = query_probe_cells(
+        [d[0] for d in data], [d[1] for d in data], centroids, nprobe,
+        query_probes,
+    )
+    data = [d + (cell,) for d, cells in zip(data, probes) for cell in cells]
     spark = corpus.sparkSession
     qdf = spark.createDataFrame(
         data, _lut_schema(id_dtype, with_cell=True, with_qc=residual)
@@ -1122,8 +959,8 @@ def append_pq_index(
         # rotate_batch_arrow), so the append==rebuild determinism argument
         # is unchanged while the per-micro-batch cost is one vectorized
         # pass with an O(1)-node plan. MapInPandas is also an optimizer
-        # barrier: the downstream encode's many __v__ references read the
-        # rotated column once, never re-evaluating the rotation.
+        # barrier: the downstream encode and cell read the rotated column,
+        # never re-evaluating the rotation.
         from .opq import rotate_batch_arrow
 
         new_docs = rotate_batch_arrow(new_docs, rotation, vec_col=vec_col)
@@ -1136,24 +973,23 @@ def append_pq_index(
             new_docs, codebooks, centroids, id_col=id_col, vec_col=vec_col
         ).join(new_docs.select(id_col, partition_col), id_col)
     else:
-        # micro-batch hot path: the map-side twins (bit-identical to the
-        # posexplode shapes — see their docstrings + differential tests)
-        # cut the per-batch fixed cost from two shuffle stages + broadcast
+        # micro-batch hot path: the map-side expression (bit-identical to
+        # the posexplode kernel — see nearest_code_expr + the parity test)
+        # cuts the per-batch fixed cost from two shuffle stages + broadcast
         # builds + two joins to ONE map stage producing the whole batch
-        # row (codes, vhat_sq, cell, partition) at once
-        extra = None
-        if centroids is not None:
-            from .ivf import nearest_cells_expr_mapside
-
-            extra = {
-                "cell": F.element_at(
-                    nearest_cells_expr_mapside(centroids, F.col("__v__"), 1), 1
-                )
-            }
+        # row (codes, vhat_sq, partition, cell) at once. The cell is
+        # selected last: every DataFrame step after a literal-codebook
+        # expression re-analyzes it, which is most of a batch's plan cost.
         enc = pq_encode_mapside(
             new_docs, codebooks, id_col=id_col, vec_col=vec_col,
-            carry=(partition_col,), extra=extra,
+            carry=(partition_col,) if centroids is None else (partition_col, vec_col),
         )
+        if centroids is not None:
+            cell = nearest_code_expr([centroids], _as_double(vec_col))
+            enc = enc.select(
+                id_col, "codes", "vhat_sq", partition_col,
+                cell.getItem(0).getField("cid").alias("cell"),
+            )
     merge_upsert_batch(spark, enc, f"{path}/codes", [id_col], partition_col)
     live_after = resolve_index_root(spark, logical_root)
     if live_after != path:
@@ -1232,6 +1068,17 @@ def ivf_pq_search_index(
     )
 
 
+def _sq_dist_to(vec: Column, center) -> Column:
+    """Exact |v − c|² fold against a literal center — the drift report
+    measures distances, not argmins, so it keeps this form."""
+    carr = F.array(*[F.lit(float(w)) for w in center])
+    return F.aggregate(
+        F.zip_with(vec, carr, lambda x, w: (x - w) * (x - w)),
+        F.lit(0.0),
+        lambda acc, x: acc + x,
+    )
+
+
 def index_drift_report(
     spark,
     path: str,
@@ -1286,7 +1133,7 @@ def index_drift_report(
     err_ratio, refit_recommended). Cost: one scan of the codes table's
     cell column + two bounded passes over ≤ ``sample_cap`` sample rows —
     safe to run on every append cycle at any index size."""
-    from .ivf import _sq_dist_to, fit_ivf_centroids, well_formed_vectors
+    from .ivf import fit_ivf_centroids
 
     path = resolve_index_root(spark, path)
     _, centroids, _residual, rotation = read_pq_meta(spark, path)
@@ -1490,7 +1337,7 @@ def refit_pq_index(
             iters=iters, seed=seed, fit_sample_n=fit_sample_n,
         )
         cells = assign_cells(
-            fit_corpus, new_centroids, id_col=id_col, vec_col=vec_col, nprobe=1
+            fit_corpus, new_centroids, id_col=id_col, vec_col=vec_col
         ).select(id_col, "cell")
         enc = pq_encode(
             fit_corpus, new_codebooks, id_col=id_col, vec_col=vec_col

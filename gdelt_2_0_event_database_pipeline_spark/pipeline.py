@@ -171,8 +171,9 @@ def _stage_decontaminate(spark, df: DataFrame, p: dict) -> DataFrame:
 
 
 def _stage_filter_nulls(spark, df: DataFrame, p: dict) -> DataFrame:
-    cols = [c for c in p["columns"] if c in df.columns]
-    return df.na.drop(subset=cols) if cols else df
+    from .sources.lake import all_not_null
+
+    return df.filter(all_not_null([c for c in p["columns"] if c in df.columns]))
 
 
 def _stage_redact(spark, df: DataFrame, p: dict) -> DataFrame:

@@ -1185,7 +1185,7 @@ def q_ivf_topk(spark, sf_dir):
 
     def _write():
         I.assign_cells(
-            I.well_formed_vectors(emb, "embedding"), centroids, nprobe=1
+            I.well_formed_vectors(emb, "embedding"), centroids
         ).write.mode("overwrite").parquet(f"{_IVF_ORACLE_ROOT}/cells")
         single_partition_df(
             spark, [(centroids,)], "centroids array<array<double>>"
@@ -1408,7 +1408,7 @@ def q_opq_maintained(spark, sf_dir):
         base = _rot_emb().filter(F.col("vec_id") % 10 != 9)
         codes = (
             Q.pq_encode(base, books)
-            .join(assign_cells(base, cents, nprobe=1).select("vec_id", "cell"), "vec_id")
+            .join(assign_cells(base, cents).select("vec_id", "cell"), "vec_id")
             .withColumn("ingest_day", F.lit("d0"))
         )
         Q.write_pq_index(
@@ -2060,7 +2060,7 @@ def q_ivf_pq_topk(spark, sf_dir):
     def _write():
         wf = I.well_formed_vectors(emb, "embedding")
         codes = Q.pq_encode(emb, books).join(
-            I.assign_cells(wf, centroids, nprobe=1).select("vec_id", "cell"),
+            I.assign_cells(wf, centroids).select("vec_id", "cell"),
             "vec_id",
         )
         Q.write_pq_index(

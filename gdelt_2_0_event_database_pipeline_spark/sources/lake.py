@@ -34,7 +34,7 @@ from typing import Sequence
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..util import hadoop_fs, list_visible
+from ..util import hadoop_fs, list_visible, single_partition_df
 
 
 def _historical_trees(spark: SparkSession, historical_dir: str) -> list[str]:
@@ -189,9 +189,11 @@ def processed_files(spark: SparkSession, manifest_path: str) -> set[str]:
 
 
 def mark_processed(spark: SparkSession, manifest_path: str, files: Sequence[str]) -> None:
+    """Append ``files`` to the manifest as ONE parquet file per call, so
+    the manifest grows by one file per run, not one per core."""
     if not files:
         return
-    spark.createDataFrame([(f,) for f in files], "file string").write.mode(
+    single_partition_df(spark, [(f,) for f in files], "file string").write.mode(
         "append"
     ).parquet(manifest_path)
 

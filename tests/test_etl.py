@@ -228,6 +228,19 @@ def test_manifest_idempotency(spark, tmp_path):
     assert lake.unprocessed(spark, files, mpath) == ["c.zip"]
 
 
+def test_mark_processed_writes_one_file_per_call(spark, tmp_path):
+    """Each manifest append is one parquet file, whatever the session's
+    parallelism, and every appended name reads back."""
+    import glob
+
+    mpath = str(tmp_path / "manifest")
+    names = [f"{b}{i}.zip" for b in "abc" for i in range(5)]
+    for b in "abc":
+        lake.mark_processed(spark, mpath, [n for n in names if n.startswith(b)])
+    assert len(glob.glob(f"{mpath}/*.parquet")) == 3
+    assert lake.processed_files(spark, mpath) == set(names)
+
+
 def test_manifest_corrupt_fails_loudly_missing_reads_empty(spark, tmp_path):
     """Only a MISSING manifest reads as 'nothing processed yet'; a corrupt
     one must propagate — swallowing it would silently re-convert (and

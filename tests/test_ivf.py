@@ -9,9 +9,10 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from gdelt_2_0_event_database_pipeline_spark.operators.ivf import (
+    assign_cells,
     fit_ivf_centroids,
     ivf_topk,
-    nearest_cells,
+    probe_assignments,
 )
 from gdelt_2_0_event_database_pipeline_spark.operators.similarity import cosine_topk
 
@@ -50,20 +51,26 @@ def test_fit_is_deterministic(emb):
     assert len(c1) == CLUSTERS and len(c1[0]) == DIM
 
 
+def _np_cells(emb, cents):
+    """{vec_id: nearest cell} from the numpy rule (probe_assignments)."""
+    rows = emb.collect()
+    x = [[float(v) for v in r.embedding] for r in rows]
+    cells = probe_assignments(x, cents, 1)[:, 0]
+    return {r.vec_id: int(c) for r, c in zip(rows, cells)}
+
+
 def test_fit_recovers_clusters(spark, emb):
     cents = fit_ivf_centroids(emb, k=CLUSTERS, iters=5, seed=9)
     # every planted cluster should map to a distinct fitted centroid
-    assigned = emb.select(
-        (F.col("vec_id") % CLUSTERS).alias("truth"),
-        nearest_cells(F.col("embedding").cast("array<double>"), cents, 1)[0].alias("cell"),
+    from collections import Counter, defaultdict
+
+    per = Counter(
+        (cell, vid % CLUSTERS) for vid, cell in _np_cells(emb, cents).items()
     )
     # purity: dominant truth label per cell covers ≥95% of the cell
-    per = assigned.groupBy("cell", "truth").count().collect()
-    from collections import defaultdict
-
     cells = defaultdict(list)
-    for r in per:
-        cells[r.cell].append(r["count"])
+    for (cell, _truth), n in per.items():
+        cells[cell].append(n)
     purity = sum(max(v) for v in cells.values()) / sum(sum(v) for v in cells.values())
     assert purity > 0.95, f"purity {purity}"
 
@@ -93,36 +100,23 @@ def test_ivf_rank_shape(emb):
 
 
 def test_assignment_paths_agree(spark, emb):
-    # the map-only literal path (small inputs) and the exploded one-shuffle
-    # path (huge inputs) must produce identical assignments
-    from gdelt_2_0_event_database_pipeline_spark.operators.ivf import assign_cells
-
+    # the codegen Spark kernel (huge inputs) and the numpy rule (bounded
+    # driver-side sets) must produce identical assignments
     cents = fit_ivf_centroids(emb, k=CLUSTERS, iters=3, seed=9)
-    literal = {
-        (r.vec_id, r.cell)
-        for r in emb.select(
-            "vec_id",
-            nearest_cells(F.col("embedding").cast("array<double>"), cents, 1)[0].alias("cell"),
-        ).collect()
-    }
-    exploded = {
-        (r.vec_id, r.cell) for r in assign_cells(emb, cents, nprobe=1).collect()
-    }
-    assert literal == exploded
+    exploded = {(r.vec_id, r.cell) for r in assign_cells(emb, cents).collect()}
+    assert exploded == set(_np_cells(emb, cents).items())
 
-    # nprobe=2: same top-2 cells per id, order-insensitive set compare
-    lit2 = {
-        (r.vec_id, c)
-        for r in emb.select(
-            "vec_id",
-            nearest_cells(F.col("embedding").cast("array<double>"), cents, 2).alias("cs"),
-        ).collect()
-        for c in r.cs
-    }
-    exp2 = {
-        (r.vec_id, r.cell) for r in assign_cells(emb, cents, nprobe=2).collect()
-    }
-    assert lit2 == exp2
+
+def test_assign_cells_rejects_wrong_length(spark, emb):
+    """A vector shorter than the centroids must fail the job with a named
+    error, not be assigned from a partial dot product."""
+    cents = fit_ivf_centroids(emb, k=CLUSTERS, iters=2, seed=9)
+    short = spark.createDataFrame(
+        [(0, [1.0] * DIM), (1, [1.0] * (DIM - 1))],
+        "vec_id long, embedding array<double>",
+    )
+    with pytest.raises(Exception, match=f"assign_cells: expected embedding of length {DIM}, got {DIM - 1}"):
+        assign_cells(short, cents).collect()
 
 
 def test_nprobe_for_recall_curve():
@@ -167,28 +161,6 @@ def test_default_nprobe_recall_sf01(spark):
     den = sum(len(v) for v in exact.values())
     recall = num / den
     assert recall >= 0.75, f"default-nprobe recall@5 {recall}"
-
-
-def test_assign_cells_mapside_bit_parity(spark):
-    """assign_cells_mapside (the zero-shuffle append-path twin) must
-    produce the SAME (id, cell) set as the posexplode assign_cells —
-    identical |c|^2 - 2*v*c score, identical fold order, identical tie
-    rule — on the full test corpus at two nprobe values."""
-    from gdelt_2_0_event_database_pipeline_spark.operators.ivf import (
-        assign_cells,
-        assign_cells_mapside,
-        fit_ivf_centroids,
-    )
-
-    emb = spark.read.parquet("/root/testdata/sf0.01/embeddings.parquet")
-    cents = fit_ivf_centroids(emb, k=8, iters=2)
-    for nprobe in (1, 3):
-        a = {(r[0], r[1]) for r in assign_cells(emb, cents, nprobe=nprobe).collect()}
-        b = {
-            (r[0], r[1])
-            for r in assign_cells_mapside(emb, cents, nprobe=nprobe).collect()
-        }
-        assert a == b and len(a) > 0
 
 
 def test_partial_query_probes_raise_not_vanish(spark, emb):

@@ -201,7 +201,7 @@ def test_maintained_opq_ivfpq_index_append_equals_rebuild(spark, tmp_path, vec_d
     books = fit_pq_codebooks(rot_all, m=M, ncodes=NCODES, iters=2)
     base_rot = rot_all.filter("vec_id < 400")
     codes0 = pq_encode(base_rot, books).join(
-        assign_cells(base_rot, cents, nprobe=1).select("vec_id", "cell"),
+        assign_cells(base_rot, cents).select("vec_id", "cell"),
         "vec_id",
     ).withColumn("ingest_day", F.lit("d0"))
     index = str(tmp_path / "opq_idx")
@@ -228,7 +228,7 @@ def test_maintained_opq_ivfpq_index_append_equals_rebuild(spark, tmp_path, vec_d
     rebuilt = {
         r.vec_id: (r.cell, list(r.codes), r.vhat_sq)
         for r in pq_encode(rot_all, books)
-        .join(assign_cells(rot_all, cents, nprobe=1).select("vec_id", "cell"), "vec_id")
+        .join(assign_cells(rot_all, cents).select("vec_id", "cell"), "vec_id")
         .collect()
     }
     assert got == rebuilt
@@ -278,7 +278,7 @@ def test_refit_preserves_rotation_frame(spark, tmp_path, vec_df, fitted):
     cents = fit_ivf_centroids(rot_all, k=4, iters=2)
     books = fit_pq_codebooks(rot_all, m=M, ncodes=NCODES, iters=2)
     codes = pq_encode(rot_all, books).join(
-        assign_cells(rot_all, cents, nprobe=1).select("vec_id", "cell"),
+        assign_cells(rot_all, cents).select("vec_id", "cell"),
         "vec_id",
     ).withColumn("ingest_day", F.lit("d0"))
     index = str(tmp_path / "opq_refit_idx")

@@ -217,6 +217,30 @@ def test_pipeline_dedup_near_stage(spark, tmp_path):
     assert rep["stages"][0]["rows"] == out.count()
 
 
+def test_pipeline_filter_nulls_stage_uses_lake_null_rule(spark, tmp_path):
+    """filter_nulls stage: drops a NULL double, keeps a NaN double (NaN
+    is a value, not a missing one), and agrees with lake.filter_nulls."""
+    from gdelt_2_0_event_database_pipeline_spark.pipeline import run_pipeline
+    from gdelt_2_0_event_database_pipeline_spark.sources.lake import filter_nulls
+
+    df = spark.createDataFrame(
+        [(1, "a", 1.0), (2, "b", float("nan")), (3, "c", None)],
+        "doc_id long, text string, score double",
+    )
+    src = str(tmp_path / "src")
+    df.write.parquet(src)
+
+    rep = run_pipeline(
+        spark,
+        {"pipeline": {"input": src, "workdir": str(tmp_path / "w"),
+                      "stages": [{"stage": "filter_nulls", "columns": ["score", "absent"]}]}},
+    )
+    out = spark.read.parquet(rep["final"])
+    assert sorted(r.doc_id for r in out.collect()) == [1, 2]
+    kept, _ = filter_nulls(spark.read.parquet(src), ["score", "absent"])
+    assert out.count() == kept.count() == rep["stages"][0]["rows"]
+
+
 def test_pipeline_validation_fails_fast(spark, tmp_path):
     """The whole stage list validates BEFORE any work: unknown stages,
     missing required params, mid-chain export, and missing workdir all

@@ -688,7 +688,7 @@ def test_drift_report_rotates_sample_on_opq_index(spark, tmp_path):
     cents = fit_ivf_centroids(rot, k=4, iters=3)
     codes = (
         pq_encode(rot, books)
-        .join(assign_cells(rot, cents, nprobe=1).select("vec_id", "cell"), "vec_id")
+        .join(assign_cells(rot, cents).select("vec_id", "cell"), "vec_id")
         .withColumn("ingest_day", F.lit("d0"))
     )
     path = str(tmp_path / "opq_idx")
@@ -1111,48 +1111,61 @@ def test_residual_encode_fuzz_matches_numpy(spark):
     check()
 
 
-def test_pq_encode_mapside_bit_parity(spark):
-    """The streaming-append hot path (pq_encode_mapside) must equal the
-    posexplode pq_encode BIT-FOR-BIT — codes and vhat_sq — on the full
-    test corpus: maintained==rebuild parity rests on the two paths
-    folding identical fp operations in identical order. Also pins the
-    carry/extra passthrough used by append_pq_index's fused batch."""
+def test_nearest_code_kernels_bit_parity(spark):
+    """The three spellings of the nearest-code rule agree BIT-FOR-BIT on
+    the full test corpus, for the coarse quantizer (m=1) and for PQ
+    (m=16): the codegen kernel (pq_encode / assign_cells), the map-side
+    expression (pq_encode_mapside, the append hot path) and numpy
+    (probe_assignments). Maintained==rebuild parity rests on the Spark
+    paths folding identical fp operations in identical order. Also pins
+    the carry passthrough append_pq_index uses for the batch's cell."""
     from pyspark.sql import functions as F
 
     from gdelt_2_0_event_database_pipeline_spark.operators.ivf import (
-        nearest_cells_expr_mapside,
+        assign_cells,
+        fit_ivf_centroids,
+        nearest_code_expr,
+        probe_assignments,
     )
     from gdelt_2_0_event_database_pipeline_spark.operators.pq import (
         fit_pq_codebooks,
         pq_encode,
         pq_encode_mapside,
     )
+    from gdelt_2_0_event_database_pipeline_spark.operators.similarity import (
+        _as_double,
+    )
 
     emb = spark.read.parquet("/root/testdata/sf0.01/embeddings.parquet")
-    books = fit_pq_codebooks(emb, m=16, ncodes=16, iters=2)
-    a = {r[0]: (list(r[1]), r[2]) for r in pq_encode(emb, books).collect()}
-    b = {
-        r[0]: (list(r[1]), r[2])
-        for r in pq_encode_mapside(emb, books).collect()
-    }
-    assert a == b and len(a) > 0
-
-    # carry + extra: one map stage yields (codes, vhat_sq, day, cell)
-    from gdelt_2_0_event_database_pipeline_spark.operators.ivf import (
-        assign_cells,
-        fit_ivf_centroids,
-    )
-
+    ids, x = _np_corpus(emb)
     cents = fit_ivf_centroids(emb, k=8, iters=2)
+    assert cents == fit_pq_codebooks(emb, m=1, ncodes=8, iters=2)[0]
+    for books in (fit_pq_codebooks(emb, m=16, ncodes=16, iters=2), [cents]):
+        m, _, subdim = np.asarray(books).shape
+        a = {r[0]: (list(r[1]), r[2]) for r in pq_encode(emb, books).collect()}
+        b = {
+            r[0]: (list(r[1]), r[2])
+            for r in pq_encode_mapside(emb, books).collect()
+        }
+        assert a == b and len(a) == len(ids)
+        want = np.stack(
+            [
+                probe_assignments(x[:, s * subdim : (s + 1) * subdim], books[s], 1)[:, 0]
+                for s in range(m)
+            ],
+            axis=1,
+        )
+        assert {vid: [int(c) for c in want[i]] for i, vid in enumerate(ids)} == {
+            vid: codes for vid, (codes, _) in a.items()
+        }
+
+    cells = {r["vec_id"]: r["cell"] for r in assign_cells(emb, cents).collect()}
+    assert cells == {vid: codes[0] for vid, (codes, _) in a.items()}
     tagged = emb.withColumn("day", F.lit("d0"))
-    fused = pq_encode_mapside(
-        tagged, books, carry=("day",),
-        extra={"cell": F.element_at(
-            nearest_cells_expr_mapside(cents, F.col("__v__"), 1), 1)},
+    fused = pq_encode_mapside(tagged, books, carry=("day", "embedding")).select(
+        "vec_id",
+        "day",
+        nearest_code_expr([cents], _as_double("embedding")).getItem(0).getField("cid").alias("cell"),
     )
     got = {r["vec_id"]: (r["day"], r["cell"]) for r in fused.collect()}
-    want = {
-        r["vec_id"]: ("d0", r["cell"])
-        for r in assign_cells(emb, cents, nprobe=1).collect()
-    }
-    assert got == want
+    assert got == {vid: ("d0", c) for vid, c in cells.items()}

@@ -186,7 +186,7 @@ def test_drift_check_triggers_exactly_one_refit(spark, tmp_path):
     from gdelt_2_0_event_database_pipeline_spark.operators.ivf import assign_cells
 
     codes = pq_encode(base, books).join(
-        assign_cells(base, cents, nprobe=1).select("vec_id", "cell"), "vec_id"
+        assign_cells(base, cents).select("vec_id", "cell"), "vec_id"
     ).withColumn("ingest_day", F.lit("d0"))
     write_pq_index(codes, books, index, partition_col="ingest_day", centroids=cents)
 
