@@ -1111,14 +1111,13 @@ def test_residual_encode_fuzz_matches_numpy(spark):
     check()
 
 
-def test_nearest_code_kernels_bit_parity(spark):
-    """The three spellings of the nearest-code rule agree BIT-FOR-BIT on
-    the full test corpus, for the coarse quantizer (m=1) and for PQ
-    (m=16): the codegen kernel (pq_encode / assign_cells), the map-side
-    expression (pq_encode_mapside, the append hot path) and numpy
-    (probe_assignments). Maintained==rebuild parity rests on the Spark
-    paths folding identical fp operations in identical order. Also pins
-    the carry passthrough append_pq_index uses for the batch's cell."""
+def test_pq_encode_mapside_bit_parity(spark):
+    """The streaming-append hot path (pq_encode_mapside, the map-side
+    nearest_code_expr) must equal the codegen pq_encode BIT-FOR-BIT —
+    codes and vhat_sq — and the numpy rule (probe_assignments) on the
+    full test corpus: maintained==rebuild parity rests on the Spark paths
+    folding identical fp operations in identical order. Also pins the
+    carry passthrough append_pq_index uses for the batch's cell."""
     from pyspark.sql import functions as F
 
     from gdelt_2_0_event_database_pipeline_spark.operators.ivf import (
@@ -1138,29 +1137,28 @@ def test_nearest_code_kernels_bit_parity(spark):
 
     emb = spark.read.parquet("/root/testdata/sf0.01/embeddings.parquet")
     ids, x = _np_corpus(emb)
-    cents = fit_ivf_centroids(emb, k=8, iters=2)
-    assert cents == fit_pq_codebooks(emb, m=1, ncodes=8, iters=2)[0]
-    for books in (fit_pq_codebooks(emb, m=16, ncodes=16, iters=2), [cents]):
-        m, _, subdim = np.asarray(books).shape
-        a = {r[0]: (list(r[1]), r[2]) for r in pq_encode(emb, books).collect()}
-        b = {
-            r[0]: (list(r[1]), r[2])
-            for r in pq_encode_mapside(emb, books).collect()
-        }
-        assert a == b and len(a) == len(ids)
-        want = np.stack(
-            [
-                probe_assignments(x[:, s * subdim : (s + 1) * subdim], books[s], 1)[:, 0]
-                for s in range(m)
-            ],
-            axis=1,
-        )
-        assert {vid: [int(c) for c in want[i]] for i, vid in enumerate(ids)} == {
-            vid: codes for vid, (codes, _) in a.items()
-        }
+    books = fit_pq_codebooks(emb, m=16, ncodes=16, iters=2)
+    m, _, subdim = np.asarray(books).shape
+    a = {r[0]: (list(r[1]), r[2]) for r in pq_encode(emb, books).collect()}
+    b = {
+        r[0]: (list(r[1]), r[2])
+        for r in pq_encode_mapside(emb, books).collect()
+    }
+    assert a == b and len(a) == len(ids)
+    want = np.stack(
+        [
+            probe_assignments(x[:, s * subdim : (s + 1) * subdim], books[s], 1)[:, 0]
+            for s in range(m)
+        ],
+        axis=1,
+    )
+    assert {vid: [int(c) for c in want[i]] for i, vid in enumerate(ids)} == {
+        vid: codes for vid, (codes, _) in a.items()
+    }
 
-    cells = {r["vec_id"]: r["cell"] for r in assign_cells(emb, cents).collect()}
-    assert cells == {vid: codes[0] for vid, (codes, _) in a.items()}
+    # carry: one map stage yields (codes, vhat_sq, day, embedding) and the
+    # batch's cell is computed from the carried vector
+    cents = fit_ivf_centroids(emb, k=8, iters=2)
     tagged = emb.withColumn("day", F.lit("d0"))
     fused = pq_encode_mapside(tagged, books, carry=("day", "embedding")).select(
         "vec_id",
@@ -1168,4 +1166,6 @@ def test_nearest_code_kernels_bit_parity(spark):
         nearest_code_expr([cents], _as_double("embedding")).getItem(0).getField("cid").alias("cell"),
     )
     got = {r["vec_id"]: (r["day"], r["cell"]) for r in fused.collect()}
-    assert got == {vid: ("d0", c) for vid, c in cells.items()}
+    assert got == {
+        r["vec_id"]: ("d0", r["cell"]) for r in assign_cells(emb, cents).collect()
+    }
