@@ -26,7 +26,7 @@ from typing import Sequence
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..util import hadoop_fs, is_hidden
+from ..util import read_json_rows, write_json_rows
 from .text import char_ngrams, simhash64, tokens
 
 
@@ -1341,49 +1341,23 @@ def write_minhash_index(
         if partition_col is not None:
             w = w.partitionBy(partition_col)
         w.parquet(f"{path}/{name}")
-    from ..util import single_partition_df
-
-    meta = single_partition_df(
-        spark,
-        [(num_hashes, bands, shingle_n, hash_family)],
-        "num_hashes int, bands int, shingle_n int, hash_family string",
+    meta = dict(
+        num_hashes=num_hashes, bands=bands, shingle_n=shingle_n,
+        hash_family=hash_family,
     )
-    meta.write.mode(mode).json(f"{path}/meta")
+    write_json_rows(spark, f"{path}/meta", [meta], mode=mode)
 
 
 def read_minhash_index_meta(spark, path: str) -> dict:
     """The index's LSH parameter set (validated): every batch MUST hash
     with exactly these or its buckets are incomparable.
 
-    Read DIRECTLY through the Hadoop FileSystem (the same FS abstraction
-    the commit protocols use — works on HDFS/S3/local alike), not via
-    ``spark.read.json(...).collect()``: the meta is a one-row KB-sized
-    file, and the Spark read cost a full scheduler round-trip (~0.3 s job)
-    on EVERY match/append call (guide §5: the driver should do almost no
-    data work — and a distributed job to read 80 bytes is the inverse
-    mistake). Semantics preserved: exactly one row, same field validation,
-    missing/extra fields read as None."""
-    import json as _json
-
-    jvm, fs, meta_dir = hadoop_fs(spark, f"{path}/meta")
-    rows = []
-    for status in fs.listStatus(meta_dir):
-        name = status.getPath().getName()
-        if not status.isFile() or is_hidden(name) or status.getLen() == 0:
-            continue
-        stream = fs.open(status.getPath())
-        try:
-            text = jvm.org.apache.commons.io.IOUtils.toString(stream, "UTF-8")
-        finally:
-            stream.close()
-        for line in text.splitlines():
-            if not line.strip():
-                continue
-            try:
-                rec = _json.loads(line)
-            except ValueError as e:
-                raise ValueError(f"corrupt meta at {path}: unparseable JSON ({e})")
-            rows.append(rec)
+    Read on the driver (``util.read_json_rows``), not by a Spark job: the
+    meta is a one-row KB-sized file read on EVERY match/append call, and
+    a distributed job to read 80 bytes costs a scheduler round trip
+    (~0.3 s) for nothing. Exactly one row; missing fields read as None
+    and are rejected below."""
+    rows = read_json_rows(spark, f"{path}/meta")
     if len(rows) != 1:
         raise ValueError(f"expected exactly one meta row at {path}/meta, got {len(rows)}")
     m = {

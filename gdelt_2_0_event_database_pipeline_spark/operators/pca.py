@@ -40,7 +40,7 @@ is exactly that query's variance column).
 
 from __future__ import annotations
 
-from dataclasses import dataclass
+from dataclasses import asdict, dataclass
 from typing import Iterator
 
 import pandas as pd
@@ -49,6 +49,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.sqltext import check_expr_col, lit_arr, sql_dots
+from ..util import read_json_rows, write_json_rows
 from .ivf import well_formed_vectors
 
 #: driver-side eigendecomposition is O(max_dim³) time / O(max_dim²) memory;
@@ -285,49 +286,29 @@ def model_from_moments(
 
 
 def write_pca_model(spark, model: PCAModel, path: str, mode: str = "error") -> None:
-    """Persist the fitted model as a one-row JSON dataset via the Spark
-    writer (lands on whatever FS the session can write — the pq-codebook
-    discipline, no driver-local file I/O)."""
-    from ..util import single_partition_df
-
-    single_partition_df(
-        spark,
-        [
-            (
-                model.mean,
-                model.components,
-                model.explained_variance,
-                model.explained_variance_ratio,
-                model.n_rows,
-            )
-        ],
-        "mean array<double>, components array<array<double>>, "
-        "explained_variance array<double>, "
-        "explained_variance_ratio array<double>, n_rows bigint",
-    ).write.mode(mode).json(path)
+    """Persist the fitted model as a one-row JSON dataset through the
+    driver-side JSON codec (``util.write_json_rows`` — a Hadoop-FS file
+    write, no Spark job; lands on whatever FS the session can write)."""
+    write_json_rows(spark, path, [asdict(model)], mode=mode)
 
 
 def read_pca_model(spark, path: str) -> PCAModel:
-    rows = spark.read.schema(
-        "mean array<double>, components array<array<double>>, "
-        "explained_variance array<double>, "
-        "explained_variance_ratio array<double>, n_rows bigint"
-    ).json(path).collect()
+    rows = read_json_rows(spark, path)
     if len(rows) != 1:
         raise ValueError(f"expected exactly one PCA model row at {path}, got {len(rows)}")
     r = rows[0]
-    fields = (r["mean"], r["components"], r["explained_variance"],
-              r["explained_variance_ratio"], r["n_rows"])
-    if any(v is None for v in fields):
+    names = ("mean", "components", "explained_variance",
+             "explained_variance_ratio", "n_rows")
+    if any(r.get(k) is None for k in names):
         raise ValueError(f"corrupt PCA model at {path}: null fields in {r}")
     d = len(r["mean"])
     if any(c is None or len(c) != d for c in r["components"]):
         raise ValueError(f"corrupt PCA model at {path}: component width != {d}")
     return PCAModel(
-        mean=list(r["mean"]),
-        components=[list(c) for c in r["components"]],
-        explained_variance=list(r["explained_variance"]),
-        explained_variance_ratio=list(r["explained_variance_ratio"]),
+        mean=[float(v) for v in r["mean"]],
+        components=[[float(v) for v in c] for c in r["components"]],
+        explained_variance=[float(v) for v in r["explained_variance"]],
+        explained_variance_ratio=[float(v) for v in r["explained_variance_ratio"]],
         n_rows=int(r["n_rows"]),
     )
 

@@ -44,10 +44,11 @@ Spark-first shape, mirroring ``ivf.py``'s adjudicated patterns:
   compressed codes, exact math over a bounded shortlist.
 
 At-rest persistence: ``write_pq_index``/``read_pq_index`` store the
-codes parquet + a codebook JSON sidecar through Spark writers (any
-session-writable filesystem), so the 32×-compressed form IS the stored
-form — encode once at ingest, search forever (``ivf_pq_topk`` accepts
-the loaded codes via ``corpus_codes=``).
+codes parquet (a Spark writer) + a one-row codebook JSON sidecar (the
+driver-side ``util`` JSON codec — no Spark job for KBs of metadata),
+both on any filesystem the session can write, so the 32×-compressed
+form IS the stored form — encode once at ingest, search forever
+(``ivf_pq_topk`` accepts the loaded codes via ``corpus_codes=``).
 
 Residual encoding (``fit_residual_codebooks`` + ``ivf_pq_encode_residual``
 + ``ivf_pq_topk(residual=True)``) is the full IVFPQ construction: codes
@@ -74,7 +75,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..sources import lake
-from ..util import hadoop_fs
+from ..util import hadoop_fs, read_json_rows, write_json_rows
 from .ivf import (
     _assert_size,
     _check_codebooks,
@@ -695,13 +696,14 @@ def write_pq_index(
     32×-compressed at-rest form) and the codebooks as a one-row JSON
     dataset under ``<path>/codebooks`` (m×ncodes×subdim floats — KBs).
 
-    Both sides go through Spark writers, so the index lands on whatever
-    filesystem the session can write (HDFS/object store/local) — no
-    driver-local file I/O. ``mode`` follows DataFrameWriter semantics
-    (``error``/``overwrite``). With ``partition_col`` (e.g. ingest day)
-    the codes table is Hive-partitioned by it, which is what lets
-    :func:`append_pq_index` maintain the index incrementally at
-    O(touched partitions) per batch.
+    The codes go through a Spark writer and the codebooks through the
+    driver-side JSON codec (``util.write_json_rows`` — a file write, not
+    a Spark job); both resolve through the session's Hadoop FileSystem,
+    so the index lands on whatever filesystem the session can write
+    (HDFS/object store/local). ``mode`` is ``error`` or ``overwrite``.
+    With ``partition_col`` (e.g. ingest day) the codes table is
+    Hive-partitioned by it, which is what lets :func:`append_pq_index`
+    maintain the index incrementally at O(touched partitions) per batch.
 
     With ``centroids`` (an IVF coarse quantizer, ``fit_ivf_centroids``)
     the index becomes a maintained IVF-PQ index: centroids persist in
@@ -746,17 +748,11 @@ def write_pq_index(
     if partition_col is not None:
         w = w.partitionBy(partition_col)
     w.parquet(f"{path}/codes")
-    from ..util import single_partition_df
-
-    meta = single_partition_df(
-        spark,
-        [(m, ncodes, subdim, codebooks, centroids, bool(residual), rotation)],
-        "m int, ncodes int, subdim int, "
-        "codebooks array<array<array<double>>>, "
-        "centroids array<array<double>>, residual boolean, "
-        "rotation array<array<double>>",
+    meta = dict(
+        m=m, ncodes=ncodes, subdim=subdim, codebooks=codebooks,
+        centroids=centroids, residual=bool(residual), rotation=rotation,
     )
-    meta.write.mode(mode).json(f"{path}/codebooks")
+    write_json_rows(spark, f"{path}/codebooks", [meta], mode=mode)
     if centroids is not None:
         # Build-time cell-occupancy snapshot — the frozen baseline
         # :func:`index_drift_report` compares live occupancy against.
@@ -769,7 +765,7 @@ def write_pq_index(
             .groupBy("cell")
             .agg(F.count(F.lit(1)).alias("n_build"))
             .coalesce(1)
-            .write.mode("overwrite" if mode == "overwrite" else mode)
+            .write.mode(mode)
             .parquet(f"{path}/cell_stats")
         )
 
@@ -803,107 +799,48 @@ def read_pq_meta(
 ) -> tuple[list, list | None, bool, list | None]:
     """(codebooks, centroids-or-None, residual, rotation-or-None) from
     ``write_pq_index`` output — the append/search paths need them without
-    scanning the codes table. Explicit schema (no inference pass; the
-    centroids/residual/rotation fields read as NULL on indexes written
-    before they existed — NULL residual means raw encoding, NULL rotation
-    means identity/raw space), validated for rectangularity before any
-    use. Resolves the committed version first (idempotent on an
-    already-resolved root)."""
+    scanning the codes table. One driver-side read of the JSON row
+    (``util.read_json_rows``, no Spark job), so the per-batch append pays
+    a file read, not a scheduler round trip. The centroids/residual/
+    rotation fields read as None on indexes written before they existed
+    — None residual means raw encoding, None rotation means identity/raw
+    space. Validated for rectangularity before any use. Resolves the
+    committed version first (idempotent on an already-resolved root)."""
     path = resolve_index_root(spark, path)
-    meta = spark.read.schema(
-        "m int, ncodes int, subdim int, "
-        "codebooks array<array<array<double>>>, "
-        "centroids array<array<double>>, residual boolean, "
-        "rotation array<array<double>>"
-    ).json(f"{path}/codebooks")
-    rows = meta.collect()
+    rows = read_json_rows(spark, f"{path}/codebooks")
     if len(rows) != 1:
         raise ValueError(
             f"expected exactly one codebook row at {path}/codebooks, "
             f"got {len(rows)}"
         )
     r = rows[0]
+    if r.get("codebooks") is None:
+        raise ValueError(f"corrupt codebook row at {path}/codebooks: no codebooks")
     codebooks = [[list(map(float, c)) for c in cb] for cb in r["codebooks"]]
     m, ncodes, subdim = _check_codebooks(codebooks)
-    if (m, ncodes, subdim) != (r["m"], r["ncodes"], r["subdim"]):
+    stored = (r.get("m"), r.get("ncodes"), r.get("subdim"))
+    if (m, ncodes, subdim) != stored:
         raise ValueError(
-            f"codebook metadata mismatch at {path}: stored "
-            f"({r['m']},{r['ncodes']},{r['subdim']}) vs actual "
-            f"({m},{ncodes},{subdim})"
+            f"codebook metadata mismatch at {path}: stored {stored} vs "
+            f"actual {(m, ncodes, subdim)}"
         )
     centroids = (
         [list(map(float, c)) for c in r["centroids"]]
-        if r["centroids"] is not None
+        if r.get("centroids") is not None
         else None
     )
     rotation = (
         [list(map(float, row)) for row in r["rotation"]]
-        if r["rotation"] is not None
+        if r.get("rotation") is not None
         else None
     )
-    return codebooks, centroids, bool(r["residual"]), rotation
-
-
-#: resolved-root -> (codebooks-dir listing token, meta tuple). The token —
-#: (name, mtime, length) of every file under <root>/codebooks — changes on
-#: any rewrite of the meta, so a cache hit is exactly "same version dir,
-#: same codebook files": version bumps (refit) get a new key, in-place
-#: overwrites (mode="overwrite" on an un-versioned index) get a new token.
-_META_CACHE: dict[str, tuple[tuple, tuple]] = {}
-
-
-def _codebooks_token(spark, root: str):
-    jvm, fs, _ = hadoop_fs(spark, root)
-    p = jvm.org.apache.hadoop.fs.Path(f"{root}/codebooks")
-    if not fs.exists(p):
-        return None
-    return tuple(
-        sorted(
-            (st.getPath().getName(), st.getModificationTime(), st.getLen())
-            for st in fs.listStatus(p)
-        )
-    )
-
-
-def read_pq_meta_cached(
-    spark, path: str
-) -> tuple[list, list | None, bool, list | None]:
-    """:func:`read_pq_meta` behind a validity-token memo — the per-batch
-    hot path for streaming maintenance (r12 verdict item 3): re-reading
-    the JSON meta through a Spark job every micro-batch cost more than
-    the append itself. One FS listing of ``<root>/codebooks`` (a
-    metadata RPC, ~ms) validates the cache; any meta rewrite — refit
-    version bump or in-place overwrite — changes the token and forces a
-    real re-read, so the memo can never serve stale codebooks.
-
-    Token caveat (r13 ADVICE): the token is (name, mtime, length) per
-    codebooks file. A *versioned* refit (:func:`refit_pq_index`) always
-    changes the resolved root, so the memo is keyed away from the old
-    version; a ``mode='overwrite'`` rewrite nearly always changes part
-    file names. The one unsupported pattern is an in-place overwrite of
-    a LIVE un-versioned index that reuses the same part-file name and
-    byte length within the filesystem's mtime granularity window — on
-    such filesystems, either version the index (the maintained-index
-    discipline) or call :func:`read_pq_meta` directly."""
-    root = resolve_index_root(spark, path)
-    tok = _codebooks_token(spark, root)
-    hit = _META_CACHE.get(root)
-    if hit is not None and hit[0] == tok:
-        return hit[1]
-    meta = read_pq_meta(spark, root)
-    _META_CACHE[root] = (tok, meta)
-    return meta
-
-
-def read_pq_codebooks(spark, path: str):
-    """Codebooks alone (see :func:`read_pq_meta`)."""
-    return read_pq_meta(spark, path)[0]
+    return codebooks, centroids, bool(r.get("residual")), rotation
 
 
 def read_pq_index(spark, path: str):
     """(codes DataFrame, codebooks) from ``write_pq_index`` output."""
     root = resolve_index_root(spark, path)
-    return spark.read.parquet(f"{root}/codes"), read_pq_codebooks(spark, root)
+    return spark.read.parquet(f"{root}/codes"), read_pq_meta(spark, root)[0]
 
 
 def append_pq_index(
@@ -916,7 +853,7 @@ def append_pq_index(
 ) -> None:
     """Incremental ANN index maintenance — the link between streaming
     ingest and the PQ family: a new document batch is encoded against
-    the PERSISTED codebooks (``read_pq_codebooks`` — map-side, no refit;
+    the PERSISTED codebooks (``read_pq_meta`` — map-side, no refit;
     codebook drift is handled by scheduled re-trains, the standard
     FAISS-style discipline) and merged into ``<path>/codes`` with the
     partition-scoped upsert (``streaming/upsert.py``): re-ingested ids
@@ -951,7 +888,7 @@ def append_pq_index(
         )
     logical_root = path
     path = resolve_index_root(spark, path)  # append into the live version
-    codebooks, centroids, residual, rotation = read_pq_meta_cached(spark, path)
+    codebooks, centroids, residual, rotation = read_pq_meta(spark, path)
     if rotation is not None:
         # OPQ index: the batch enters the index's rotated coordinate frame
         # before any encode/assign — the Arrow-batched pure-Python fold
@@ -1030,7 +967,7 @@ def ivf_pq_search_index(
     (codes, codebooks, centroids) — old or new, never a mix. ``version``
     pins a retained version for reproducible re-runs."""
     path = resolve_index_root(spark, path, version=version)
-    codebooks, centroids, residual, rotation = read_pq_meta_cached(spark, path)
+    codebooks, centroids, residual, rotation = read_pq_meta(spark, path)
     codes = spark.read.parquet(f"{path}/codes")
     if centroids is None:
         raise ValueError(
@@ -1149,10 +1086,12 @@ def index_drift_report(
         .groupBy("cell")
         .agg(F.count(F.lit(1)).alias("n_cur"))
     )
-    try:
-        build = spark.read.parquet(f"{path}/cell_stats")
-    except Exception:  # index written before cell_stats existed
-        build = None
+    # An index written before cell_stats existed has no occupancy
+    # baseline. That is decided by existence alone: a snapshot that is
+    # there but unreadable (corrupt footer, permissions, IO) raises, not
+    # silently drops the occupancy half of the refit decision.
+    _, fs, stats = hadoop_fs(spark, f"{path}/cell_stats")
+    build = spark.read.parquet(f"{path}/cell_stats") if fs.exists(stats) else None
     cur_rows = {r["cell"]: r["n_cur"] for r in current.collect()}  # ≤ n_cells
     n_current = int(sum(cur_rows.values()))
     if build is not None:
@@ -1239,7 +1178,7 @@ def refit_pq_index(
     :func:`index_drift_report` recommends (r11 verdict item 3; public
     discipline: FAISS ``train``+rebuild under a version swap).
 
-    Steps, all through Spark writers/HDFS-API renames (object-store safe):
+    Steps, all through Spark and Hadoop-FS writers/renames (object-store safe):
 
     1. Re-fit the coarse quantizer (``fit_ivf_centroids``, same n_cells)
        and the codebooks (residual or raw per the index's own flag, same

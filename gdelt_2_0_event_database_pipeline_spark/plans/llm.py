@@ -1165,7 +1165,7 @@ def _write_probes_artifact(spark, queries_df, centroids, nprobe, root):
         "auto-derived from the measured ANN_RECALL.json curve for "
         "worst-case recall@5 >= 0.75 (tests/test_ivf.py re-measures it). "
         "Oracle-flipped r12 via the persisted-artifact replay: the (id, "
-        "cell) assignment + centroids live at rest at a fixed path "
+        "cell) assignment and the query probes live at rest at a fixed path "
         "(computed once, the ingest shape — ivf_topk's corpus_cells "
         "parameter skips query-time assignment), and DuckDB replays probe "
         "selection + cell join + exact rescore over the same artifacts."
@@ -1173,7 +1173,6 @@ def _write_probes_artifact(spark, queries_df, centroids, nprobe, root):
 )
 def q_ivf_topk(spark, sf_dir):
     from ..operators import ivf as I
-    from ..util import single_partition_df
 
     emb = _t(spark, sf_dir, "embeddings")
     # 2 Lloyd iterations: each fit pass costs a full corpus assignment
@@ -1187,9 +1186,6 @@ def q_ivf_topk(spark, sf_dir):
         I.assign_cells(
             I.well_formed_vectors(emb, "embedding"), centroids
         ).write.mode("overwrite").parquet(f"{_IVF_ORACLE_ROOT}/cells")
-        single_partition_df(
-            spark, [(centroids,)], "centroids array<array<double>>"
-        ).write.mode("overwrite").json(f"{_IVF_ORACLE_ROOT}/centroids")
         _write_probes_artifact(
             spark, emb.filter(F.col("vec_id") < 5), centroids,
             I.nprobe_for_recall(len(centroids)), _IVF_ORACLE_ROOT,
@@ -1522,7 +1518,7 @@ def q_opq_maintained(spark, sf_dir):
 def q_opq_topk(spark, sf_dir):
     from ..operators import opq as O
     from ..operators import pq as Q
-    from ..util import single_partition_df
+    from ..util import write_json_rows
 
     emb = _t(spark, sf_dir, "embeddings")
     rot, books = _opq_fit(emb, sf_dir)
@@ -1535,9 +1531,10 @@ def q_opq_topk(spark, sf_dir):
             books,
         )
         Q.write_pq_index(enc, books, _OPQ_ORACLE_ROOT, mode="overwrite")
-        single_partition_df(
-            spark, [(rot,)], "rotation array<array<double>>"
-        ).write.mode("overwrite").json(f"{_OPQ_ORACLE_ROOT}/rotation")
+        write_json_rows(
+            spark, f"{_OPQ_ORACLE_ROOT}/rotation", [{"rotation": rot}],
+            mode="overwrite",
+        )
 
     once(_OPQ_ORACLE_ROOT, sf_dir, _write)
     codes, books2 = Q.read_pq_index(spark, _OPQ_ORACLE_ROOT)
@@ -3334,7 +3331,7 @@ _MODEL_ORACLE_ROOT = _os.path.join(_ORACLE_ARTIFACTS, "model_oracle_weights")
 )
 def q_model_fit_score(spark, sf_dir):
     from ..operators.model import fit_linear_quality_model, score_linear_model
-    from ..util import single_partition_df
+    from ..util import read_json_rows, write_json_rows
 
     d = _t(spark, sf_dir, "documents").filter(F.col("doc_id") < 400)
 
@@ -3346,16 +3343,16 @@ def q_model_fit_score(spark, sf_dir):
             labeled, "doc_id", "text", "label", dim=64, sample_n=5000,
             hash_family="md5",
         )
-        single_partition_df(
-            spark, [(i, int(wi)) for i, wi in enumerate(w)], "i long, w long"
-        ).write.mode("overwrite").json(_MODEL_ORACLE_ROOT)
+        write_json_rows(
+            spark, _MODEL_ORACLE_ROOT,
+            [{"i": i, "w": int(wi)} for i, wi in enumerate(w)],
+            mode="overwrite",
+        )
 
     once(_MODEL_ORACLE_ROOT, sf_dir, _write)
     # score over exactly what the oracle reads (at-rest weights), even
     # when the in-process fit is warm
-    at_rest = sorted(
-        spark.read.json(_MODEL_ORACLE_ROOT).collect(), key=lambda r: r["i"]
-    )
+    at_rest = sorted(read_json_rows(spark, _MODEL_ORACLE_ROOT), key=lambda r: r["i"])
     w = [int(r["w"]) for r in at_rest]
     out = score_linear_model(d, "doc_id", "text", w, hash_family="md5")
     return out.withColumn("pred_en", F.col("score") > 0)
@@ -4258,23 +4255,26 @@ _BPE_ORACLE_ROOT = _os.path.join(_ORACLE_ARTIFACTS, "bpe_oracle_merges")
 )
 def q_bpe_train(spark, sf_dir):
     from ..operators.bpe import encode_bpe, train_bpe
-    from ..util import single_partition_df
+    from ..util import read_json_rows, write_json_rows
 
     d = _t(spark, sf_dir, "documents")
 
     def _write():
         merges = train_bpe(d.filter(F.col("doc_id") < 200), "text", num_merges=6)
-        single_partition_df(
-            spark,
-            [(i, a, b, c) for i, (a, b, c) in enumerate(merges)],
-            "merge_idx long, left string, right string, pair_count long",
-        ).write.mode("overwrite").json(_BPE_ORACLE_ROOT)
+        write_json_rows(
+            spark, _BPE_ORACLE_ROOT,
+            [
+                {"merge_idx": i, "left": a, "right": b, "pair_count": c}
+                for i, (a, b, c) in enumerate(merges)
+            ],
+            mode="overwrite",
+        )
 
     once(_BPE_ORACLE_ROOT, sf_dir, _write)
     # read the merges BACK from the artifact — the encode must run over
     # exactly what the oracle reads, even when the in-process fit is warm
     at_rest = sorted(
-        spark.read.json(_BPE_ORACLE_ROOT).collect(), key=lambda r: r["merge_idx"]
+        read_json_rows(spark, _BPE_ORACLE_ROOT), key=lambda r: r["merge_idx"]
     )
     merges = [(r["left"], r["right"], int(r["pair_count"])) for r in at_rest]
     enc = encode_bpe(d.filter(F.col("doc_id") < 50), merges)

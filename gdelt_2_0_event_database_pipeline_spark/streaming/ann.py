@@ -92,10 +92,10 @@ def maintain_pq_index_stream(
         # Fail fast at setup: index_drift_report raises on a plain PQ
         # index (no coarse centroids to drift), and discovering that on
         # the Nth micro-batch would kill a running stream instead of the
-        # start() call. One cached-meta read (~ms FS listing on a hit).
-        from ..operators.pq import read_pq_meta_cached
+        # start() call. One driver-side read of the index meta.
+        from ..operators.pq import read_pq_meta
 
-        _, _centroids, _, _ = read_pq_meta_cached(stream.sparkSession, index_path)
+        _, _centroids, _, _ = read_pq_meta(stream.sparkSession, index_path)
         if _centroids is None:
             raise ValueError(
                 f"drift_check_every_n_batches needs an IVF-PQ index with "

@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+import json
+
 from pyspark.sql import DataFrame, SparkSession
 
 
@@ -10,14 +12,16 @@ def single_partition_df(spark: SparkSession, rows, schema: str) -> DataFrame:
 
     ``spark.createDataFrame(rows, schema)`` spreads even one row over
     ``defaultParallelism`` mostly-empty Python partitions; a later
-    ``coalesce(1)`` (the natural move before writing a tiny metadata
-    file) then iterates ALL of them inside a single task — each empty
-    partition still pays a Python-runner round trip, ~4.5 s for a 1-row
-    write at local[32] (measured; the ledger-commit hot path). Seeding
-    from ``parallelize(rows, numSlices=1)`` gives the same frame as one
-    partition: one task, one Python pass, ~0.2 s.
+    ``coalesce(1)`` (the natural move before writing a tiny table) then
+    iterates ALL of them inside a single task — each empty partition
+    still pays a Python-runner round trip, ~4.5 s for a 1-row write at
+    local[32] (measured). Seeding from ``parallelize(rows, numSlices=1)``
+    gives the same frame as one partition: one task, one Python pass,
+    ~0.2 s. The callers are small parquet tables that stay Spark tables
+    (``lake.mark_processed``'s manifest, the ANN drift sink); a small
+    JSON artifact needs no job at all (:func:`write_json_rows`).
 
-    For tiny metadata frames only — a single partition is the point.
+    For tiny frames only — a single partition is the point.
     """
     return spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), schema)
 
@@ -48,3 +52,71 @@ def list_visible(spark: SparkSession, path: str) -> list:
     if not fs.exists(p):
         raise FileNotFoundError(path)
     return [st for st in fs.listStatus(p) if not is_hidden(st.getPath().getName())]
+
+
+def write_json_rows(spark: SparkSession, path: str, rows, mode: str = "error") -> None:
+    """Write ``rows`` (dicts) as ONE JSON Lines file, ``<path>/part-00000.json``
+    — the at-rest form of the package's small artifacts (index and model
+    metadata, oracle sidecars), written from the driver through
+    :func:`hadoop_fs` instead of by a Spark job.
+
+    The layout is what Spark's JSON writer leaves minus its sidecars, so
+    ``spark.read.json(path)`` and DuckDB's ``read_json_auto('<path>/*.json')``
+    read it unchanged. Keys keep the row's order; keys whose value is None
+    are omitted (Spark's default). NaN/Inf have no JSON spelling and raise
+    ``ValueError``. The bytes go to a hidden temp name inside ``path`` and
+    reach the visible name by one checked rename, so a reader never sees a
+    partial file. ``mode``: ``"error"`` raises ``FileExistsError`` if
+    ``path`` exists; ``"overwrite"`` deletes it first."""
+    if mode not in ("error", "overwrite"):
+        raise ValueError(f"write_json_rows mode must be 'error' or 'overwrite', got {mode!r}")
+    text = "".join(
+        json.dumps({k: v for k, v in row.items() if v is not None},
+                   allow_nan=False, ensure_ascii=False) + "\n"
+        for row in rows
+    )
+    jvm, fs, root = hadoop_fs(spark, path)
+    if fs.exists(root):
+        if mode == "error":
+            raise FileExistsError(f"path {path} already exists")
+        if not fs.delete(root, True):
+            raise IOError(f"could not delete {path} before overwriting it")
+    Path = jvm.org.apache.hadoop.fs.Path
+    tmp = Path(root, ".part-00000.json.tmp")
+    stream = fs.create(tmp, False)
+    try:
+        stream.write(text.encode("utf-8"))
+    finally:
+        stream.close()
+    dest = Path(root, "part-00000.json")
+    if not fs.rename(tmp, dest):
+        raise IOError(f"rename {tmp} -> {dest} returned false")
+
+
+def read_json_rows(spark: SparkSession, path: str) -> list[dict]:
+    """One dict per non-blank line of every visible, non-empty file under
+    ``path``, in file-name order — the reader of :func:`write_json_rows`
+    output and of directories Spark's JSON writer left (``_SUCCESS`` and
+    ``.crc`` sidecars are hidden). Raises ``FileNotFoundError`` for a
+    missing path and a ``ValueError`` naming ``path`` for a line that is
+    not JSON. Lines split on ``\\n`` only, as Spark's reader does: a raw
+    U+2028 inside a string value is data, not a line break."""
+    jvm, fs, _ = hadoop_fs(spark, path)
+    statuses = sorted(list_visible(spark, path), key=lambda st: st.getPath().getName())
+    rows = []
+    for st in statuses:
+        if not st.isFile() or st.getLen() == 0:
+            continue
+        stream = fs.open(st.getPath())
+        try:
+            text = jvm.org.apache.commons.io.IOUtils.toString(stream, "UTF-8")
+        finally:
+            stream.close()
+        for line in text.split("\n"):
+            if not line.strip():
+                continue
+            try:
+                rows.append(json.loads(line))
+            except ValueError as e:
+                raise ValueError(f"unparseable JSON at {path}: {e}") from e
+    return rows

@@ -643,6 +643,39 @@ def test_drift_report_guards(spark, emb, books, tmp_path):
         index_drift_report(spark, plain, emb)
 
 
+def test_drift_report_reads_cell_stats_by_existence(spark, emb, books, cents, tmp_path):
+    """Only a MISSING cell_stats snapshot (an index written before it
+    existed) reads as "no occupancy baseline"; a snapshot that exists but
+    cannot be read raises instead of silently dropping the occupancy half
+    of the refit decision."""
+    import shutil
+
+    from gdelt_2_0_event_database_pipeline_spark.operators.ivf import assign_cells
+    from gdelt_2_0_event_database_pipeline_spark.operators.pq import (
+        index_drift_report,
+        write_pq_index,
+    )
+
+    path = tmp_path / "ivfpq"
+    codes = pq_encode(emb, books).join(
+        assign_cells(emb, cents).select("vec_id", "cell"), "vec_id"
+    )
+    write_pq_index(codes, books, str(path), centroids=cents)
+    stats = path / "cell_stats"
+    parts = sorted(stats.glob("part-*.parquet"))
+    assert parts
+    for crc in stats.glob(".*.crc"):
+        crc.unlink()  # a stale checksum would fail first, masking the footer
+    parts[0].write_bytes(b"not a parquet file " * 8)
+    with pytest.raises(Exception, match="(?i)parquet"):
+        index_drift_report(spark, str(path), emb)
+
+    shutil.rmtree(stats)  # the legacy layout: no snapshot at all
+    rep = index_drift_report(spark, str(path), emb).first()
+    assert rep["occupancy_tvd"] is None and rep["n_build"] is None
+    assert rep["err_ratio"] is not None
+
+
 def test_drift_report_rotates_sample_on_opq_index(spark, tmp_path):
     """r13 ADVICE (medium): on an OPQ index the centroids live in ROTATED
     space, so the drift sample must be rotated into the index frame before
