@@ -22,10 +22,15 @@ Spark-first shape:
   leaves the executors. Deterministic: seeded init rotation (QR of a
   seeded Gaussian, sign-fixed), fixed iteration counts, first-minimum
   assignment ties.
-- **rotate** (``rotate_vectors``): a pure map-side Column expression —
+- **rotate**: ``rotate_vectors`` is a pure map-side Column expression —
   d ``aggregate`` dot folds against literal rotation rows (the
   ``random_projection`` expr path; d·d = 4096 literals at dim 64, well
-  under the codegen ceiling). Zero shuffles, zero Python.
+  under the codegen ceiling), zero shuffles, zero Python — for corpora
+  (fits, rebuilds, refits, the drift sample). Queries and append batches
+  rotate with ``ivf.fold_dots``, the same fold in numpy: driver-side in
+  ``rotate_queries_collected``, and as the first step of
+  ``pq.pq_encode_batch``'s one Arrow pass on an OPQ index. All three
+  agree bit for bit, which keeps append == rebuild parity.
 - **encode / search**: the rotated corpus feeds the UNCHANGED PQ
   machinery (``pq_encode`` / ``pq_topk``); queries are rotated
   driver-side inside their LUT build, so serving reads the same 8-byte
@@ -46,7 +51,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.sqltext import check_expr_col, sql_dots
-from .ivf import probe_assignments
+from .ivf import fold_dots, probe_assignments
 from .pq import _collect_fit_sample, _fit_pq_on_matrix
 
 
@@ -174,56 +179,6 @@ def rotate_vectors(
     )
 
 
-def rotate_batch_arrow(
-    df: DataFrame, rotation: list[list[float]], vec_col: str = "embedding"
-) -> DataFrame:
-    """``R·x`` over a micro-batch via ``mapInPandas`` — the append-path
-    rotation (``pq.append_pq_index`` on a rotated index). The dots are
-    pure-PYTHON left folds (explicitly NOT numpy matmul): CPython/numpy
-    scalar mul/add are the same IEEE-754 double operations the JVM
-    executes, in the same order, so results are BIT-identical to
-    ``rotate_vectors``' codegen fold and ``rotate_queries_collected``'s
-    driver fold (differential test in tests/test_opq.py) — which is what
-    keeps maintained==rebuild parity on a rotated index. Why not the
-    expression forms for this path: the d²-literal tree costs ~2.5 s of
-    per-plan analysis per micro-batch, and a nested-HOF literal evaluates
-    interpreted at ~µs/lambda — both dominate a small batch; the Arrow
-    seam is O(1) plan nodes and one vectorized pass. Bulk rotation keeps
-    ``rotate_vectors`` (codegen wins once data dominates). Wrong-width /
-    NULL vectors rotate to NULL (the ``rotate_vectors`` guard)."""
-    from pyspark.sql import types as T
-
-    d = len(rotation)
-    out_fields = [
-        T.StructField(f.name, T.ArrayType(T.DoubleType()), True)
-        if f.name == vec_col
-        else f
-        for f in df.schema.fields
-    ]
-    schema = T.StructType(out_fields)
-    cols = [f.name for f in df.schema.fields]
-
-    def _rot_batches(it):
-        for pdf in it:
-            out = []
-            for v in pdf[vec_col]:
-                if v is None or len(v) != d:
-                    out.append(None)
-                    continue
-                rv = []
-                for row in rotation:
-                    acc = 0.0
-                    for a, b in zip(v, row):
-                        acc += a * b
-                    rv.append(acc)
-                out.append(rv)
-            pdf = pdf.copy()
-            pdf[vec_col] = out
-            yield pdf[cols]
-
-    return df.mapInPandas(_rot_batches, schema)
-
-
 def rotate_queries_collected(
     queries: DataFrame,
     rotation: list[list[float]],
@@ -233,13 +188,14 @@ def rotate_queries_collected(
     """(rotated queries, raw sidecar) — the driver-side query-rotation
     seam shared by ``opq_topk`` and the rotated maintained-index search
     (``pq.ivf_pq_topk(rotation=...)``). Queries are bounded and collected
-    for their LUTs anyway; rotation uses explicit left-fold dots (not
-    numpy matmul) to match SQL ``list_dot_product`` and
+    for their LUTs anyway; rotation is ``ivf.fold_dots`` (left-fold dots,
+    not numpy matmul) to match SQL ``list_dot_product`` and
     ``rotate_vectors``'s aggregate fold bit-for-bit — what lets an
     at-rest OPQ index carry a DuckDB oracle. The raw sidecar
     ``(query_id, __raw_qv__)`` lets a rerank tail swap back to raw-space
     vectors (cosine is rotation-invariant, so raw-space rerank against
     the raw corpus is exact with no corpus re-rotation)."""
+    import numpy as np
     from pyspark.sql import types as T
 
     from .ivf import well_formed_vectors
@@ -252,20 +208,13 @@ def rotate_queries_collected(
         .collect()
     )
     spark = queries.sparkSession
-
-    def _rot(qv):
-        out = []
-        for row in rotation:
-            acc = 0.0
-            for a, b in zip(qv, row):
-                acc += a * b
-            out.append(acc)
-        return out
-
     id_dtype = queries.schema[id_col].dataType
     kept = [r for r in rows if len(r["__qv__"]) == d]
+    rotated_qv = fold_dots(
+        np.reshape([r["__qv__"] for r in kept], (len(kept), d)), rotation
+    )
     rotated = spark.createDataFrame(
-        [(r[id_col], _rot(r["__qv__"])) for r in kept],
+        [(r[id_col], rv.tolist()) for r, rv in zip(kept, rotated_qv)],
         f"`{id_col}` {id_dtype.simpleString()}, `{vec_col}` array<double>",
     )
     raw_df = spark.createDataFrame(

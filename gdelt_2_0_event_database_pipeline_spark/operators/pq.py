@@ -29,9 +29,10 @@ Spark-first shape, mirroring ``ivf.py``'s adjudicated patterns:
   the codegen kernel ``ivf.nearest_codes`` (posexplode + broadcast
   weight join + groupBy(id, sub) argmin — the ≥10⁶-row path, no per-row
   interpreted k×dim fold) and adds a groupBy(id) that packs the m
-  sub-codes; ``pq_encode_mapside`` packs the map-side
-  ``ivf.nearest_code_expr`` for small append batches; the Lloyd steps
-  and the residual fit assign with numpy ``ivf.probe_assignments``.
+  sub-codes; ``pq_encode_batch`` encodes an append batch for every index
+  flavour (raw, IVF-PQ, residual, OPQ) in one ``mapInPandas`` pass over
+  ``ivf.fold_nearest``, bit-identical to the codegen kernel; the Lloyd
+  steps and the residual fit assign with numpy ``ivf.probe_assignments``.
 - **search** (``pq_topk``): asymmetric distance computation (ADC). Each
   query precomputes an m×ncodes lookup table of subvector dot products
   driver-side (bounded — the query set is broadcast anyway); scoring a
@@ -79,7 +80,9 @@ from ..util import hadoop_fs, read_json_rows, write_json_rows
 from .ivf import (
     _assert_size,
     _check_codebooks,
-    nearest_code_expr,
+    code_sq_norms,
+    fold_dots,
+    fold_nearest,
     nearest_codes,
     probe_assignments,
     query_probe_cells,
@@ -237,81 +240,22 @@ def pq_encode(
     )
 
 
-def pq_encode_mapside(
-    df: DataFrame,
-    codebooks,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    carry: tuple[str, ...] = (),
-) -> DataFrame:
-    """Map-only twin of :func:`pq_encode` for SMALL batches — the
-    streaming-append hot path: zero shuffles, zero per-batch broadcast
-    builds, and an O(1)-node plan (``ivf.nearest_code_expr``: the whole
-    codebook is ONE nested array literal indexed by HOF lambdas), so the
-    fixed per-micro-batch cost is milliseconds of analysis instead of the
-    posexplode shape's two shuffle stages + broadcast per batch.
-
-    BIT-IDENTICAL to ``pq_encode``: the expression folds the same dots in
-    the same order as the codegen kernel and picks the same code, and
-    ``vhat_sq`` folds the chosen ``|c|²`` terms over ascending subspaces
-    as ``pq_encode``'s pack does — so maintained (append through here) ==
-    rebuild (posexplode path) holds exactly; pinned by the parity test in
-    tests/test_pq.py.
-
-    Large corpora should keep :func:`pq_encode`: HOF lambdas evaluate
-    outside whole-stage codegen, which loses to the codegen groupBy shape
-    once the data — not the per-plan fixed cost — dominates.
-
-    ``carry`` names input columns to pass through to the output (e.g. the
-    ingest partition, or a cell the caller computed with the same
-    expression), so the whole append batch is ONE map stage with no
-    joins at all."""
-    m, _, subdim = _check_codebooks(codebooks)
-    wf = _assert_size(
-        well_formed_vectors(df, vec_col), vec_col, m * subdim, "pq_encode"
-    )
-    staged = wf.select(
-        F.col(id_col),
-        nearest_code_expr(codebooks, _as_double(vec_col)).alias("__best__"),
-        *[F.col(c) for c in carry],
-    )
-    return staged.select(
-        F.col(id_col),
-        F.transform("__best__", lambda b: b["cid"]).alias("codes"),
-        F.aggregate(
-            F.transform("__best__", lambda b: b["csq"]),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        ).alias("vhat_sq"),
-        *[F.col(c) for c in carry],
-    )
-
-
-def _residual_cross_table(spark, centroids, codebooks):
-    """Broadcast (cell, csq, xtab) table for the residual-reconstruction
-    norm and score: xtab[s][c] = centroid_cell[sub s] · codebook[s][c],
-    csq = |centroid_cell|². n_cells × m × ncodes doubles — 4k entries at
-    the (16,16,16) defaults, ~4M (32 MB, still broadcastable) at a
-    1024-cell/256-code deployment; document before growing past that."""
+def _residual_tables(centroids, codebooks):
+    """(csq, xtab) of the residual-reconstruction norm: csq[cell] =
+    |centroid_cell|² and xtab[cell, s, c] = centroid_cell[sub s] ·
+    codebook[s][c]. The one source of these numbers for
+    :func:`ivf_pq_encode_residual`'s broadcast table and
+    :func:`pq_encode_batch`, so both paths add the same values.
+    n_cells × m × ncodes doubles — 4k entries at the (16,16,16) defaults,
+    ~4M (32 MB, still broadcastable) at a 1024-cell/256-code deployment;
+    document before growing past that."""
     import numpy as np
 
     cm = np.asarray(centroids, dtype=np.float64)
     cb = np.asarray(codebooks, dtype=np.float64)  # m × ncodes × subdim
-    m, ncodes, subdim = cb.shape
-    csub = cm.reshape(cm.shape[0], m, subdim)
-    # xtab[cell, s, c] = csub[cell, s] · cb[s, c]
-    xtab = np.einsum("ksd,scd->ksc", csub, cb)
-    rows = [
-        (
-            int(cell),
-            float((cm[cell] * cm[cell]).sum()),
-            [[float(x) for x in xtab[cell, s]] for s in range(m)],
-        )
-        for cell in range(cm.shape[0])
-    ]
-    return spark.createDataFrame(
-        rows, "cell int, __csq__ double, __xtab__ array<array<double>>"
-    )
+    m, _, subdim = cb.shape
+    csq = np.asarray([(c * c).sum() for c in cm])
+    return csq, np.einsum("ksd,scd->ksc", cm.reshape(cm.shape[0], m, subdim), cb)
 
 
 def ivf_pq_encode_residual(
@@ -355,7 +299,11 @@ def ivf_pq_encode_residual(
         )
     )
     enc = pq_encode(resid, codebooks, id_col=id_col, vec_col="__rv__")
-    xdf = _residual_cross_table(spark, centroids, codebooks)
+    csq, xtab = _residual_tables(centroids, codebooks)
+    xdf = spark.createDataFrame(
+        [(cell, float(csq[cell]), xtab[cell].tolist()) for cell in range(len(csq))],
+        "cell int, __csq__ double, __xtab__ array<array<double>>",
+    )
     out = (
         enc.withColumnRenamed("vhat_sq", "__rsq__")
         .join(resid.select(id_col, "cell"), id_col)
@@ -375,6 +323,91 @@ def ivf_pq_encode_residual(
         "cell",
         "codes",
         (F.col("__csq__") + 2 * cross + F.col("__rsq__")).alias("vhat_sq"),
+    )
+
+
+def pq_encode_batch(
+    df: DataFrame, meta, id_col: str, vec_col: str, partition_col: str
+) -> DataFrame:
+    """(id, codes array<int>, vhat_sq double, partition[, cell int]): an
+    append batch encoded by an index's ``meta`` — the
+    (codebooks, centroids, residual, rotation) tuple of
+    :func:`read_pq_meta` — in ONE ``mapInPandas`` pass over Arrow batches.
+    Every index flavour runs the same numpy kernel, which holds the
+    codebooks in its closure, in this order:
+
+    1. rotation R·v, if the index has one (``ivf.fold_dots``);
+    2. the cell, if it has centroids (``ivf.fold_nearest``);
+    3. the residual v − centroid[cell], if it is residual;
+    4. the codes, per subspace (``ivf.fold_nearest``);
+    5. vhat_sq: the chosen |c|² folded over ascending subspaces from 0.0;
+       on a residual index ``(|centroid|² + 2·cross) + that``, with cross
+       folded the same way over :func:`_residual_tables`.
+
+    Every step repeats the IEEE operations, in order, of the codegen
+    shapes (``rotate_vectors``, ``assign_cells``, :func:`pq_encode`,
+    :func:`ivf_pq_encode_residual`), so an appended row equals its
+    rebuild bit for bit. The plan holds no literal codebook and no
+    shuffle: a micro-batch pays one Python pass, not Catalyst analysis
+    of a ~1k-cell literal tree. Large corpora keep the codegen shapes.
+
+    Rows with NULL/empty vectors are dropped; a vector of any other width
+    than the index's fails the job with a named error, checked before the
+    rotation."""
+    import numpy as np
+    import pandas as pd
+    from pyspark.sql import types as T
+
+    codebooks, centroids, residual, rotation = meta
+    m, _, subdim = _check_codebooks(codebooks)
+    csq = code_sq_norms(codebooks)
+    if centroids is not None:
+        cm = np.asarray(centroids, dtype=np.float64)
+        cell_csq = code_sq_norms([centroids])[0]
+    if residual:
+        resid_csq, xtab = _residual_tables(centroids, codebooks)
+    fields = [
+        df.schema[id_col],
+        T.StructField("codes", T.ArrayType(T.IntegerType())),
+        T.StructField("vhat_sq", T.DoubleType()),
+        df.schema[partition_col],
+    ]
+    if centroids is not None:
+        fields.append(T.StructField("cell", T.IntegerType()))
+
+    def _encode(pdf):
+        n = len(pdf)
+        v = np.array(pdf[vec_col].tolist(), dtype=np.float64).reshape(n, m * subdim)
+        if rotation is not None:
+            v = fold_dots(v, rotation)
+        if centroids is not None:
+            cell, _ = fold_nearest(v, cm, cell_csq)
+            if residual:
+                v = v - cm[cell]
+        codes, chosen = zip(*(
+            fold_nearest(v[:, s * subdim : (s + 1) * subdim], codebooks[s], csq[s])
+            for s in range(m)
+        ))
+        # builtin sum: a left fold from the start value, as Spark's aggregate
+        vhat = sum(chosen, np.zeros(n))
+        if residual:
+            cross = sum((xtab[cell, s, c] for s, c in enumerate(codes)), np.zeros(n))
+            vhat = (resid_csq[cell] + 2.0 * cross) + vhat
+        out = pd.DataFrame({
+            id_col: pdf[id_col],
+            "codes": list(np.stack(codes, axis=1).astype(np.int32)),
+            "vhat_sq": vhat,
+            partition_col: pdf[partition_col],
+        })
+        if centroids is not None:
+            out["cell"] = cell.astype(np.int32)
+        return out
+
+    staged = _assert_size(
+        well_formed_vectors(df, vec_col), vec_col, m * subdim, "pq_encode_batch"
+    ).select(id_col, _as_double(vec_col).alias(vec_col), partition_col)
+    return staged.mapInPandas(
+        lambda batches: map(_encode, batches), T.StructType(fields)
     )
 
 
@@ -861,17 +894,19 @@ def append_pq_index(
     only the batch's ``partition_col`` partitions are rewritten —
     O(touched partitions) per batch regardless of index size.
 
-    Because ``pq_encode`` is a deterministic map-side expression of the
-    codebooks, append-then-search equals encode-everything-then-search
-    exactly (pinned in tests/test_pq.py), so searches over a maintained
-    index never drift from a fresh rebuild under the same codebooks.
+    The batch is encoded by :func:`pq_encode_batch` — one Arrow pass for
+    every index flavour, bit-identical to the codegen encode — so
+    append-then-search equals encode-everything-then-search exactly
+    (pinned in tests/test_pq.py and tests/test_streaming_ann.py), and
+    searches over a maintained index never drift from a fresh rebuild
+    under the same codebooks.
 
     ``new_docs`` must carry ``partition_col`` (stable per id within its
     partition value — the upsert caveat). The index must have been
     written with the same ``partition_col`` (``write_pq_index``). On an
     IVF-PQ index (persisted centroids) the batch's coarse cells are
-    assigned here too — same determinism argument, so maintained cells
-    equal rebuild cells exactly.
+    assigned in the same pass, a residual index encodes v − centroid,
+    and an OPQ index rotates the batch into its frame first.
 
     A batch racing a :func:`refit_pq_index` window would land in the OLD
     version and be silently dropped by the version swap; the contract is
@@ -888,45 +923,9 @@ def append_pq_index(
         )
     logical_root = path
     path = resolve_index_root(spark, path)  # append into the live version
-    codebooks, centroids, residual, rotation = read_pq_meta(spark, path)
-    if rotation is not None:
-        # OPQ index: the batch enters the index's rotated coordinate frame
-        # before any encode/assign — the Arrow-batched pure-Python fold
-        # (bit-identical IEEE ops to rotate_vectors' codegen fold, see
-        # rotate_batch_arrow), so the append==rebuild determinism argument
-        # is unchanged while the per-micro-batch cost is one vectorized
-        # pass with an O(1)-node plan. MapInPandas is also an optimizer
-        # barrier: the downstream encode and cell read the rotated column,
-        # never re-evaluating the rotation.
-        from .opq import rotate_batch_arrow
-
-        new_docs = rotate_batch_arrow(new_docs, rotation, vec_col=vec_col)
-    if residual:
-        # residual indexes carry their encoding rule in the meta: the
-        # batch is encoded against the SAME frozen (centroids, residual
-        # codebooks), so maintained==rebuild parity holds identically; the
-        # join re-attaches the partition value (the encode keeps only the id)
-        enc = ivf_pq_encode_residual(
-            new_docs, codebooks, centroids, id_col=id_col, vec_col=vec_col
-        ).join(new_docs.select(id_col, partition_col), id_col)
-    else:
-        # micro-batch hot path: the map-side expression (bit-identical to
-        # the posexplode kernel — see nearest_code_expr + the parity test)
-        # cuts the per-batch fixed cost from two shuffle stages + broadcast
-        # builds + two joins to ONE map stage producing the whole batch
-        # row (codes, vhat_sq, partition, cell) at once. The cell is
-        # selected last: every DataFrame step after a literal-codebook
-        # expression re-analyzes it, which is most of a batch's plan cost.
-        enc = pq_encode_mapside(
-            new_docs, codebooks, id_col=id_col, vec_col=vec_col,
-            carry=(partition_col,) if centroids is None else (partition_col, vec_col),
-        )
-        if centroids is not None:
-            cell = nearest_code_expr([centroids], _as_double(vec_col))
-            enc = enc.select(
-                id_col, "codes", "vhat_sq", partition_col,
-                cell.getItem(0).getField("cid").alias("cell"),
-            )
+    enc = pq_encode_batch(
+        new_docs, read_pq_meta(spark, path), id_col, vec_col, partition_col
+    )
     merge_upsert_batch(spark, enc, f"{path}/codes", [id_col], partition_col)
     live_after = resolve_index_root(spark, logical_root)
     if live_after != path:
@@ -1115,12 +1114,13 @@ def index_drift_report(
         # into the index frame before BOTH error passes — scoring raw
         # vectors against rotated centroids would inflate frozen_err (and
         # err_ratio) structurally, recommending refits with zero drift.
-        # Mirrors append_pq_index's dispatch: the sample is ≤ sample_cap
-        # rows, so the Arrow seam (O(1) plan nodes) beats the d²-literal
-        # codegen expression; the fold is bit-identical (test_opq.py).
-        from .opq import rotate_batch_arrow
+        # The codegen rotation: the sample is checkpointed right below, so
+        # its d²-literal plan is analysed once per report.
+        from .opq import rotate_vectors
 
-        s = rotate_batch_arrow(s, rotation, vec_col="__v__")
+        s = rotate_vectors(s, rotation, vec_col="__v__", out_col="__r__").select(
+            "__id__", F.col("__r__").alias("__v__")
+        )
     s = s.localCheckpoint(eager=True)  # fit and both error passes share it
     refit = fit_ivf_centroids(
         s, "__v__", "__id__", k=n_cells, iters=refit_iters, seed=seed,
@@ -1246,15 +1246,22 @@ def refit_pq_index(
     if rotation is not None:
         # OPQ index: the rotation is the index's coordinate FRAME, not a
         # fitted quantizer — the refit re-fits centroids/codebooks WITHIN
-        # it (rotate the corpus with the same map-side expression appends
-        # use, then fit/encode in rotated space and carry the rotation
+        # it (rotate the corpus with rotate_vectors' fold, which the
+        # append's fold_dots matches bit for bit, then fit/encode in
+        # rotated space and carry the rotation
         # into the new version's meta). Re-fitting the rotation itself is
         # a new index build (fit_opq + write_pq_index), by design: it
         # would change the coordinate frame under retained old versions.
+        # The width check comes first: rotate_vectors turns a wrong-width
+        # vector into NULL, which the fit and encode would then drop.
         from .opq import rotate_vectors
 
+        checked = _assert_size(
+            well_formed_vectors(corpus, vec_col), vec_col, len(rotation),
+            "refit_pq_index",
+        )
         fit_corpus = (
-            rotate_vectors(corpus, rotation, vec_col=vec_col, out_col="__rot__")
+            rotate_vectors(checked, rotation, vec_col=vec_col, out_col="__rot__")
             .drop(vec_col)
             .withColumnRenamed("__rot__", vec_col)
         )

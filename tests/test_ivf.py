@@ -164,37 +164,27 @@ def test_default_nprobe_recall_sf01(spark):
 
 
 def test_assign_cells_mapside_bit_parity(spark):
-    """The map-side cell rule (nearest_code_expr, the append path's cell;
-    pq_encode_mapside at m=1) must produce the SAME (id, cell) set as the
-    codegen assign_cells and the numpy rule — identical |c|^2 - 2*v*c
-    score, identical fold order, identical tie rule — on the full test
-    corpus. The coarse quantizer is the one-subspace PQ codebook."""
-    from gdelt_2_0_event_database_pipeline_spark.operators.ivf import (
-        nearest_code_expr,
-    )
+    """The append path's cell rule (pq_encode_batch's fold_nearest over
+    the centroids; its codes at m=1 with the centroids as the codebook)
+    must produce the SAME (id, cell) set as the codegen assign_cells and
+    the numpy rule — identical |c|^2 - 2*v*c score, identical fold order,
+    identical tie rule — on the full test corpus. The coarse quantizer is
+    the one-subspace PQ codebook."""
     from gdelt_2_0_event_database_pipeline_spark.operators.pq import (
         fit_pq_codebooks,
-        pq_encode_mapside,
-    )
-    from gdelt_2_0_event_database_pipeline_spark.operators.similarity import (
-        _as_double,
+        pq_encode_batch,
     )
 
     emb = spark.read.parquet("/root/testdata/sf0.01/embeddings.parquet")
     cents = fit_ivf_centroids(emb, k=8, iters=2)
     assert cents == fit_pq_codebooks(emb, m=1, ncodes=8, iters=2)[0]
     a = {(r.vec_id, r.cell) for r in assign_cells(emb, cents).collect()}
-    b = {
-        (r.vec_id, r.cell)
-        for r in emb.select(
-            "vec_id",
-            nearest_code_expr([cents], _as_double("embedding"))
-            .getItem(0)
-            .getField("cid")
-            .alias("cell"),
-        ).collect()
-    }
-    c = {(r[0], r[1][0]) for r in pq_encode_mapside(emb, [cents]).collect()}
+    rows = pq_encode_batch(
+        emb.withColumn("day", F.lit("d0")), ([cents], cents, False, None),
+        "vec_id", "embedding", "day",
+    ).collect()
+    b = {(r.vec_id, r.cell) for r in rows}
+    c = {(r.vec_id, r.codes[0]) for r in rows}
     assert a == b == c and len(a) == emb.count()
     assert a == set(_np_cells(emb, cents).items())
 

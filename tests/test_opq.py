@@ -174,24 +174,15 @@ def test_opq_recall_not_worse_than_pq_on_correlated(spark, vec_df, xmat, fitted)
     assert r_opq >= r_plain - 0.05, (r_plain, r_opq)
 
 
-def test_maintained_opq_ivfpq_index_append_equals_rebuild(spark, tmp_path, vec_df, fitted):
-    """The r13 composition: an at-rest IVF-PQ index carrying an OPQ
-    rotation sidecar. Appends rotate each batch with the same map-side
-    expression a rebuild would use, so maintained codes+cells equal an
-    encode-everything rebuild EXACTLY (in rotation space); search through
-    ivf_pq_search_index rotates queries automatically from the meta and
-    reranks in raw space."""
+def _opq_index(spark, vec_df, rotation, path):
+    """Write a small IVF-PQ index in the rotated frame at ``path`` over
+    the first 400 rows; returns (rotated corpus, centroids, codebooks)."""
     from gdelt_2_0_event_database_pipeline_spark.operators.ivf import (
         assign_cells,
         fit_ivf_centroids,
     )
-    from gdelt_2_0_event_database_pipeline_spark.operators.pq import (
-        ivf_pq_search_index,
-        read_pq_index,
-        write_pq_index,
-    )
+    from gdelt_2_0_event_database_pipeline_spark.operators.pq import write_pq_index
 
-    rotation, _ = fitted
     rot_all = (
         rotate_vectors(vec_df, rotation, out_col="__r__")
         .drop("embedding")
@@ -199,22 +190,36 @@ def test_maintained_opq_ivfpq_index_append_equals_rebuild(spark, tmp_path, vec_d
     )
     cents = fit_ivf_centroids(rot_all, k=4, iters=2)
     books = fit_pq_codebooks(rot_all, m=M, ncodes=NCODES, iters=2)
-    base_rot = rot_all.filter("vec_id < 400")
-    codes0 = pq_encode(base_rot, books).join(
-        assign_cells(base_rot, cents).select("vec_id", "cell"),
-        "vec_id",
+    base = rot_all.filter("vec_id < 400")
+    codes = pq_encode(base, books).join(
+        assign_cells(base, cents).select("vec_id", "cell"), "vec_id"
     ).withColumn("ingest_day", F.lit("d0"))
-    index = str(tmp_path / "opq_idx")
     write_pq_index(
-        codes0, books, index, partition_col="ingest_day",
+        codes, books, path, partition_col="ingest_day",
         centroids=cents, rotation=rotation,
     )
+    return rot_all, cents, books
 
-    # append a RAW batch: the index rotates it internally
+
+def test_maintained_opq_ivfpq_index_append_equals_rebuild(spark, tmp_path, vec_df, fitted):
+    """The r13 composition: an at-rest IVF-PQ index carrying an OPQ
+    rotation sidecar. Appends rotate each batch with the fold a rebuild's
+    rotate_vectors performs, so maintained codes+cells equal an
+    encode-everything rebuild EXACTLY (in rotation space); search through
+    ivf_pq_search_index rotates queries automatically from the meta and
+    reranks in raw space."""
+    from gdelt_2_0_event_database_pipeline_spark.operators.ivf import assign_cells
     from gdelt_2_0_event_database_pipeline_spark.operators.pq import (
         append_pq_index,
+        ivf_pq_search_index,
+        read_pq_index,
     )
 
+    rotation, _ = fitted
+    index = str(tmp_path / "opq_idx")
+    rot_all, cents, books = _opq_index(spark, vec_df, rotation, index)
+
+    # append a RAW batch: the index rotates it internally
     append_pq_index(
         spark, index,
         vec_df.filter("vec_id >= 400").withColumn("ingest_day", F.lit("d1")),
@@ -310,33 +315,90 @@ def test_refit_preserves_rotation_frame(spark, tmp_path, vec_df, fitted):
     assert got == exact
 
 
-def test_rotate_batch_arrow_bit_parity(spark, vec_df, fitted):
-    """rotate_batch_arrow (the micro-batch append rotation) must equal
-    rotate_vectors bit-for-bit on the full fixture — CPython scalar
-    mul/add are the same IEEE doubles in the same left-fold order —
-    including the NULL/width guard behavior."""
-    from gdelt_2_0_event_database_pipeline_spark.operators.opq import (
-        rotate_batch_arrow,
+def test_rotate_batch_arrow_bit_parity(spark, vec_df, fitted, tmp_path):
+    """The append's fused rotation (ivf.fold_dots, the first step of
+    pq_encode_batch on an OPQ index) must equal rotate_vectors
+    bit-for-bit on the full fixture — numpy mul/add are the same IEEE
+    doubles in the same left-fold order — and so must the codes, vhat_sq
+    and cell it feeds. A NULL vector yields no row; a wrong-width vector
+    fails the batch with a named error instead of vanishing."""
+    from gdelt_2_0_event_database_pipeline_spark.operators.ivf import (
+        assign_cells,
+        fold_dots,
+    )
+    from gdelt_2_0_event_database_pipeline_spark.operators.pq import (
+        pq_encode_batch,
     )
 
     rotation, _ = fitted
+    rows = sorted(vec_df.collect(), key=lambda r: r["vec_id"])
     a = {
-        r["vec_id"]: list(r["rotated"]) if r["rotated"] is not None else None
+        r["vec_id"]: list(r["rotated"])
         for r in rotate_vectors(vec_df, rotation).select("vec_id", "rotated").collect()
     }
-    b = {
-        r["vec_id"]: list(r["embedding"]) if r["embedding"] is not None else None
-        for r in rotate_batch_arrow(vec_df, rotation).collect()
-    }
+    b = dict(
+        zip(
+            [r["vec_id"] for r in rows],
+            fold_dots([r["embedding"] for r in rows], rotation).tolist(),
+        )
+    )
     assert a == b and len(a) == N
 
-    # width-mismatch / NULL rows rotate to NULL on both paths
-    bad = spark.createDataFrame(
-        [(10_000, [1.0, 2.0]), (10_001, None)],
-        "vec_id long, embedding array<double>",
+    rot_all, cents, books = _opq_index(
+        spark, vec_df, rotation, str(tmp_path / "opq_idx")
     )
+    meta = (books, cents, False, rotation)
+
+    def fused(df):
+        return pq_encode_batch(
+            df.withColumn("ingest_day", F.lit("d1")), meta,
+            "vec_id", "embedding", "ingest_day",
+        )
+
     got = {
-        r["vec_id"]: r["embedding"]
-        for r in rotate_batch_arrow(bad, rotation).collect()
+        r["vec_id"]: (r["cell"], list(r["codes"]), r["vhat_sq"])
+        for r in fused(vec_df).collect()
     }
-    assert got == {10_000: None, 10_001: None}
+    want = {
+        r["vec_id"]: (r["cell"], list(r["codes"]), r["vhat_sq"])
+        for r in pq_encode(rot_all, books)
+        .join(assign_cells(rot_all, cents).select("vec_id", "cell"), "vec_id")
+        .collect()
+    }
+    assert got == want and len(got) == N
+
+    null_row = spark.createDataFrame(
+        [(10_001, None)], "vec_id long, embedding array<double>"
+    )
+    assert fused(null_row).collect() == []
+    bad = spark.createDataFrame(
+        [(10_000, [1.0, 2.0])], "vec_id long, embedding array<double>"
+    )
+    with pytest.raises(Exception, match=f"pq_encode_batch: expected embedding of length {D}, got 2"):
+        fused(bad).collect()
+
+
+def test_opq_append_and_refit_reject_wrong_width(spark, vec_df, fitted, tmp_path):
+    """A wrong-width vector in an OPQ append batch or refit corpus raises a
+    named error, as it does on raw and IVF-PQ indexes. Rotating first
+    would turn it into NULL, which the encode then drops from the index
+    without a word."""
+    from gdelt_2_0_event_database_pipeline_spark.operators.pq import (
+        append_pq_index,
+        refit_pq_index,
+    )
+
+    rotation, _ = fitted
+    index = str(tmp_path / "opq_idx")
+    _opq_index(spark, vec_df, rotation, index)
+    bad = spark.createDataFrame(
+        [(10_000, [1.0, 2.0])], "vec_id long, embedding array<double>"
+    )
+    batch = vec_df.filter("vec_id >= 400").unionByName(bad)
+    with pytest.raises(Exception, match=f"pq_encode_batch: expected embedding of length {D}, got 2"):
+        append_pq_index(spark, index, batch.withColumn("ingest_day", F.lit("d1")))
+    with pytest.raises(Exception, match=f"refit_pq_index: expected embedding of length {D}, got 2"):
+        refit_pq_index(
+            spark, index, vec_df.unionByName(bad).withColumn("ingest_day", F.lit("d0")),
+            partition_col="ingest_day", iters=2,
+        )

@@ -1145,38 +1145,38 @@ def test_residual_encode_fuzz_matches_numpy(spark):
 
 
 def test_pq_encode_mapside_bit_parity(spark):
-    """The streaming-append hot path (pq_encode_mapside, the map-side
-    nearest_code_expr) must equal the codegen pq_encode BIT-FOR-BIT —
-    codes and vhat_sq — and the numpy rule (probe_assignments) on the
-    full test corpus: maintained==rebuild parity rests on the Spark paths
+    """The append encode (pq_encode_batch, one Arrow pass over the
+    ivf.fold_nearest kernel) must equal the codegen pq_encode BIT-FOR-BIT
+    — codes and vhat_sq — and the numpy rule (probe_assignments) on the
+    full test corpus: maintained==rebuild parity rests on both paths
     folding identical fp operations in identical order. Also pins the
-    carry passthrough append_pq_index uses for the batch's cell."""
-    from pyspark.sql import functions as F
-
+    partition passthrough and the batch's cell, the residual flavour
+    (== ivf_pq_encode_residual), and array_sort's order on exact ties,
+    -0.0 and non-finite components."""
     from gdelt_2_0_event_database_pipeline_spark.operators.ivf import (
         assign_cells,
         fit_ivf_centroids,
-        nearest_code_expr,
         probe_assignments,
     )
     from gdelt_2_0_event_database_pipeline_spark.operators.pq import (
         fit_pq_codebooks,
-        pq_encode,
-        pq_encode_mapside,
+        fit_residual_codebooks,
+        ivf_pq_encode_residual,
+        pq_encode_batch,
     )
-    from gdelt_2_0_event_database_pipeline_spark.operators.similarity import (
-        _as_double,
-    )
+
+    def batch(df, books, cents=None, residual=False):
+        tagged = df.withColumn("day", F.lit("d0"))
+        return pq_encode_batch(
+            tagged, (books, cents, residual, None), "vec_id", "embedding", "day"
+        ).collect()
 
     emb = spark.read.parquet("/root/testdata/sf0.01/embeddings.parquet")
     ids, x = _np_corpus(emb)
     books = fit_pq_codebooks(emb, m=16, ncodes=16, iters=2)
     m, _, subdim = np.asarray(books).shape
     a = {r[0]: (list(r[1]), r[2]) for r in pq_encode(emb, books).collect()}
-    b = {
-        r[0]: (list(r[1]), r[2])
-        for r in pq_encode_mapside(emb, books).collect()
-    }
+    b = {r[0]: (list(r[1]), r[2]) for r in batch(emb, books)}
     assert a == b and len(a) == len(ids)
     want = np.stack(
         [
@@ -1189,16 +1189,41 @@ def test_pq_encode_mapside_bit_parity(spark):
         vid: codes for vid, (codes, _) in a.items()
     }
 
-    # carry: one map stage yields (codes, vhat_sq, day, embedding) and the
-    # batch's cell is computed from the carried vector
+    # the partition passes through and the batch's cell rides the same pass
     cents = fit_ivf_centroids(emb, k=8, iters=2)
-    tagged = emb.withColumn("day", F.lit("d0"))
-    fused = pq_encode_mapside(tagged, books, carry=("day", "embedding")).select(
-        "vec_id",
-        "day",
-        nearest_code_expr([cents], _as_double("embedding")).getItem(0).getField("cid").alias("cell"),
-    )
-    got = {r["vec_id"]: (r["day"], r["cell"]) for r in fused.collect()}
+    got = {r["vec_id"]: (r["day"], r["cell"]) for r in batch(emb, books, cents)}
     assert got == {
         r["vec_id"]: ("d0", r["cell"]) for r in assign_cells(emb, cents).collect()
     }
+
+    # residual flavour: (cell, codes, vhat_sq) == the codegen residual encode
+    rbooks = fit_residual_codebooks(emb, cents, m=16, ncodes=16, iters=2)
+    want_r = {
+        r["vec_id"]: (r["cell"], list(r["codes"]), r["vhat_sq"])
+        for r in ivf_pq_encode_residual(emb, rbooks, cents).collect()
+    }
+    got_r = {
+        r["vec_id"]: (r["cell"], list(r["codes"]), r["vhat_sq"])
+        for r in batch(emb, rbooks, cents, residual=True)
+    }
+    assert got_r == want_r and len(got_r) == len(ids)
+
+    # exact ties (values rounded to 0.1, codes copied from data rows, two
+    # of them twice; on these rows a BLAS dot picks another code than the
+    # fold 7 times), a -0.0 component and +-inf components: inf * 0.0 and
+    # inf - inf make NaN scores, which array_sort orders after every number
+    # (row 4 scores [nan, inf, ...]: code 1 wins, not the first NaN)
+    rng = np.random.RandomState(2)
+    xt = np.round(rng.uniform(-0.3, 0.3, (300, 8)), 1)
+    xt[10:16, 0] = np.abs(xt[10:16, 0])
+    xt[10, 0] = 0.0
+    xt[0, 0], xt[1, 3], xt[2, 5], xt[4, 0] = -0.0, np.inf, -np.inf, -np.inf
+    xt[3, :2] = [np.inf, -np.inf]
+    tbooks = [
+        [list(map(float, xt[i, s * 4 : (s + 1) * 4])) for i in [10, 11, 12, 13, 14, 15, 11, 10]]
+        for s in range(2)
+    ]
+    edge = _vec_df(spark, range(300), xt)
+    a = {r[0]: (list(r[1]), r[2]) for r in pq_encode(edge, tbooks).collect()}
+    b = {r[0]: (list(r[1]), r[2]) for r in batch(edge, tbooks)}
+    assert a == b and len(a) == 300
