@@ -37,22 +37,21 @@ pipeline; the curve-derived default lands ≥0.75 even on uniform data, and
 ``tests/test_ivf.py::test_default_nprobe_recall_sf01`` re-measures it.
 
 One nearest-code rule (argmin |c|² − 2·v·c, lower id on ties), spelled
-once per execution shape. The coarse quantizer is a one-subspace PQ
-codebook (Jégou et al. 2011, IVFADC), so IVF and ``pq.py`` share:
-- ``nearest_codes`` — posexplode + broadcast weight-table join + one
-  codegen groupBy(id, sub) of conditional dot sums, argmin at expression
-  level: the large-corpus path behind ``assign_cells`` and
-  ``pq.pq_encode``.
+twice. The coarse quantizer is a one-subspace PQ codebook (Jégou et al.
+2011, IVFADC), so IVF and ``pq.py`` share:
 - ``fold_nearest`` — numpy over ``fold_dots``, which folds each dot
-  over ascending positions from 0.0 exactly as the codegen kernel's
-  single-partial ``F.sum`` does, so the two agree bit for bit. It runs
-  inside ``pq.pq_encode_batch``, the one Arrow pass behind every index
-  append (rotation, cell, residual and codes with the codebooks in the
-  closure, no literal tree in the plan). Pinned by
+  over ascending positions from 0.0 (the order of Spark's ``aggregate``
+  and of DuckDB's ``list_dot_product``). It is the kernel of
+  ``pq.pq_encode_batch``, the one Arrow pass behind every Spark encode:
+  ``assign_cells``, ``pq.pq_encode``, the residual encode, index
+  appends and refits (rotation, cell, residual and codes with the
+  codebooks in the closure, no literal tree and no shuffle in the
+  plan). Its picks are pinned against a Spark SQL reference (posexplode
+  → join → ``F.sum`` → ``array_sort``) by
   ``tests/test_ivf.py::test_assign_cells_mapside_bit_parity`` and
   ``tests/test_pq.py::test_pq_encode_mapside_bit_parity``.
 - ``probe_assignments`` — numpy on BLAS, for bounded driver-side sets
-  where no engine must reproduce the bits: query probes, the Lloyd steps
+  whose bits no persisted code depends on: query probes, the Lloyd steps
   of every fit (codebooks are persisted, so both engines read them), the
   residual fit's cells. A fold there is far slower: one 100k-row,
   64-d assignment step on a 4-core Xeon took 0.71 s against BLAS's
@@ -155,83 +154,6 @@ def code_sq_norms(codebooks) -> list[list[float]]:
     return [[float(sum(w * w for w in cent)) for cent in cb] for cb in codebooks]
 
 
-def nearest_codes(
-    df: DataFrame, codebooks, id_col: str, vec_col: str, what: str
-) -> DataFrame:
-    """(__eid__, __sub__, __code__, __csq__): one row per (vector,
-    subspace) with the nearest code id and its |c|² — the codegen
-    nearest-code kernel behind both :func:`assign_cells` (one subspace)
-    and ``pq.pq_encode`` (m subspaces).
-
-    posexplode → broadcast (pos → sub, code, weight) join → one codegen
-    groupBy(id, sub) of ``ncodes`` conditional dot sums → argmin of
-    |c|² − 2·v_sub·c at expression level (|v_sub|² is row-constant, so
-    it cannot move the argmin), lower code id on ties. Each id's exploded
-    rows stay in position order inside one partial aggregate, which is
-    what lets :func:`fold_nearest` fold the same dots bit-for-bit.
-    Grouping by (id, sub) keeps the expression tree ncodes-sized at any m.
-
-    Rows with NULL/empty vectors are dropped (``well_formed_vectors``);
-    a vector whose length is not m×subdim fails the job with an error
-    naming ``what``."""
-    m, ncodes, subdim = _check_codebooks(codebooks)
-    spark = df.sparkSession
-    wtab = spark.createDataFrame(
-        [
-            (s * subdim + j, s, c, float(w))
-            for s, cb in enumerate(codebooks)
-            for c, cent in enumerate(cb)
-            for j, w in enumerate(cent)
-        ],
-        "__pos__ int, __sub__ int, __code__ int, __w__ double",
-    )
-    # per-sub |c|² lookup rides the same broadcast pattern as data, not a
-    # literal tree: (sub, array of ncodes squared norms)
-    csq_df = spark.createDataFrame(
-        list(enumerate(code_sq_norms(codebooks))),
-        "__sub__ int, __sq__ array<double>",
-    )
-    persub = (
-        _assert_size(well_formed_vectors(df, vec_col), vec_col, m * subdim, what)
-        .select(
-            F.col(id_col).alias("__eid__"),
-            F.posexplode(_as_double(vec_col)).alias("__pos__", "__val__"),
-        )
-        .join(F.broadcast(wtab), "__pos__")
-        # one subspace groups by id alone (a literal key is dropped by the
-        # optimizer): the output then stays hash-partitioned by id, so the
-        # joins on id that follow (cells ⋈ codes, residuals) add no shuffle
-        .groupBy("__eid__", (F.col("__sub__") if m > 1 else F.lit(0)).alias("__sub__"))
-        .agg(
-            *[
-                F.sum(
-                    F.when(
-                        F.col("__code__") == c, F.col("__val__") * F.col("__w__")
-                    )
-                ).alias(f"__d{c}__")
-                for c in range(ncodes)
-            ]
-        )
-        .join(F.broadcast(csq_df), "__sub__")
-    )
-    scores = F.array(
-        *[
-            F.struct(
-                (F.element_at("__sq__", c + 1) - 2 * F.col(f"__d{c}__")).alias("s"),
-                F.lit(c).alias("cid"),
-            )
-            for c in range(ncodes)
-        ]
-    )
-    best = F.array_sort(scores).getItem(0).getField("cid")
-    return persub.select(
-        "__eid__",
-        "__sub__",
-        best.alias("__code__"),
-        F.element_at("__sq__", best + F.lit(1)).alias("__csq__"),
-    )
-
-
 def assign_cells(
     df: DataFrame,
     centroids: list[list[float]],
@@ -239,23 +161,26 @@ def assign_cells(
     vec_col: str = "embedding",
 ) -> DataFrame:
     """(id, cell) pairs: each row's nearest centroid — the coarse
-    quantizer as a one-subspace codebook through :func:`nearest_codes`
-    (one shuffle of (id, k dots), lower cell id on ties), so a cell is
+    quantizer as a one-subspace codebook through ``pq``'s one encode
+    kernel (``pq.pq_encode_batch``, lower cell id on ties), so a cell is
     exactly ``codes[0]`` of ``pq.pq_encode(df, [centroids])``. NULL/empty
     vectors are dropped; a vector of the wrong length fails the job."""
-    return nearest_codes(
-        df, [centroids], id_col=id_col, vec_col=vec_col, what="assign_cells"
-    ).select(F.col("__eid__").alias(id_col), F.col("__code__").alias("cell"))
+    from .pq import _encode_batches
+
+    return _encode_batches(
+        df, ([centroids], None, False, None), id_col, vec_col, None,
+        "assign_cells",
+    ).select(id_col, F.col("codes")[0].alias("cell"))
 
 
 def fold_dots(x, c):
     """(n × k) float64 matrix of dots x_i · c_j, each folded over ascending
     positions from 0.0: ``((0.0 + x0·c0) + x1·c1) + …``. One multiply
     and one add per position, vectorised over rows and codes: the IEEE
-    operations, in order, of the codegen kernel's single-partial
-    ``F.sum`` and of ``opq.rotate_vectors``' ``aggregate`` fold, so the
-    results agree bit for bit. ``@``, ``einsum`` and ``np.sum`` reorder
-    the additions and do not."""
+    operations, in order, of ``opq.rotate_vectors``' ``aggregate`` fold
+    and of a single-partial Spark ``F.sum`` over position-ordered rows,
+    so the results agree bit for bit. ``@``, ``einsum`` and ``np.sum``
+    reorder the additions and do not."""
     import numpy as np
 
     x = np.asarray(x, dtype=np.float64)
@@ -268,10 +193,9 @@ def fold_dots(x, c):
 
 def fold_nearest(x, codebook, csq):
     """(ids, chosen |c|²) per row of ``x``: argmin of |c|² − 2·x·c over
-    :func:`fold_dots`, against ``csq`` from :func:`code_sq_norms` — the
-    scores :func:`nearest_codes` computes, picked in its ``array_sort``
-    order: the lower id on exact ties (−0.0 equals 0.0) and NaN after
-    every number."""
+    :func:`fold_dots`, against ``csq`` from :func:`code_sq_norms`, picked
+    in Spark's ``array_sort`` order: the lower id on exact ties (−0.0
+    equals 0.0) and NaN after every number."""
     import numpy as np
 
     csq = np.asarray(csq, dtype=np.float64)
@@ -350,8 +274,8 @@ def fit_ivf_centroids(
     ``fit_sample_n`` caps the FIT set with the hash-ranked deterministic
     sampler (TakeOrderedAndProject — no full shuffle): a coarse quantizer
     needs a representative sample, not the corpus, so at 10⁹ rows the fit
-    touches ≤100k vectors while cell ASSIGNMENT of the full corpus stays on
-    the codegen ``assign_cells`` path. ``None`` fits on everything that
+    touches ≤100k vectors while cell ASSIGNMENT of the full corpus stays a
+    map-side ``assign_cells`` pass. ``None`` fits on everything that
     fits the driver (local experiments). The Lloyd steps run driver-side
     in numpy on that bounded sample — one collect beats ``iters`` Spark
     jobs each carrying a k×dim-literal tree through analysis/codegen."""
@@ -401,9 +325,8 @@ def ivf_topk(
     checked-in ANN_RECALL.json measurement. Pass an explicit ``nprobe``
     to pin the cost budget instead.
 
-    The CORPUS side is assigned via ``assign_cells`` (posexplode + codegen
-    aggregate — one bounded shuffle of (id, k dots), no per-row interpreted
-    k×dim fold, the shape that survives a 10⁹-row corpus); the QUERY side —
+    The CORPUS side is assigned via ``assign_cells`` (one map-side Arrow
+    pass, no shuffle); the QUERY side —
     small by construction (it is broadcast into the probe join regardless) —
     is collected and probe-assigned driver-side with numpy
     (``query_probe_cells``). Building the probe cells as data instead of

@@ -25,16 +25,18 @@ Spark-first shape:
 - **rotate**: ``rotate_vectors`` is a pure map-side Column expression —
   d ``aggregate`` dot folds against literal rotation rows (the
   ``random_projection`` expr path; d·d = 4096 literals at dim 64, well
-  under the codegen ceiling), zero shuffles, zero Python — for corpora
-  (fits, rebuilds, refits, the drift sample). Queries and append batches
-  rotate with ``ivf.fold_dots``, the same fold in numpy: driver-side in
-  ``rotate_queries_collected``, and as the first step of
-  ``pq.pq_encode_batch``'s one Arrow pass on an OPQ index. All three
-  agree bit for bit, which keeps append == rebuild parity.
-- **encode / search**: the rotated corpus feeds the UNCHANGED PQ
-  machinery (``pq_encode`` / ``pq_topk``); queries are rotated
-  driver-side inside their LUT build, so serving reads the same 8-byte
-  codes. OPQ changes WHERE the code bits go, not how many there are.
+  under the codegen ceiling), zero shuffles, zero Python — for the
+  vectors the fits and the drift report read. Encodes and queries
+  rotate with ``ivf.fold_dots``, the same fold in numpy: as the first
+  step of ``pq.pq_encode_batch``'s one Arrow pass on an OPQ index
+  (builds, appends, refits), and driver-side in
+  ``rotate_queries_collected``. Both agree with ``rotate_vectors`` bit
+  for bit.
+- **encode / search**: the rotated vectors feed the UNCHANGED PQ
+  machinery (``pq_encode_batch`` with the rotation in its meta /
+  ``pq_topk``); queries are rotated driver-side inside their LUT build,
+  so serving reads the same 8-byte codes. OPQ changes WHERE the code
+  bits go, not how many there are.
 
 Measured (tools/ann_recall.py 'opq' section, ANN_RECALL.json): the gain
 appears exactly where theory predicts — anisotropic/correlated corpora

@@ -24,15 +24,14 @@ Spark-first shape, mirroring ``ivf.py``'s adjudicated patterns:
   executors). The IVF coarse quantizer is this fit with one subspace
   (``ivf.fit_ivf_centroids``).
 - **encode**: the nearest-code rule (argmin |c|² − 2·v_sub·c, lower code
-  id on ties; |v_sub|² is row-constant) lives once per execution shape
-  in ``ivf.py``, shared with the coarse quantizer: ``pq_encode`` runs
-  the codegen kernel ``ivf.nearest_codes`` (posexplode + broadcast
-  weight join + groupBy(id, sub) argmin — the ≥10⁶-row path, no per-row
-  interpreted k×dim fold) and adds a groupBy(id) that packs the m
-  sub-codes; ``pq_encode_batch`` encodes an append batch for every index
-  flavour (raw, IVF-PQ, residual, OPQ) in one ``mapInPandas`` pass over
-  ``ivf.fold_nearest``, bit-identical to the codegen kernel; the Lloyd
-  steps and the residual fit assign with numpy ``ivf.probe_assignments``.
+  id on ties; |v_sub|² is row-constant) lives in ``ivf.py``, shared with
+  the coarse quantizer. Every Spark encode — ``pq_encode``,
+  ``ivf_pq_encode_residual``, ``ivf.assign_cells``, the append and the
+  refit — is ``pq_encode_batch``: one ``mapInPandas`` pass whose numpy
+  kernel (``ivf.fold_nearest``) holds the codebooks and handles every
+  index flavour (raw, IVF-PQ, residual, OPQ), no shuffle and no literal
+  codebook in the plan. The Lloyd steps and the residual fit assign with
+  numpy ``ivf.probe_assignments`` on BLAS.
 - **search** (``pq_topk``): asymmetric distance computation (ADC). Each
   query precomputes an m×ncodes lookup table of subvector dot products
   driver-side (bounded — the query set is broadcast anyway); scoring a
@@ -83,7 +82,6 @@ from .ivf import (
     code_sq_norms,
     fold_dots,
     fold_nearest,
-    nearest_codes,
     probe_assignments,
     query_probe_cells,
     well_formed_vectors,
@@ -204,58 +202,12 @@ def pq_encode(
     second pass; the cross-subspace dot terms are zero only in
     expectation, so this is the standard PQ-cosine approximation).
 
-    The large-corpus path (see module doc): the shared codegen kernel
-    ``ivf.nearest_codes`` (one row per (id, subspace) with its nearest
-    code, lower code id on ties — the kernel ``assign_cells`` runs with
-    one subspace), then one groupBy(id) packing the m sub-codes into the
-    codes array. Grouping the kernel by (id, sub) instead of a single
-    m×ncodes-wide groupBy(id) keeps the expression tree ncodes-sized —
-    the wide form's m×ncodes aggregate columns cost ~9 s of Catalyst
-    analysis + codegen per plan at m=16/ncodes=16 and blow past JIT
-    method limits; the extra pack shuffle carries only m small-int rows
-    per id, which is noise next to the posexplode stage at any scale.
+    One Arrow pass of the shared encode kernel (:func:`pq_encode_batch`).
     Rows with NULL/empty vectors are dropped; a vector of the wrong
     length fails the job."""
-    coded = nearest_codes(
-        df, codebooks, id_col=id_col, vec_col=vec_col, what="pq_encode"
-    ).select(
-        "__eid__",
-        F.struct(
-            F.col("__sub__").alias("sub"),
-            F.col("__code__").alias("code"),
-            F.col("__csq__").alias("csq"),
-        ).alias("__sc__"),
+    return _encode_batches(
+        df, (codebooks, None, False, None), id_col, vec_col, None, "pq_encode"
     )
-    packed = coded.groupBy("__eid__").agg(
-        F.array_sort(F.collect_list("__sc__")).alias("__packed__")
-    )
-    return packed.select(
-        F.col("__eid__").alias(id_col),
-        F.transform("__packed__", lambda s: s["code"]).alias("codes"),
-        F.aggregate(
-            F.transform("__packed__", lambda s: s["csq"]),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        ).alias("vhat_sq"),
-    )
-
-
-def _residual_tables(centroids, codebooks):
-    """(csq, xtab) of the residual-reconstruction norm: csq[cell] =
-    |centroid_cell|² and xtab[cell, s, c] = centroid_cell[sub s] ·
-    codebook[s][c]. The one source of these numbers for
-    :func:`ivf_pq_encode_residual`'s broadcast table and
-    :func:`pq_encode_batch`, so both paths add the same values.
-    n_cells × m × ncodes doubles — 4k entries at the (16,16,16) defaults,
-    ~4M (32 MB, still broadcastable) at a 1024-cell/256-code deployment;
-    document before growing past that."""
-    import numpy as np
-
-    cm = np.asarray(centroids, dtype=np.float64)
-    cb = np.asarray(codebooks, dtype=np.float64)  # m × ncodes × subdim
-    m, _, subdim = cb.shape
-    csq = np.asarray([(c * c).sum() for c in cm])
-    return csq, np.einsum("ksd,scd->ksc", cm.reshape(cm.shape[0], m, subdim), cb)
 
 
 def ivf_pq_encode_residual(
@@ -273,87 +225,59 @@ def ivf_pq_encode_residual(
     within-cell geometry — measured recall@5 gain on clustered data at
     identical bytes (ANN_RECALL.json 'ivfpq_residual').
 
-    Plan shape: ``assign_cells`` (codegen equi-join path) → broadcast
-    centroid join + one zip_with subtraction (map-side) → the standard
-    ``pq_encode`` two-shuffle pipeline on the residual column → one
-    broadcast join on cell + an m-step fold for the |v̂|² cross term
-    (the same fold pattern as ADC scoring). Nothing here scales with
-    anything but the input rows."""
-    from .ivf import assign_cells
-
-    spark = df.sparkSession
-    cells = assign_cells(df, centroids, id_col=id_col, vec_col=vec_col)
-    cent_df = spark.createDataFrame(
-        [(i, [float(w) for w in c]) for i, c in enumerate(centroids)],
-        "cell int, __cent__ array<double>",
-    )
-    resid = (
-        well_formed_vectors(df, vec_col)
-        .select(id_col, _as_double(vec_col).alias("__v__"))
-        .join(cells, id_col)
-        .join(F.broadcast(cent_df), "cell")
-        .select(
-            id_col,
-            "cell",
-            F.zip_with("__v__", "__cent__", lambda x, c: x - c).alias("__rv__"),
-        )
-    )
-    enc = pq_encode(resid, codebooks, id_col=id_col, vec_col="__rv__")
-    csq, xtab = _residual_tables(centroids, codebooks)
-    xdf = spark.createDataFrame(
-        [(cell, float(csq[cell]), xtab[cell].tolist()) for cell in range(len(csq))],
-        "cell int, __csq__ double, __xtab__ array<array<double>>",
-    )
-    out = (
-        enc.withColumnRenamed("vhat_sq", "__rsq__")
-        .join(resid.select(id_col, "cell"), id_col)
-        .join(F.broadcast(xdf), "cell")
-    )
-    cross = F.aggregate(
-        F.zip_with(
-            F.col("codes"),
-            F.col("__xtab__"),
-            lambda cd, tbl: F.element_at(tbl, cd + F.lit(1)),
-        ),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    return out.select(
-        id_col,
-        "cell",
-        "codes",
-        (F.col("__csq__") + 2 * cross + F.col("__rsq__")).alias("vhat_sq"),
-    )
+    One Arrow pass of the shared encode kernel (:func:`pq_encode_batch`):
+    cell, residual, codes and vhat_sq per row, no shuffle."""
+    return _encode_batches(
+        df, (codebooks, centroids, True, None), id_col, vec_col, None,
+        "ivf_pq_encode_residual",
+    ).select(id_col, "cell", "codes", "vhat_sq")
 
 
 def pq_encode_batch(
-    df: DataFrame, meta, id_col: str, vec_col: str, partition_col: str
+    df: DataFrame,
+    meta,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+    partition_col: str | None = None,
 ) -> DataFrame:
-    """(id, codes array<int>, vhat_sq double, partition[, cell int]): an
-    append batch encoded by an index's ``meta`` — the
-    (codebooks, centroids, residual, rotation) tuple of
-    :func:`read_pq_meta` — in ONE ``mapInPandas`` pass over Arrow batches.
-    Every index flavour runs the same numpy kernel, which holds the
-    codebooks in its closure, in this order:
+    """(id, codes array<int>, vhat_sq double[, partition][, cell int]):
+    ``df`` encoded by an index's ``meta`` — the (codebooks, centroids,
+    residual, rotation) tuple of :func:`read_pq_meta` — in ONE
+    ``mapInPandas`` pass over Arrow batches. This is the one encode
+    kernel: :func:`pq_encode`, :func:`ivf_pq_encode_residual`,
+    ``ivf.assign_cells``, :func:`append_pq_index` and
+    :func:`refit_pq_index` all run it. A numpy function holding the
+    codebooks in its closure computes, per batch:
 
     1. rotation R·v, if the index has one (``ivf.fold_dots``);
     2. the cell, if it has centroids (``ivf.fold_nearest``);
     3. the residual v − centroid[cell], if it is residual;
     4. the codes, per subspace (``ivf.fold_nearest``);
     5. vhat_sq: the chosen |c|² folded over ascending subspaces from 0.0;
-       on a residual index ``(|centroid|² + 2·cross) + that``, with cross
-       folded the same way over :func:`_residual_tables`.
+       on a residual index ``(|centroid|² + 2·cross) + that``, with
+       cross[cell, s, c] = centroid_cell[sub s] · codebook[s][c] folded
+       the same way.
 
-    Every step repeats the IEEE operations, in order, of the codegen
-    shapes (``rotate_vectors``, ``assign_cells``, :func:`pq_encode`,
-    :func:`ivf_pq_encode_residual`), so an appended row equals its
-    rebuild bit for bit. The plan holds no literal codebook and no
-    shuffle: a micro-batch pays one Python pass, not Catalyst analysis
-    of a ~1k-cell literal tree. Large corpora keep the codegen shapes.
+    The dots fold over ascending positions from 0.0, the order of
+    ``opq.rotate_vectors``' ``aggregate`` fold and of the codegen
+    posexplode → join → ``F.sum`` kernel this replaced, so codes persisted
+    by that kernel stay consistent with rows encoded now. The plan holds
+    no literal codebook and no shuffle; measured on the sf0.1 corpus and
+    on a 50k-row one, this pass is 7–14× faster than the codegen kernel
+    it replaced (SCALE.md).
 
-    Rows with NULL/empty vectors are dropped; a vector of any other width
-    than the index's fails the job with a named error, checked before the
-    rotation."""
+    ``partition_col`` passes through unchanged (the append's and the
+    refit's partition). Rows with NULL/empty vectors are dropped; a
+    vector of any other width than the index's fails the job with a
+    named error, checked before the rotation."""
+    return _encode_batches(
+        df, meta, id_col, vec_col, partition_col, "pq_encode_batch"
+    )
+
+
+def _encode_batches(df, meta, id_col, vec_col, partition_col, what):
+    """:func:`pq_encode_batch`, with ``what`` naming the caller in the
+    wrong-width error."""
     import numpy as np
     import pandas as pd
     from pyspark.sql import types as T
@@ -365,12 +289,20 @@ def pq_encode_batch(
         cm = np.asarray(centroids, dtype=np.float64)
         cell_csq = code_sq_norms([centroids])[0]
     if residual:
-        resid_csq, xtab = _residual_tables(centroids, codebooks)
+        # |centroid|² and the centroid · code cross terms of |v̂|²: n_cells
+        # × m × ncodes doubles (4k at 16 cells, 16 × 16 codes)
+        cent_sq = np.asarray([(c * c).sum() for c in cm])
+        xtab = np.einsum(
+            "ksd,scd->ksc",
+            cm.reshape(cm.shape[0], m, subdim),
+            np.asarray(codebooks, dtype=np.float64),
+        )
+    keep = [partition_col] if partition_col is not None else []
     fields = [
         df.schema[id_col],
         T.StructField("codes", T.ArrayType(T.IntegerType())),
         T.StructField("vhat_sq", T.DoubleType()),
-        df.schema[partition_col],
+        *[df.schema[c] for c in keep],
     ]
     if centroids is not None:
         fields.append(T.StructField("cell", T.IntegerType()))
@@ -392,20 +324,20 @@ def pq_encode_batch(
         vhat = sum(chosen, np.zeros(n))
         if residual:
             cross = sum((xtab[cell, s, c] for s, c in enumerate(codes)), np.zeros(n))
-            vhat = (resid_csq[cell] + 2.0 * cross) + vhat
+            vhat = (cent_sq[cell] + 2.0 * cross) + vhat
         out = pd.DataFrame({
             id_col: pdf[id_col],
             "codes": list(np.stack(codes, axis=1).astype(np.int32)),
             "vhat_sq": vhat,
-            partition_col: pdf[partition_col],
+            **{c: pdf[c] for c in keep},
         })
         if centroids is not None:
             out["cell"] = cell.astype(np.int32)
         return out
 
     staged = _assert_size(
-        well_formed_vectors(df, vec_col), vec_col, m * subdim, "pq_encode_batch"
-    ).select(id_col, _as_double(vec_col).alias(vec_col), partition_col)
+        well_formed_vectors(df, vec_col), vec_col, m * subdim, what
+    ).select(id_col, _as_double(vec_col).alias(vec_col), *keep)
     return staged.mapInPandas(
         lambda batches: map(_encode, batches), T.StructType(fields)
     )
@@ -591,7 +523,7 @@ def ivf_pq_topk(
 
     Candidate selection is an EQUI-join on cell id (no nested-loop scan,
     unlike plain ``pq_topk``): corpus rows carry their nearest cell
-    (``assign_cells`` — the codegen path) alongside their PQ codes; the
+    (from the same encode pass as their PQ codes, or ``corpus_cells``); the
     broadcast query frame has one row per (query, probed cell), probe
     cells assigned driver-side exactly as in ``ivf_topk``. ``nprobe``
     defaults through ``nprobe_for_recall`` from the measured IVF curve;
@@ -641,13 +573,18 @@ def ivf_pq_topk(
             queries, rotation, id_col=id_col, vec_col=vec_col
         )
     corpus_wf = well_formed_vectors(corpus, vec_col)
-    if residual:
-        if corpus_codes is None:
-            corpus_codes = ivf_pq_encode_residual(
-                corpus_wf, codebooks, centroids, id_col, vec_col
-            )
-        else:
-            corpus_codes = _assert_size(corpus_codes, "codes", m, "ivf_pq_topk")
+    # cells come from the codes row on a residual index, and from the
+    # same encode pass when both are computed here at query time
+    cells_in_codes = residual or (corpus_codes is None and corpus_cells is None)
+    if corpus_codes is None:
+        corpus_codes = pq_encode_batch(
+            corpus_wf,
+            (codebooks, centroids if cells_in_codes else None, residual, None),
+            id_col, vec_col,
+        )
+    else:
+        corpus_codes = _assert_size(corpus_codes, "codes", m, "ivf_pq_topk")
+    if cells_in_codes:
         coded = corpus_codes.select(
             F.col(id_col).alias("neighbor_id"),
             "codes",
@@ -655,13 +592,9 @@ def ivf_pq_topk(
             F.col("cell").alias("__ccell__"),
         )
     else:
-        if corpus_codes is None:
-            corpus_codes = pq_encode(corpus_wf, codebooks, id_col, vec_col)
-        else:
-            corpus_codes = _assert_size(corpus_codes, "codes", m, "ivf_pq_topk")
         if corpus_cells is None:
-            # assign at query time; the maintained-index path passes cells
-            # computed once at ingest (write/append_pq_index with centroids)
+            # the maintained-index path passes cells computed once at
+            # ingest (write/append_pq_index with centroids)
             corpus_cells = assign_cells(
                 corpus_wf, centroids, id_col=id_col, vec_col=vec_col
             )
@@ -895,7 +828,7 @@ def append_pq_index(
     O(touched partitions) per batch regardless of index size.
 
     The batch is encoded by :func:`pq_encode_batch` — one Arrow pass for
-    every index flavour, bit-identical to the codegen encode — so
+    every index flavour, the kernel every build and refit runs — so
     append-then-search equals encode-everything-then-search exactly
     (pinned in tests/test_pq.py and tests/test_streaming_ann.py), and
     searches over a maintained index never drift from a fresh rebuild
@@ -1114,8 +1047,9 @@ def index_drift_report(
         # into the index frame before BOTH error passes — scoring raw
         # vectors against rotated centroids would inflate frozen_err (and
         # err_ratio) structurally, recommending refits with zero drift.
-        # The codegen rotation: the sample is checkpointed right below, so
-        # its d²-literal plan is analysed once per report.
+        # The sample is checkpointed right below, so its d²-literal plan
+        # is analysed once per report (measured no slower than an Arrow
+        # rotation pass, SCALE.md).
         from .opq import rotate_vectors
 
         s = rotate_vectors(s, rotation, vec_col="__v__", out_col="__r__").select(
@@ -1207,9 +1141,9 @@ def refit_pq_index(
 
     Returns a small report dict: the new version number, row count, and
     fit shape. Cost: one bounded fit + one encode pass + one write —
-    O(corpus) with no shuffle wider than pq_encode's own (measured in
-    SCALE_PROBE.json ``refit_ivf_pq``)."""
-    from .ivf import assign_cells, fit_ivf_centroids
+    O(corpus) and no shuffle in the encode (SCALE_PROBE.json
+    ``refit_ivf_pq`` measured the codegen encode this pass replaced)."""
+    from .ivf import fit_ivf_centroids
 
     if keep_versions < 0:
         raise ValueError(f"keep_versions must be >= 0, got {keep_versions}")
@@ -1246,22 +1180,21 @@ def refit_pq_index(
     if rotation is not None:
         # OPQ index: the rotation is the index's coordinate FRAME, not a
         # fitted quantizer — the refit re-fits centroids/codebooks WITHIN
-        # it (rotate the corpus with rotate_vectors' fold, which the
-        # append's fold_dots matches bit for bit, then fit/encode in
-        # rotated space and carry the rotation
-        # into the new version's meta). Re-fitting the rotation itself is
-        # a new index build (fit_opq + write_pq_index), by design: it
-        # would change the coordinate frame under retained old versions.
-        # The width check comes first: rotate_vectors turns a wrong-width
-        # vector into NULL, which the fit and encode would then drop.
+        # it: the fits read the corpus through rotate_vectors, the encode
+        # rotates inside its kernel (the same fold, bit for bit), and the
+        # rotation carries into the new version's meta. Re-fitting the
+        # rotation itself is a new index build (fit_opq + write_pq_index),
+        # by design: it would change the coordinate frame under retained
+        # old versions. The width check comes first: rotate_vectors turns
+        # a wrong-width vector into NULL, which the fits would then drop.
         from .opq import rotate_vectors
 
-        checked = _assert_size(
+        corpus = _assert_size(
             well_formed_vectors(corpus, vec_col), vec_col, len(rotation),
             "refit_pq_index",
         )
         fit_corpus = (
-            rotate_vectors(checked, rotation, vec_col=vec_col, out_col="__rot__")
+            rotate_vectors(corpus, rotation, vec_col=vec_col, out_col="__rot__")
             .drop(vec_col)
             .withColumnRenamed("__rot__", vec_col)
         )
@@ -1274,22 +1207,16 @@ def refit_pq_index(
             fit_corpus, new_centroids, vec_col=vec_col, id_col=id_col, m=m,
             ncodes=ncodes, iters=iters, seed=seed, fit_sample_n=fit_sample_n,
         )
-        enc = ivf_pq_encode_residual(
-            fit_corpus, new_codebooks, new_centroids, id_col=id_col, vec_col=vec_col
-        )
     else:
         new_codebooks = fit_pq_codebooks(
             fit_corpus, vec_col=vec_col, id_col=id_col, m=m, ncodes=ncodes,
             iters=iters, seed=seed, fit_sample_n=fit_sample_n,
         )
-        cells = assign_cells(
-            fit_corpus, new_centroids, id_col=id_col, vec_col=vec_col
-        ).select(id_col, "cell")
-        enc = pq_encode(
-            fit_corpus, new_codebooks, id_col=id_col, vec_col=vec_col
-        ).join(cells, id_col)
-    if partition_col is not None:
-        enc = enc.join(corpus.select(id_col, partition_col), id_col)
+    # the append's encode: the raw corpus, rotated inside the kernel
+    enc = pq_encode_batch(
+        corpus, (new_codebooks, new_centroids, residual, rotation), id_col,
+        vec_col, partition_col,
+    )
 
     committed = lake.list_versions(spark, path)
     new_ver = lake.next_version(spark, path)

@@ -1257,7 +1257,7 @@ def q_ivf_topk(spark, sf_dir):
     doc=(
         "Product-quantization ANN top-k (X3 scale path; r8 verdict item 9, "
         "the standard IVF companion), served AT REST: per-subspace k-means "
-        "codebooks fit on a hash-ranked bounded sample, one-shuffle codegen "
+        "codebooks fit on a hash-ranked bounded sample, one map-side Arrow "
         "encode to 8-byte codes (32x compression), persisted via "
         "write_pq_index, then ADC scan over the stored codes + exact cosine "
         "re-rank of a 100-candidate shortlist. The oracle reads the SAME "
@@ -1381,7 +1381,7 @@ _OPQ_MAINT_ORACLE_ROOT = _os.path.join(_ORACLE_ARTIFACTS, "opq_maintained_oracle
 def q_opq_maintained(spark, sf_dir):
     from ..operators import opq as O
     from ..operators import pq as Q
-    from ..operators.ivf import assign_cells, fit_ivf_centroids, probe_assignments
+    from ..operators.ivf import fit_ivf_centroids, probe_assignments
 
     emb = _t(spark, sf_dir, "embeddings")
     root = _OPQ_MAINT_ORACLE_ROOT
@@ -1401,12 +1401,10 @@ def q_opq_maintained(spark, sf_dir):
     )
 
     def _write():
-        base = _rot_emb().filter(F.col("vec_id") % 10 != 9)
-        codes = (
-            Q.pq_encode(base, books)
-            .join(assign_cells(base, cents).select("vec_id", "cell"), "vec_id")
-            .withColumn("ingest_day", F.lit("d0"))
-        )
+        # the raw base, rotated inside the encode kernel
+        codes = Q.pq_encode_batch(
+            emb.filter(F.col("vec_id") % 10 != 9), (books, cents, False, rot)
+        ).withColumn("ingest_day", F.lit("d0"))
         Q.write_pq_index(
             codes, books, root, mode="overwrite",
             partition_col="ingest_day", centroids=cents, rotation=rot,
@@ -1506,7 +1504,7 @@ def q_opq_maintained(spark, sf_dir):
         "rotation ahead of PQ — alternating per-subspace Lloyd and "
         "closed-form Procrustes on the bounded fit sample — so the same 8 "
         "bytes/vector stop paying for correlated, unequally-energetic "
-        "subspaces. Corpus rotation is a map-only codegen fold; queries "
+        "subspaces. Corpus rotation is a map-only fold inside the encode; queries "
         "rotate driver-side (left-fold, SQL-bit-compatible); serving reads "
         "the SAME persisted artifacts the oracle replays (rotation sidecar "
         "+ codes + codebooks), so the query is hash-checked end-to-end. "
@@ -1524,12 +1522,7 @@ def q_opq_topk(spark, sf_dir):
     rot, books = _opq_fit(emb, sf_dir)
 
     def _write():
-        enc = Q.pq_encode(
-            O.rotate_vectors(emb, rot).select(
-                "vec_id", F.col("rotated").alias("embedding")
-            ),
-            books,
-        )
+        enc = Q.pq_encode_batch(emb, (books, None, False, rot))
         Q.write_pq_index(enc, books, _OPQ_ORACLE_ROOT, mode="overwrite")
         write_json_rows(
             spark, f"{_OPQ_ORACLE_ROOT}/rotation", [{"rotation": rot}],
@@ -1547,7 +1540,7 @@ def q_opq_topk(spark, sf_dir):
 @register(
     "q_pq_append",
     # Persisted-artifact oracle (r12): append+search == rebuild+search
-    # exactly (pq_encode is a deterministic expression of the frozen
+    # exactly (the encode is a deterministic function of the frozen
     # codebooks — pinned in tests/test_pq.py), so after the append the
     # maintained index AT REST is replayable like q_pq_topk's: DuckDB
     # reads the Hive-partitioned codes (two-level glob) + codebook JSON
@@ -1605,8 +1598,8 @@ def q_opq_topk(spark, sf_dir):
         "(operators/pq.py append_pq_index -> streaming/upsert.py "
         "partition-scoped merge: only the batch's day partitions "
         "rewritten, O(touched partitions) per batch regardless of index "
-        "size), then ADC-search the maintained codes. pq_encode is a "
-        "deterministic expression of the codebooks, so append+search == "
+        "size), then ADC-search the maintained codes. The encode is a "
+        "deterministic function of the codebooks, so append+search == "
         "rebuild+search exactly (pinned in tests/test_pq.py) — which is "
         "what lets the r12 oracle replay the post-append index at rest, "
         "hash-checking the MAINTAINED state, not just the search."
@@ -1701,7 +1694,6 @@ _IVFPQ_DRIFT_ORACLE_ROOT = _os.path.join(_ORACLE_ARTIFACTS, "ivfpq_drift_oracle_
 )
 def q_ivf_pq_drift(spark, sf_dir):
     from ..operators import pq as Q
-    from ..operators.ivf import assign_cells
 
     emb = _t(spark, sf_dir, "embeddings")
     root = _IVFPQ_DRIFT_ORACLE_ROOT
@@ -1722,11 +1714,9 @@ def q_ivf_pq_drift(spark, sf_dir):
     # bootstrap index + planted-drift append once per sf (q_pq_append
     # precedent): the steady, invocation-independent cost is the MONITOR
     def _write():
-        codes = (
-            Q.pq_encode(base, books)
-            .join(assign_cells(base, cents).select("vec_id", "cell"), "vec_id")
-            .withColumn("ingest_day", F.lit("d0"))
-        )
+        codes = Q.pq_encode_batch(
+            base, (books, cents, False, None)
+        ).withColumn("ingest_day", F.lit("d0"))
         Q.write_pq_index(
             codes, books, root, mode="overwrite",
             partition_col="ingest_day", centroids=cents,
@@ -2047,7 +2037,6 @@ def q_sq_topk(spark, sf_dir):
     ),
 )
 def q_ivf_pq_topk(spark, sf_dir):
-    from ..operators import ivf as I
     from ..operators import pq as Q
 
     emb = _t(spark, sf_dir, "embeddings")
@@ -2055,11 +2044,7 @@ def q_ivf_pq_topk(spark, sf_dir):
     books = _pq_books(emb, sf_dir)
 
     def _write():
-        wf = I.well_formed_vectors(emb, "embedding")
-        codes = Q.pq_encode(emb, books).join(
-            I.assign_cells(wf, centroids).select("vec_id", "cell"),
-            "vec_id",
-        )
+        codes = Q.pq_encode_batch(emb, (books, centroids, False, None))
         Q.write_pq_index(
             codes, books, _IVFPQ_RAW_ORACLE_ROOT, mode="overwrite",
             centroids=centroids,

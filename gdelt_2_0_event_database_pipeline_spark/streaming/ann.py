@@ -12,8 +12,9 @@ Exactly-once WITHOUT a ledger: unlike the additive rollup state
 batch-id ledger is required), the upsert is IDEMPOTENT — the batch
 encode (``pq_encode_batch``) is a deterministic function of the frozen
 codebooks and each row's vector alone, so a replayed batch re-encodes
-to the SAME codes and replaces the same keys with the same rows. At-least-once delivery therefore converges to the
-exactly-once state by construction; pinned in tests/test_streaming_ann.py.
+to the SAME codes and replaces the same keys with the same rows.
+At-least-once delivery therefore converges to the exactly-once state
+by construction; pinned in tests/test_streaming_ann.py.
 
 Codebook drift: the quantizers are frozen at index creation (the
 standard FAISS-style discipline — retrain on evidence, not per batch).

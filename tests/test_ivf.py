@@ -100,7 +100,7 @@ def test_ivf_rank_shape(emb):
 
 
 def test_assignment_paths_agree(spark, emb):
-    # the codegen Spark kernel (huge inputs) and the numpy rule (bounded
+    # the Spark encode kernel (corpora) and the numpy BLAS rule (bounded
     # driver-side sets) must produce identical assignments
     cents = fit_ivf_centroids(emb, k=CLUSTERS, iters=3, seed=9)
     exploded = {(r.vec_id, r.cell) for r in assign_cells(emb, cents).collect()}
@@ -164,21 +164,22 @@ def test_default_nprobe_recall_sf01(spark):
 
 
 def test_assign_cells_mapside_bit_parity(spark):
-    """The append path's cell rule (pq_encode_batch's fold_nearest over
-    the centroids; its codes at m=1 with the centroids as the codebook)
-    must produce the SAME (id, cell) set as the codegen assign_cells and
-    the numpy rule — identical |c|^2 - 2*v*c score, identical fold order,
-    identical tie rule — on the full test corpus. The coarse quantizer is
-    the one-subspace PQ codebook."""
+    """The encode kernel's cell rule (pq_encode_batch's fold_nearest over
+    the centroids, behind assign_cells; its codes at m=1 with the
+    centroids as the codebook) must produce the SAME (id, cell) set as
+    the Spark SQL reference and the numpy rule — identical |c|^2 - 2*v*c
+    score, identical fold order, identical tie rule — on the full test
+    corpus. The coarse quantizer is the one-subspace PQ codebook."""
     from gdelt_2_0_event_database_pipeline_spark.operators.pq import (
         fit_pq_codebooks,
         pq_encode_batch,
     )
+    from tests.ann_reference import reference_assign_cells
 
     emb = spark.read.parquet("/root/testdata/sf0.01/embeddings.parquet")
     cents = fit_ivf_centroids(emb, k=8, iters=2)
     assert cents == fit_pq_codebooks(emb, m=1, ncodes=8, iters=2)[0]
-    a = {(r.vec_id, r.cell) for r in assign_cells(emb, cents).collect()}
+    a = {(r.vec_id, r.cell) for r in reference_assign_cells(emb, cents).collect()}
     rows = pq_encode_batch(
         emb.withColumn("day", F.lit("d0")), ([cents], cents, False, None),
         "vec_id", "embedding", "day",
@@ -186,6 +187,7 @@ def test_assign_cells_mapside_bit_parity(spark):
     b = {(r.vec_id, r.cell) for r in rows}
     c = {(r.vec_id, r.codes[0]) for r in rows}
     assert a == b == c and len(a) == emb.count()
+    assert a == {(r.vec_id, r.cell) for r in assign_cells(emb, cents).collect()}
     assert a == set(_np_cells(emb, cents).items())
 
 

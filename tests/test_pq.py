@@ -1145,18 +1145,24 @@ def test_residual_encode_fuzz_matches_numpy(spark):
 
 
 def test_pq_encode_mapside_bit_parity(spark):
-    """The append encode (pq_encode_batch, one Arrow pass over the
-    ivf.fold_nearest kernel) must equal the codegen pq_encode BIT-FOR-BIT
-    — codes and vhat_sq — and the numpy rule (probe_assignments) on the
-    full test corpus: maintained==rebuild parity rests on both paths
-    folding identical fp operations in identical order. Also pins the
-    partition passthrough and the batch's cell, the residual flavour
-    (== ivf_pq_encode_residual), and array_sort's order on exact ties,
-    -0.0 and non-finite components."""
+    """The one encode kernel (pq_encode_batch, an Arrow pass over
+    ivf.fold_nearest, behind pq_encode and every append) must equal the
+    Spark SQL reference encode BIT-FOR-BIT — codes and vhat_sq — and the
+    numpy rule (probe_assignments) on the full test corpus: codes at rest
+    from the older SQL encode stay consistent with rows encoded now only
+    if both fold identical fp operations in identical order. Also pins
+    the partition passthrough and the batch's cell, the residual flavour
+    (== the reference residual encode), and array_sort's order on exact
+    ties, -0.0 and non-finite components."""
     from gdelt_2_0_event_database_pipeline_spark.operators.ivf import (
         assign_cells,
         fit_ivf_centroids,
         probe_assignments,
+    )
+    from tests.ann_reference import (
+        reference_assign_cells,
+        reference_pq_encode,
+        reference_residual_encode,
     )
     from gdelt_2_0_event_database_pipeline_spark.operators.pq import (
         fit_pq_codebooks,
@@ -1175,9 +1181,10 @@ def test_pq_encode_mapside_bit_parity(spark):
     ids, x = _np_corpus(emb)
     books = fit_pq_codebooks(emb, m=16, ncodes=16, iters=2)
     m, _, subdim = np.asarray(books).shape
-    a = {r[0]: (list(r[1]), r[2]) for r in pq_encode(emb, books).collect()}
+    a = {r[0]: (list(r[1]), r[2]) for r in reference_pq_encode(emb, books).collect()}
     b = {r[0]: (list(r[1]), r[2]) for r in batch(emb, books)}
     assert a == b and len(a) == len(ids)
+    assert b == {r[0]: (list(r[1]), r[2]) for r in pq_encode(emb, books).collect()}
     want = np.stack(
         [
             probe_assignments(x[:, s * subdim : (s + 1) * subdim], books[s], 1)[:, 0]
@@ -1192,21 +1199,28 @@ def test_pq_encode_mapside_bit_parity(spark):
     # the partition passes through and the batch's cell rides the same pass
     cents = fit_ivf_centroids(emb, k=8, iters=2)
     got = {r["vec_id"]: (r["day"], r["cell"]) for r in batch(emb, books, cents)}
-    assert got == {
+    want = {
+        r["vec_id"]: ("d0", r["cell"])
+        for r in reference_assign_cells(emb, cents).collect()
+    }
+    assert got == want == {
         r["vec_id"]: ("d0", r["cell"]) for r in assign_cells(emb, cents).collect()
     }
 
-    # residual flavour: (cell, codes, vhat_sq) == the codegen residual encode
+    # residual flavour: (cell, codes, vhat_sq) == the reference residual encode
     rbooks = fit_residual_codebooks(emb, cents, m=16, ncodes=16, iters=2)
-    want_r = {
-        r["vec_id"]: (r["cell"], list(r["codes"]), r["vhat_sq"])
-        for r in ivf_pq_encode_residual(emb, rbooks, cents).collect()
-    }
-    got_r = {
-        r["vec_id"]: (r["cell"], list(r["codes"]), r["vhat_sq"])
-        for r in batch(emb, rbooks, cents, residual=True)
-    }
+
+    def cell_codes_vhat(rows):
+        return {
+            r["vec_id"]: (r["cell"], list(r["codes"]), r["vhat_sq"]) for r in rows
+        }
+
+    want_r = cell_codes_vhat(reference_residual_encode(emb, rbooks, cents).collect())
+    got_r = cell_codes_vhat(batch(emb, rbooks, cents, residual=True))
     assert got_r == want_r and len(got_r) == len(ids)
+    assert got_r == cell_codes_vhat(
+        ivf_pq_encode_residual(emb, rbooks, cents).collect()
+    )
 
     # exact ties (values rounded to 0.1, codes copied from data rows, two
     # of them twice; on these rows a BLAS dot picks another code than the
@@ -1224,6 +1238,6 @@ def test_pq_encode_mapside_bit_parity(spark):
         for s in range(2)
     ]
     edge = _vec_df(spark, range(300), xt)
-    a = {r[0]: (list(r[1]), r[2]) for r in pq_encode(edge, tbooks).collect()}
+    a = {r[0]: (list(r[1]), r[2]) for r in reference_pq_encode(edge, tbooks).collect()}
     b = {r[0]: (list(r[1]), r[2]) for r in batch(edge, tbooks)}
     assert a == b and len(a) == 300
