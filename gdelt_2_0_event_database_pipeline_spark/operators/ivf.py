@@ -50,6 +50,11 @@ twice. The coarse quantizer is a one-subspace PQ codebook (Jégou et al.
   → join → ``F.sum`` → ``array_sort``) by
   ``tests/test_ivf.py::test_assign_cells_mapside_bit_parity`` and
   ``tests/test_pq.py::test_pq_encode_mapside_bit_parity``.
+  ``fold_dots`` is also every literal-matrix product: ``fold_col``, one
+  scalar Arrow UDF over the vector column with the matrix in its closure,
+  runs the OPQ rotation, the PCA and JL projections and the sign-LSH
+  planes, pinned bit for bit against a SQL ``aggregate`` fold by
+  ``tests/test_fold_udf.py``.
 - ``probe_assignments`` — numpy on BLAS, for bounded driver-side sets
   whose bits no persisted code depends on: query probes, the Lloyd steps
   of every fit (codebooks are persisted, so both engines read them), the
@@ -60,7 +65,8 @@ twice. The coarse quantizer is a one-subspace PQ codebook (Jégou et al.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+import pyarrow as pa
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from .similarity import _as_double, cosine
@@ -177,10 +183,10 @@ def fold_dots(x, c):
     """(n × k) float64 matrix of dots x_i · c_j, each folded over ascending
     positions from 0.0: ``((0.0 + x0·c0) + x1·c1) + …``. One multiply
     and one add per position, vectorised over rows and codes: the IEEE
-    operations, in order, of ``opq.rotate_vectors``' ``aggregate`` fold
-    and of a single-partial Spark ``F.sum`` over position-ordered rows,
-    so the results agree bit for bit. ``@``, ``einsum`` and ``np.sum``
-    reorder the additions and do not."""
+    operations, in order, of a Spark SQL ``aggregate`` fold over
+    ``zip_with`` and of a single-partial Spark ``F.sum`` over
+    position-ordered rows, so the results agree bit for bit. ``@``,
+    ``einsum`` and ``np.sum`` reorder the additions and do not."""
     import numpy as np
 
     x = np.asarray(x, dtype=np.float64)
@@ -189,6 +195,68 @@ def fold_dots(x, c):
     for j in range(x.shape[1]):
         acc = acc + x[:, j, None] * c[None, :, j]
     return acc
+
+
+def fold_arrow(vecs, rows, center=None):
+    """:func:`fold_dots` over an Arrow list array: per list, the k dots of
+    (x − ``center``) with the rows of ``rows`` (k × d), as a
+    ``list<double>`` array of the same length. A NULL list or one of
+    another width than d gives NULL; a list holding a NULL element gives
+    k NULLs, the way a NULL operand propagates through a SQL ``aggregate``
+    fold over ``zip_with``. NaN and ±inf propagate as IEEE arithmetic
+    does."""
+    import numpy as np
+    import pyarrow.compute as pc
+
+    k, d = rows.shape
+    ok = pc.fill_null(pc.equal(pc.list_value_length(vecs), d), False)
+    vals = vecs.filter(ok).flatten().cast(pa.float64())
+    x = vals.to_numpy(zero_copy_only=False).reshape(-1, d)
+    holes = vals.is_null().to_numpy(zero_copy_only=False).reshape(-1, d).any(axis=1)
+    with np.errstate(invalid="ignore", over="ignore"):
+        if center is not None:
+            x = x - center
+        y = fold_dots(x, rows)
+    ok = ok.to_numpy(zero_copy_only=False)
+    offsets = np.zeros(len(ok) + 1, dtype=np.int32)
+    np.cumsum(ok * k, out=offsets[1:])
+    return pa.ListArray.from_arrays(
+        pa.array(offsets),
+        pa.array(y.ravel(), mask=np.repeat(holes, k)),
+        mask=pa.array(~ok),
+    )
+
+
+def fold_col(vec: str, rows, center=None) -> Column:
+    """``array<double>`` Column of :func:`fold_arrow` over the top-level
+    column named ``vec``, cast to ``array<double>``: one scalar Arrow UDF
+    with the matrix in its closure. Only the vector column crosses into
+    Python; the plan holds no literal matrix. ``vec`` is a literal
+    top-level name (a dot does not reach into a struct). A NaN or ±inf in
+    ``rows`` or ``center`` raises: they come from fits and at-rest
+    files, and one bad cell would poison every output row."""
+    import numpy as np
+
+    rows = np.asarray(rows, dtype=np.float64)
+    if rows.ndim != 2 or rows.size == 0:
+        raise ValueError(f"matrix must be a non-empty k×d grid, got shape {rows.shape}")
+    if center is not None:
+        center = np.asarray(center, dtype=np.float64)
+        if center.shape != (rows.shape[1],):
+            raise ValueError(f"center must have {rows.shape[1]} values, got {center.shape}")
+    for m in (rows, center):
+        if m is not None and not np.isfinite(m).all():
+            raise ValueError(
+                f"non-finite matrix value {float(m[~np.isfinite(m)][0])!r} in a "
+                "rotation/projection matrix or center (check the fit inputs)"
+            )
+
+    def _fold(v: pa.Array) -> pa.Array:
+        return fold_arrow(v, rows, center)
+
+    udf = F.arrow_udf(_fold, "array<double>")
+    quoted = "`" + vec.replace("`", "``") + "`"
+    return udf(F.col(quoted).cast("array<double>"))
 
 
 def fold_nearest(x, codebook, csq):

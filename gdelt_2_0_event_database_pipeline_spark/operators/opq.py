@@ -22,16 +22,15 @@ Spark-first shape:
   leaves the executors. Deterministic: seeded init rotation (QR of a
   seeded Gaussian, sign-fixed), fixed iteration counts, first-minimum
   assignment ties.
-- **rotate**: ``rotate_vectors`` is a pure map-side Column expression —
-  d ``aggregate`` dot folds against literal rotation rows (the
-  ``random_projection`` expr path; d·d = 4096 literals at dim 64, well
-  under the codegen ceiling), zero shuffles, zero Python — for the
-  vectors the fits and the drift report read. Encodes and queries
-  rotate with ``ivf.fold_dots``, the same fold in numpy: as the first
-  step of ``pq.pq_encode_batch``'s one Arrow pass on an OPQ index
+- **rotate**: every rotation is ``ivf.fold_dots``, one left fold per
+  output coordinate over ascending positions from 0.0: in Spark as
+  ``rotate_vectors`` (the ``ivf.fold_col`` Arrow UDF, map-only, no
+  literal matrix in the plan) for the vectors the fits read, as the
+  first step of ``pq.pq_encode_batch``'s one Arrow pass on an OPQ index
   (builds, appends, refits), and driver-side in
-  ``rotate_queries_collected``. Both agree with ``rotate_vectors`` bit
-  for bit.
+  ``rotate_queries_collected`` and ``pq.index_drift_report``. All agree
+  bit for bit with a SQL ``aggregate`` fold and with DuckDB's
+  ``list_dot_product``.
 - **encode / search**: the rotated vectors feed the UNCHANGED PQ
   machinery (``pq_encode_batch`` with the rotation in its meta /
   ``pq_topk``); queries are rotated driver-side inside their LUT build,
@@ -52,8 +51,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.sqltext import check_expr_col, sql_dots
-from .ivf import fold_dots, probe_assignments
+from .ivf import fold_col, fold_dots, probe_assignments
 from .pq import _collect_fit_sample, _fit_pq_on_matrix
 
 
@@ -151,34 +149,15 @@ def rotate_vectors(
     vec_col: str = "embedding",
     out_col: str = "rotated",
 ) -> DataFrame:
-    """Append ``out_col`` = R·x as a pure map-side expression: d
-    ``aggregate`` dot folds against literal rotation rows (zero shuffles,
-    zero Python — the ``random_projection`` expr path; d²=4096 literal
-    cells at dim 64). Rows of the wrong width get NULL (enrichment, not
-    filter).
-
-    The expression is built as ONE ``F.expr`` SQL string instead of ~12k
-    chained Column calls: each ``F.lit``/``zip_with``/``aggregate`` is a
-    py4j round-trip, and constructing the d²-literal tree that way cost
-    9-12 s of pure driver time per plan (measured, r15) vs ~0.3 s for
-    Catalyst parsing the equivalent SQL text. Same expression tree after
-    parsing, bit-identical results (differential-tested in
-    tests/test_opq.py and measured at build time)."""
+    """Append ``out_col`` = R·x: one scalar Arrow UDF over ``vec_col``
+    (``ivf.fold_col`` — the ``fold_dots`` fold, no literal matrix in the
+    plan, zero shuffles). Rows of the wrong width get NULL (enrichment,
+    not filter); a NULL element gives d NULLs."""
     if out_col in df.columns:
         raise ValueError(f"out_col {out_col!r} already exists in the input")
-    d = len(rotation)
-    if any(len(row) != d for row in rotation):
+    if any(len(row) != len(rotation) for row in rotation):
         raise ValueError("rotation must be square d×d")
-    check_expr_col(vec_col)  # top-level-name contract (see helper)
-    vec = f"CAST(`{vec_col}` AS ARRAY<DOUBLE>)"
-    dots = ", ".join(sql_dots(vec, rotation))
-    return df.withColumn(
-        out_col,
-        F.expr(
-            f"CASE WHEN `{vec_col}` IS NOT NULL AND size(`{vec_col}`) = {d} "
-            f"THEN array({dots}) END"
-        ),
-    )
+    return df.withColumn(out_col, fold_col(vec_col, rotation))
 
 
 def rotate_queries_collected(
@@ -192,7 +171,7 @@ def rotate_queries_collected(
     (``pq.ivf_pq_topk(rotation=...)``). Queries are bounded and collected
     for their LUTs anyway; rotation is ``ivf.fold_dots`` (left-fold dots,
     not numpy matmul) to match SQL ``list_dot_product`` and
-    ``rotate_vectors``'s aggregate fold bit-for-bit — what lets an
+    ``rotate_vectors`` bit-for-bit — what lets an
     at-rest OPQ index carry a DuckDB oracle. The raw sidecar
     ``(query_id, __raw_qv__)`` lets a rerank tail swap back to raw-space
     vectors (cosine is rotation-invariant, so raw-space rerank against

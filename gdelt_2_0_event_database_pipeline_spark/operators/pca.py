@@ -21,16 +21,18 @@ Spark-first shape — the 100 TB contract:
   width, never corpus size. Component signs are fixed deterministically
   (largest-|loading| coordinate made positive) so the model is stable
   across partitionings and numpy versions.
-- **project** (``project_pca``): pure map-side Column expression — one
-  ``zip_with`` centering plus k ``aggregate`` dot-product folds against
-  literal component arrays. Zero shuffles, zero Python in the hot path;
-  survives any corpus size by construction.
+- **project** (``project_pca``, and the fit-free ``random_projection``):
+  one scalar Arrow UDF (``ivf.fold_col``) centers each vector and folds
+  its k dots with the component rows held in the UDF closure. Map-only,
+  zero shuffles, no literal matrix in the plan; only the vector column
+  crosses into Python. Survives any corpus size by construction.
 
 Oracle story: the distributed part (covariance) is exact SQL —
 ``q_pca_cov`` replays it in DuckDB via ``covar_samp`` over the exploded
 self-join and hash-matches at 8dp (the registry's float-aggregate rule).
 The eigen step is bounded driver math pinned against ``numpy.linalg.eigh``
-in ``tests/test_pca.py``; projection is pinned against the numpy matmul.
+in ``tests/test_pca.py``; projection is pinned against the numpy matmul
+and, bit for bit, against the SQL fold of ``tests/ann_reference.py``.
 
 Reference parity: the reference pipeline (scraping → conversion →
 filtering → sampling, reference main.py:1) has no vector stage; PCA is an
@@ -48,9 +50,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.sqltext import check_expr_col, lit_arr, sql_dots
 from ..util import read_json_rows, write_json_rows
-from .ivf import well_formed_vectors
+from .ivf import fold_col, well_formed_vectors
 
 #: driver-side eigendecomposition is O(max_dim³) time / O(max_dim²) memory;
 #: 1024 keeps both trivial (<1 s, 8 MiB) while covering every common
@@ -350,12 +351,6 @@ def correlation_matrix(
 # session) regenerates it bit-identically from (seed, d, k).
 # ---------------------------------------------------------------------------
 
-#: codegen ceiling for the literal-expression path: k aggregate folds over
-#: d-length literal arrays is d·k constants in one plan. Past this the
-#: Arrow path (one BLAS matmul per batch) is the right physical plan.
-MAX_EXPR_CELLS = 65_536
-
-
 def jl_matrix(d: int, k: int, seed: int = 7) -> list[list[float]]:
     """The k×d sparse sign matrix, entry (j, i) drawn from
     ``md5("{seed}:{i}:{j}")``: first 40 hex bits mod 6 → +1 (0), −1 (1),
@@ -387,67 +382,16 @@ def random_projection(
     vec_col: str = "embedding",
     out_col: str = "rp",
     seed: int = 7,
-    method: str = "auto",
 ) -> DataFrame:
     """Append ``out_col: array<double>`` = the seeded JL projection of
     ``vec_col`` (width-``d`` rows; others get NULL, mirroring
-    :func:`project_pca`). Two physical plans, same numbers:
-
-    - ``expr`` (d·k ≤ ``MAX_EXPR_CELLS``): k ``aggregate`` folds over
-      literal sign rows — whole-stage codegen, zero Python. The default
-      at embedding widths.
-    - ``arrow``: one float64 BLAS ``X @ R.T`` per ``mapInPandas`` batch —
-      the wide-matrix path where a d·k-literal plan would blow codegen.
-
-    Both are map-only (zero shuffles). ``auto`` picks by d·k. The arrow
-    path's matmul reorders the per-element additions, so cross-path
-    parity is to float tolerance (pinned in tests), not bit-exact."""
+    :func:`project_pca`): the k sign rows of :func:`jl_matrix` through
+    ``ivf.fold_col``, one scalar Arrow UDF at every d·k. Map-only (zero
+    shuffles); the other columns never leave the JVM."""
     if out_col in df.columns:
-        # the expr path would silently replace it and the arrow path would
-        # emit a duplicate column — refuse both, loudly
+        # withColumn would silently replace it — refuse loudly
         raise ValueError(f"out_col {out_col!r} already exists in the input")
-    rows = jl_matrix(d, k, seed)
-    if method == "auto":
-        method = "expr" if d * k <= MAX_EXPR_CELLS else "arrow"
-    if method == "expr":
-        # ONE F.expr SQL string instead of d·k chained Column calls: each
-        # F.lit/zip_with/aggregate is a py4j round-trip and the literal
-        # tree cost seconds of driver time per plan (the rotate_vectors
-        # r15 measurement); Catalyst parses the same tree from text in
-        # ~0.1 s. repr(float) round-trips bit-exactly through the
-        # string→DOUBLE cast, so the numbers are unchanged.
-        check_expr_col(vec_col)  # top-level-name contract (see helper)
-        vec = f"CAST(`{vec_col}` AS ARRAY<DOUBLE>)"
-        dots = ", ".join(sql_dots(vec, rows))
-        return df.withColumn(
-            out_col,
-            F.expr(
-                f"CASE WHEN `{vec_col}` IS NOT NULL AND size(`{vec_col}`) = {d} "
-                f"THEN array({dots}) END"
-            ),
-        )
-    if method != "arrow":
-        raise ValueError(f"method must be auto|expr|arrow, got {method!r}")
-
-    cols = list(df.columns)
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        r = np.array(rows, dtype=np.float64)  # (k, d)
-        for pdf in batches:
-            ok = pdf[vec_col].map(lambda v: v is not None and len(v) == d)
-            out = pd.Series([None] * len(pdf), index=pdf.index, dtype=object)
-            if ok.any():
-                x = np.array(pdf.loc[ok, vec_col].tolist(), dtype=np.float64)
-                y = x @ r.T
-                out.loc[ok] = list(y)
-            pdf = pdf.copy()
-            pdf[out_col] = out
-            yield pdf
-
-    schema = ", ".join(f"`{c}` {df.schema[c].dataType.simpleString()}" for c in cols)
-    return df.mapInPandas(gen, f"{schema}, `{out_col}` array<double>")
+    return df.withColumn(out_col, fold_col(vec_col, jl_matrix(d, k, seed)))
 
 
 def project_pca(
@@ -457,50 +401,26 @@ def project_pca(
     out_col: str = "pc",
     whiten: bool = False,
 ) -> DataFrame:
-    """Append ``out_col: array<double>`` = ``W @ (x − mean)`` as a pure
-    map-side expression: one ``zip_with`` centering (computed once via an
-    intermediate column, not re-evaluated per component) and k
-    ``aggregate`` folds against literal component rows. Zero shuffles /
-    zero Python — the projection survives any corpus size; rows failing
-    ``well_formed_vectors`` get a NULL projection rather than being
-    dropped (projection is an enrichment, not a filter).
+    """Append ``out_col: array<double>`` = ``W @ (x − mean)``: one scalar
+    Arrow UDF (``ivf.fold_col`` with the model mean as its center), zero
+    shuffles — the projection survives any corpus size; rows failing
+    ``well_formed_vectors`` or of another width get a NULL projection
+    rather than being dropped (projection is an enrichment, not a
+    filter).
 
     ``whiten=True`` scales each score by 1/√eigenvalue (unit component
     variance — the standard pre-step before isotropic-distance methods
-    like k-means/IVF on skewed spectra); folded into the component
-    literals, so the runtime plan is identical. Components with ~zero
-    variance (< 1e-12) are left unwhitened rather than exploded."""
+    like k-means/IVF on skewed spectra); folded into the component rows,
+    so the runtime plan is identical. Components with ~zero variance
+    (< 1e-12) are left unwhitened rather than exploded."""
     if out_col in df.columns:
         # withColumn would silently replace it — refuse loudly, the
         # random_projection discipline
         raise ValueError(f"out_col {out_col!r} already exists in the input")
-    d = len(model.mean)
-    centered = F.when(
-        F.col(vec_col).isNotNull() & (F.size(vec_col) == d),
-        F.zip_with(
-            F.col(vec_col).cast("array<double>"),
-            lit_arr(model.mean),
-            lambda x, m: x - m,
-        ),
-    )
     rows = model.components
     if whiten:
         rows = [
             [x / ev**0.5 for x in w] if ev > 1e-12 else list(w)
             for w, ev in zip(rows, model.explained_variance)
         ]
-    tmp = "__pca_centered__"
-    while tmp in df.columns:  # never clobber a user column with the temp
-        tmp += "_"
-    # ONE F.expr string for the k aggregate folds (the rotate_vectors /
-    # random_projection r15 construction fix — same tree, parsed instead
-    # of built through ~3k py4j round-trips; repr round-trips each double)
-    dots = ", ".join(sql_dots(f"`{tmp}`", rows))
-    return (
-        df.withColumn(tmp, centered)
-        .withColumn(
-            out_col,
-            F.expr(f"CASE WHEN `{tmp}` IS NOT NULL THEN array({dots}) END"),
-        )
-        .drop(tmp)
-    )
+    return df.withColumn(out_col, fold_col(vec_col, rows, center=model.mean))

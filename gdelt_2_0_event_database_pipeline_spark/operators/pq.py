@@ -71,7 +71,7 @@ its recall floor, and pins encode == numpy-reference equality.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..sources import lake
@@ -258,8 +258,8 @@ def pq_encode_batch(
        cross[cell, s, c] = centroid_cell[sub s] · codebook[s][c] folded
        the same way.
 
-    The dots fold over ascending positions from 0.0, the order of
-    ``opq.rotate_vectors``' ``aggregate`` fold and of the codegen
+    The dots fold over ascending positions from 0.0 (``ivf.fold_dots``,
+    the fold of ``opq.rotate_vectors``), the order of the codegen
     posexplode → join → ``F.sum`` kernel this replaced, so codes persisted
     by that kernel stay consistent with rows encoded now. The plan holds
     no literal codebook and no shuffle; measured on the sf0.1 corpus and
@@ -937,17 +937,6 @@ def ivf_pq_search_index(
     )
 
 
-def _sq_dist_to(vec: Column, center) -> Column:
-    """Exact |v − c|² fold against a literal center — the drift report
-    measures distances, not argmins, so it keeps this form."""
-    carr = F.array(*[F.lit(float(w)) for w in center])
-    return F.aggregate(
-        F.zip_with(vec, carr, lambda x, w: (x - w) * (x - w)),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-
-
 def index_drift_report(
     spark,
     path: str,
@@ -1000,9 +989,10 @@ def index_drift_report(
     Returns a one-row DataFrame:
     (n_cells, n_build, n_current, occupancy_tvd, frozen_err, refit_err,
     err_ratio, refit_recommended). Cost: one scan of the codes table's
-    cell column + two bounded passes over ≤ ``sample_cap`` sample rows —
-    safe to run on every append cycle at any index size."""
-    from .ivf import fit_ivf_centroids
+    cell column + one bounded collect of ≤ ``sample_cap`` sample rows,
+    then driver-side numpy — safe to run on every append cycle at any
+    index size."""
+    import numpy as np
 
     path = resolve_index_root(spark, path)
     _, centroids, _residual, rotation = read_pq_meta(spark, path)
@@ -1036,39 +1026,27 @@ def index_drift_report(
     else:
         n_build, tvd = None, None
 
-    # bounded recent-data sample: deterministic hash-rank cap, executes as
-    # TakeOrderedAndProject (no full shuffle) — fit_ivf_centroids' sampler
-    s = well_formed_vectors(sample, vec_col).select(
-        F.col(id_col).alias("__id__"), _as_double(vec_col).alias("__v__")
-    )
-    s = s.orderBy(F.xxhash64(F.col("__id__"), F.lit(seed))).limit(sample_cap)
+    # bounded recent-data sample: the fit sampler's deterministic
+    # hash-rank cap (TakeOrderedAndProject, no full shuffle), collected
+    # once; the refit and both errors run on it in numpy
+    x = _collect_fit_sample(sample, vec_col, id_col, seed, sample_cap)
+    if x.shape[1] != len(centroids[0]):
+        raise ValueError(
+            f"drift sample vectors must all have the index width {len(centroids[0])}"
+        )
     if rotation is not None:
         # OPQ index: centroids live in ROTATED space. Rotate the sample
-        # into the index frame before BOTH error passes — scoring raw
-        # vectors against rotated centroids would inflate frozen_err (and
+        # into the index frame before BOTH errors — scoring raw vectors
+        # against rotated centroids would inflate frozen_err (and
         # err_ratio) structurally, recommending refits with zero drift.
-        # The sample is checkpointed right below, so its d²-literal plan
-        # is analysed once per report (measured no slower than an Arrow
-        # rotation pass, SCALE.md).
-        from .opq import rotate_vectors
-
-        s = rotate_vectors(s, rotation, vec_col="__v__", out_col="__r__").select(
-            "__id__", F.col("__r__").alias("__v__")
-        )
-    s = s.localCheckpoint(eager=True)  # fit and both error passes share it
-    refit = fit_ivf_centroids(
-        s, "__v__", "__id__", k=n_cells, iters=refit_iters, seed=seed,
-        fit_sample_n=sample_cap,
-    )
+        x = fold_dots(x, rotation)
+    refit = _fit_pq_on_matrix(x, 1, n_cells, refit_iters)[0]
 
     def _mean_nearest_sq(cents) -> float:
-        d = F.array_min(
-            F.array(*[_sq_dist_to(F.col("__v__"), c) for c in cents])
-        )
-        row = s.agg(F.avg(d).alias("e")).collect()[0]
-        if row["e"] is None:
-            raise ValueError("drift sample is empty after well_formed_vectors")
-        return float(row["e"])
+        best = np.full(len(x), np.inf)
+        for c in np.asarray(cents, dtype=np.float64):
+            best = np.minimum(best, ((x - c) ** 2).sum(axis=1))
+        return float(best.mean())
 
     frozen_err = _mean_nearest_sq(centroids)
     refit_err = _mean_nearest_sq(refit)

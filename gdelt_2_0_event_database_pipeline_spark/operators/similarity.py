@@ -10,7 +10,8 @@ Extension surface beyond the reference (no vector data there). Two tiers:
                          plus a k·|Q| merge.
 - ``cosine_topk_lsh``  — random-hyperplane LSH: b sign-bits per vector from
                          hash-derived pseudo-random planes (deterministic, no
-                         stored model), bucket-join query↔corpus on the bit
+                         stored model; the plane dots are one ``ivf.fold_col``
+                         Arrow UDF), bucket-join query↔corpus on the bit
                          signature with multi-probe (Hamming ≤ 1), exact
                          rescoring inside buckets. Trades recall for pruning
                          the candidate set by ~2^b.
@@ -32,8 +33,6 @@ from itertools import combinations
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
-
-from ..functions.sqltext import check_expr_col, sql_dots
 
 
 def _fold_sum(arr: Column) -> Column:
@@ -101,21 +100,16 @@ def plane_weights(num_planes: int, dim: int, seed: int) -> list[list[float]]:
 
 def lsh_signature(vec: str, num_planes: int, dim: int, seed: int = 42) -> Column:
     """Random-hyperplane signature of the array column named ``vec``: int
-    with ``num_planes`` sign bits. Map-only — each bit is one fold of the
-    vector against a literal plane.
+    with ``num_planes`` sign bits. Map-only — the plane dots are one
+    ``ivf.fold_col`` Arrow UDF, and bit p is set where dot p is >= 0 (a
+    NULL dot, from a NULL or wrong-width vector, leaves it clear)."""
+    from .ivf import fold_col  # ivf imports this module
 
-    Built as one ``F.expr`` SQL string (:func:`sql_dots`): the
-    num_planes·dim literal tree built through chained Column calls costs
-    a py4j round-trip per node (the rotate_vectors r15 construction
-    finding), while Catalyst parses the identical tree from text in
-    milliseconds."""
-    check_expr_col(vec)  # top-level-name contract (see helper)
-    planes = plane_weights(num_planes, dim, seed)
-    bits = " + ".join(
-        f"(CASE WHEN {dot} >= 0 THEN {1 << p} ELSE 0 END)"
-        for p, dot in enumerate(sql_dots(f"`{vec}`", planes))
-    )
-    return F.expr(f"CAST({bits} AS INT)")
+    dots = fold_col(vec, plane_weights(num_planes, dim, seed))
+    return sum(
+        (F.when(dots[p] >= 0, 1 << p).otherwise(0) for p in range(num_planes)),
+        F.lit(0),
+    ).cast("int")
 
 
 def _infer_dim(df: DataFrame, vec_col: str) -> int:

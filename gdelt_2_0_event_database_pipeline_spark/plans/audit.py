@@ -212,12 +212,6 @@ GENERATE_HOF_OK: dict[str, str] = {
     # 3-row probe slice here); the corpus side uses the flat
     # posexplode+lead path with a single cheap lambda.
     "q_contamination": "nested explode bounded by |probes| rows",
-    # 4 emitted rows/vector; measured at sf0.1 (2000 vecs): explode
-    # 0.62 s == project-4-keys 0.63 s == union-of-projections 0.62 s —
-    # low fan-out Generate pays no re-eval penalty (r15 probe). The
-    # q_bpe_train pathology needed ~266 emitted rows/input x a 6-deep
-    # fold chain.
-    "q_embedding_near_dup": "4-band explode, measured == project",
 }
 
 

@@ -941,18 +941,17 @@ def q_pca_cov(spark, sf_dir):
         "fit pass — the matrix IS a hash formula (md5(seed:i:j) mod 6, "
         "scaled sqrt(3/k)), regenerated bit-identically by Spark, Python "
         "and DuckDB, which is what makes this fully value-hash oracled "
-        "where PCA's eigen step cannot be. Map-only codegen expression at "
-        "embedding widths (zero shuffles, zero Python — plan-pinned); the "
-        "Arrow BLAS twin takes over past the d*k codegen ceiling "
-        "(MAX_EXPR_CELLS), parity-pinned in tests/test_pca.py. Float sums "
-        "rounded 8dp both sides."
+        "where PCA's eigen step cannot be. Map-only (zero shuffles): one "
+        "scalar Arrow UDF folds each dot over ascending positions from "
+        "0.0 at every d*k, bit-pinned against the SQL aggregate fold in "
+        "tests/test_pca.py. Float sums rounded 8dp both sides."
     ),
 )
 def q_random_projection(spark, sf_dir):
     from ..operators.pca import random_projection
 
     emb = _t(spark, sf_dir, "embeddings")
-    out = random_projection(emb, k=16, d=64, seed=7, method="expr")
+    out = random_projection(emb, k=16, d=64, seed=7)
     return out.filter(F.col("rp").isNotNull()).select(
         "vec_id", F.posexplode("rp").alias("comp", "y")
     ).select("vec_id", "comp", F.round("y", 8).alias("y"))

@@ -1,4 +1,5 @@
-"""Spark SQL reference for the ANN encode kernel (``pq.pq_encode_batch``).
+"""Spark SQL references for the ANN kernels: the encode
+(``pq.pq_encode_batch``) and the literal-matrix fold (``ivf.fold_col``).
 
 The nearest-code rule spelled in plain Spark SQL: posexplode → broadcast
 (pos → sub, code, weight) join → groupBy(id, sub) of conditional dot
@@ -10,14 +11,21 @@ ties and NaN last. The package's corpus encode ran this plan before the
 Arrow kernel replaced it; the parity tests keep it as the independent
 statement of the bits the kernel must reproduce, including the codes of
 indexes written by that older encode.
+
+:func:`reference_fold` is the matrix product spelled as SQL text: one
+``aggregate(zip_with(vec, array(<row literals>)))`` fold per matrix row,
+the expression rotation, PCA projection, JL projection and the sign-LSH
+planes compiled to before the Arrow UDF replaced it. The operators must
+reproduce its bits, NULLs and NaNs.
 """
 
 from __future__ import annotations
 
 import numpy as np
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from gdelt_2_0_event_database_pipeline_spark.functions.sqltext import sql_arr
 from gdelt_2_0_event_database_pipeline_spark.operators.ivf import code_sq_norms
 
 
@@ -150,3 +158,45 @@ def reference_residual_encode(
         id_col, "cell", "codes",
         (F.col("__csq__") + 2 * cross + F.col("vhat_sq")).alias("vhat_sq"),
     )
+
+
+def _quoted(name: str) -> str:
+    return "`" + name.replace("`", "``") + "`"
+
+
+def _sql_dots(vec_sql: str, rows) -> list[str]:
+    """One left fold from 0.0 of vector element × weight per row."""
+    return [
+        f"aggregate(zip_with({vec_sql}, {sql_arr(row)}, (a, b) -> a * b), "
+        "0.0D, (acc, v) -> acc + v)"
+        for row in rows
+    ]
+
+
+def reference_fold(
+    df: DataFrame, vec_col: str, rows, center=None, out_col: str = "__ref__"
+) -> DataFrame:
+    """``df`` plus ``out_col`` = the dots of (vec − center) with each row
+    of ``rows``, NULL for a NULL or wrong-width vector."""
+    q = _quoted(vec_col)
+    vec = f"CAST({q} AS ARRAY<DOUBLE>)"
+    if center is not None:
+        vec = f"zip_with({vec}, {sql_arr(center)}, (x, m) -> x - m)"
+    dots = ", ".join(_sql_dots(vec, rows))
+    return df.withColumn(
+        out_col,
+        F.expr(
+            f"CASE WHEN {q} IS NOT NULL AND size({q}) = {len(rows[0])} "
+            f"THEN array({dots}) END"
+        ),
+    )
+
+
+def reference_lsh_signature(vec_col: str, planes) -> Column:
+    """Sign-bit signature over the folds: bit p set where dot p >= 0 (a
+    NULL dot leaves it clear)."""
+    bits = " + ".join(
+        f"(CASE WHEN {dot} >= 0 THEN {1 << p} ELSE 0 END)"
+        for p, dot in enumerate(_sql_dots(_quoted(vec_col), planes))
+    )
+    return F.expr(f"CAST({bits} AS INT)")

@@ -95,7 +95,8 @@ def test_rotate_vectors_matches_numpy_and_is_map_only(spark, vec_df, xmat, fitte
         [(0, [0.0] * D)], "vec_id long, embedding array<double>"
     )
     plan = rotate_vectors(plain, r)._jdf.queryExecution().executedPlan().toString()
-    assert "Exchange" not in plan and "Python" not in plan
+    assert "Exchange" not in plan
+    assert plan.count("ArrowEvalPython") == 1 and "BatchEvalPython" not in plan
     # guards: existing out_col refused; wrong-width rows get NULL
     with pytest.raises(ValueError, match="already exists"):
         rotate_vectors(out, r, out_col="rotated")
@@ -317,10 +318,10 @@ def test_refit_preserves_rotation_frame(spark, tmp_path, vec_df, fitted):
 
 def test_rotate_batch_arrow_bit_parity(spark, vec_df, fitted, tmp_path):
     """The append's fused rotation (ivf.fold_dots, the first step of
-    pq_encode_batch on an OPQ index) must equal rotate_vectors
-    bit-for-bit on the full fixture — numpy mul/add are the same IEEE
-    doubles in the same left-fold order — and so must the codes, vhat_sq
-    and cell it feeds. A NULL vector yields no row; a wrong-width vector
+    pq_encode_batch on an OPQ index) and rotate_vectors must both equal
+    the SQL aggregate fold of tests/ann_reference.py bit-for-bit on the
+    full fixture — numpy mul/add are the same IEEE doubles in the same
+    left-fold order — and so must the codes, vhat_sq and cell it feeds. A NULL vector yields no row; a wrong-width vector
     fails the batch with a named error instead of vanishing."""
     from gdelt_2_0_event_database_pipeline_spark.operators.ivf import (
         assign_cells,
@@ -330,12 +331,15 @@ def test_rotate_batch_arrow_bit_parity(spark, vec_df, fitted, tmp_path):
         pq_encode_batch,
     )
 
+    from tests.ann_reference import reference_fold
+
     rotation, _ = fitted
     rows = sorted(vec_df.collect(), key=lambda r: r["vec_id"])
-    a = {
-        r["vec_id"]: list(r["rotated"])
-        for r in rotate_vectors(vec_df, rotation).select("vec_id", "rotated").collect()
-    }
+    ref = reference_fold(
+        rotate_vectors(vec_df, rotation), "embedding", rotation
+    ).collect()
+    a = {r["vec_id"]: list(r["__ref__"]) for r in ref}
+    assert all(r["rotated"] == r["__ref__"] for r in ref)
     b = dict(
         zip(
             [r["vec_id"] for r in rows],

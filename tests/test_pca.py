@@ -106,7 +106,8 @@ def test_projection_is_map_only_and_jvm_side(spark, vec_df, xmat):
     base = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
     plan = project_pca(base, m)._jdf.queryExecution().executedPlan().toString()
     assert "Exchange" not in plan  # zero shuffles
-    assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
+    # one Arrow batch pass holds the whole fold; no row-at-a-time Python
+    assert plan.count("ArrowEvalPython") == 1 and "BatchEvalPython" not in plan
 
 
 def test_projection_nulls_malformed_rows(spark, xmat):
@@ -317,21 +318,60 @@ def test_jl_matrix_deterministic_and_sparse():
 
 
 def test_random_projection_expr_matches_arrow_and_numpy(spark, vec_df, xmat):
+    """The projection equals the SQL aggregate fold bit for bit, and the
+    numpy matmul to float tolerance."""
     from gdelt_2_0_event_database_pipeline_spark.operators.pca import (
         jl_matrix,
         random_projection,
     )
+    from tests.ann_reference import reference_fold
 
     k = 5
-    e = {r["vec_id"]: r["rp"] for r in
-         random_projection(vec_df, k, D, method="expr").collect()}
-    a = {r["vec_id"]: r["rp"] for r in
-         random_projection(vec_df, k, D, method="arrow").collect()}
+    rows = reference_fold(
+        random_projection(vec_df, k, D), "embedding", jl_matrix(D, k)
+    ).collect()
     want = xmat @ np.array(jl_matrix(D, k)).T
-    assert len(e) == N == len(a)
-    for i in range(N):
-        assert np.allclose(e[i], want[i], atol=1e-9)
-        assert np.allclose(a[i], e[i], atol=1e-9)
+    assert len(rows) == N
+    for r in rows:
+        assert r["rp"] == r["__ref__"]
+        assert np.allclose(r["rp"], want[r["vec_id"]], atol=1e-9)
+
+
+def test_random_projection_keeps_pass_through_nans_past_old_ceiling(spark):
+    """d·k above the old 65,536-cell ceiling (where a pandas pass used to
+    take over): the other columns never leave the JVM, so a NaN double
+    stays NaN (not NULL), and the projection still equals the SQL fold —
+    NaN where the fold gives NaN."""
+    from gdelt_2_0_event_database_pipeline_spark.operators.pca import (
+        jl_matrix,
+        random_projection,
+    )
+    from tests.ann_reference import reference_fold
+
+    d, k = 64, 1025
+    rng = np.random.default_rng(4)
+    nan = float("nan")
+    df = spark.createDataFrame(
+        [
+            (0, [nan] + [1.0] * (d - 1), nan),
+            (1, [float(v) for v in rng.normal(size=d)], nan),
+            (2, [float(v) for v in rng.normal(size=d)], 2.5),
+        ],
+        "vec_id long, embedding array<double>, x double",
+    )
+    rows = {
+        r["vec_id"]: r
+        for r in reference_fold(
+            random_projection(df, k, d), "embedding", jl_matrix(d, k)
+        ).collect()
+    }
+    assert np.isnan(rows[0]["x"]) and np.isnan(rows[1]["x"]) and rows[2]["x"] == 2.5
+    assert rows[0]["embedding"][0] is not None and np.isnan(rows[0]["embedding"][0])
+    for r in rows.values():
+        got, ref = np.array(r["rp"]), np.array(r["__ref__"])
+        assert got.shape == (k,)
+        assert np.array_equal(got, ref, equal_nan=True)
+    assert np.isnan(rows[0]["rp"]).any()
 
 
 def test_random_projection_preserves_norms_on_average(spark):
@@ -364,11 +404,9 @@ def test_random_projection_null_handling_both_paths(spark, xmat):
         rows + [(999, None), (998, [1.0])],
         "vec_id long, embedding array<double>",
     )
-    for method in ("expr", "arrow"):
-        out = {r["vec_id"]: r["rp"]
-               for r in random_projection(df, 4, D, method=method).collect()}
-        assert out[999] is None and out[998] is None
-        assert out[0] is not None and len(out) == 22
+    out = {r["vec_id"]: r["rp"] for r in random_projection(df, 4, D).collect()}
+    assert out[999] is None and out[998] is None
+    assert out[0] is not None and len(out) == 22
 
 
 def test_random_projection_expr_plan_is_jvm_map_only(spark, xmat):
@@ -378,28 +416,10 @@ def test_random_projection_expr_plan_is_jvm_map_only(spark, xmat):
 
     rows = [(i, [float(v) for v in xmat[i]]) for i in range(10)]
     df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    plan = random_projection(df, 4, D, method="expr")._jdf.queryExecution(
+    plan = random_projection(df, 4, D)._jdf.queryExecution(
     ).executedPlan().toString()
     assert "Exchange" not in plan
-    assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
-
-
-def test_random_projection_auto_switches_on_cells(spark, xmat):
-    from gdelt_2_0_event_database_pipeline_spark.operators import pca as P
-
-    rows = [(i, [float(v) for v in xmat[i]]) for i in range(10)]
-    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    # force the threshold low: auto must route to arrow (MapInPandas in plan)
-    old = P.MAX_EXPR_CELLS
-    try:
-        P.MAX_EXPR_CELLS = 1
-        plan = P.random_projection(df, 4, D)._jdf.queryExecution(
-        ).executedPlan().toString()
-        assert "MapInPandas" in plan
-    finally:
-        P.MAX_EXPR_CELLS = old
-    with pytest.raises(ValueError, match="method"):
-        P.random_projection(df, 4, D, method="nope")
+    assert plan.count("ArrowEvalPython") == 1 and "BatchEvalPython" not in plan
 
 
 def test_correlation_matrix_matches_numpy(spark, vec_df, xmat):

@@ -676,6 +676,26 @@ def test_drift_report_reads_cell_stats_by_existence(spark, emb, books, cents, tm
     assert rep["err_ratio"] is not None
 
 
+def test_drift_report_rejects_wrong_width_sample(spark, emb, books, cents, tmp_path):
+    """The drift sample is scored against the index's centroids in numpy;
+    a sample of another width raises a named error instead of being
+    dropped or broadcast."""
+    from gdelt_2_0_event_database_pipeline_spark.operators.ivf import assign_cells
+    from gdelt_2_0_event_database_pipeline_spark.operators.pq import (
+        index_drift_report,
+        write_pq_index,
+    )
+
+    path = str(tmp_path / "ivfpq")
+    codes = pq_encode(emb, books).join(
+        assign_cells(emb, cents).select("vec_id", "cell"), "vec_id"
+    )
+    write_pq_index(codes, books, path, centroids=cents)
+    short = emb.withColumn("embedding", F.slice("embedding", 1, 2))
+    with pytest.raises(ValueError, match="index width"):
+        index_drift_report(spark, path, short)
+
+
 def test_drift_report_rotates_sample_on_opq_index(spark, tmp_path):
     """r13 ADVICE (medium): on an OPQ index the centroids live in ROTATED
     space, so the drift sample must be rotated into the index frame before
