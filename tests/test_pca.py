@@ -214,7 +214,7 @@ def test_project_pca_refuses_existing_out_col(spark, vec_df, xmat):
     m = fit_pca(vec_df, k=2)
     with pytest.raises(ValueError, match="already exists"):
         project_pca(vec_df.withColumn("pc", F.lit(1)), m)
-    # a user column named like the centering temp must survive untouched
+    # a dunder-named user column passes through untouched
     clash = vec_df.withColumn("__pca_centered__", F.lit(7))
     out = project_pca(clash, m)
     assert "__pca_centered__" in out.columns
