@@ -5,9 +5,10 @@ file-level skip-existing, ``scraper.py:239-242``). Four tiers, each a
 DataFrame→DataFrame transform designed around shuffle economics at 100 TB:
 
 - exact          — hash shuffle on the dedup key only (no full-row compare);
-- MinHash + LSH  — shingle → k minhashes → band → bucket-join; candidate
-                   pairs only ever meet inside a bucket, so the quadratic
-                   blowup is confined to bucket-local joins;
+- MinHash + LSH  — shingle → k minhashes → band → bucket member lists
+                   (self-dedup) or bucket join (against a reference);
+                   candidate pairs only ever meet inside a bucket, so the
+                   quadratic blowup is confined to bucket-local pairs;
 - SimHash        — 64-bit signature, banded into chunks; Hamming-verify on
                    candidates;
 - n-gram Jaccard — exact verify kernel (used standalone on small sets or as
@@ -23,7 +24,7 @@ from __future__ import annotations
 import warnings
 from typing import Sequence
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame, Observation, Window
 from pyspark.sql import functions as F
 
 from ..util import read_json_rows, write_json_rows
@@ -114,7 +115,7 @@ def _minhash_banded(
 
     ``banded`` = (``__id__``, band, bucket) — one row per (doc, band), no
     payloads; ``shingles`` = (``__id__``, ``__sh__``) for the exact-Jaccard
-    verify stage. Used by both the self-join (:func:`minhash_near_dup_pairs`)
+    verify stage. Used by both the self-dedup (:func:`minhash_near_dup_pairs`)
     and the asymmetric corpus-vs-reference join
     (:func:`minhash_near_dup_against`); both sides of the asymmetric join
     MUST share (num_hashes, bands, shingle_n, hash_family) or buckets are
@@ -247,8 +248,15 @@ def minhash_near_dup_pairs(
     """MinHash+LSH near-duplicate pairs with exact-Jaccard verification.
 
     Plan: signature+bands in the scan stage → explode bands (rows × bands,
-    but each row is only (band, bucket, id, shingles)) → self-join on
-    (band, bucket) → distinct candidate pairs → exact Jaccard ≥ threshold.
+    each row only (id, band, bucket)) → one groupBy (band, bucket) that
+    collects each bucket's member ids → every i<j pair of each member list
+    in one ``explode(flatten(transform(...)))`` → distinct candidate pairs →
+    exact Jaccard ≥ threshold. Candidates form only inside a bucket
+    (bucket-local pair generation), and the member list makes that ONE
+    shuffle on short keys: no bucket-count aggregate joined back, no
+    self-join. A bucket of m members emits the same m(m-1)/2 pairs the
+    self-join did; ``max_bucket_size`` (the :func:`_cap_buckets` skew guard,
+    same recall trade) drops lists longer than the cap before they emit.
     With b bands of r rows the match probability is 1-(1-s^r)^b — at
     b=16, r=4: s=0.7 → ~0.97 recall; the verify stage removes false
     positives, so precision is exact.
@@ -266,23 +274,26 @@ def minhash_near_dup_pairs(
 
     Returns (id_a, id_b, jaccard_sim) with id_a < id_b.
     """
+    if max_bucket_size is not None and max_bucket_size < 2:
+        raise ValueError(f"max_bucket_size must be >= 2, got {max_bucket_size}")
     banded, shingles = _minhash_banded(
         df, id_col, text_col, num_hashes, bands, shingle_n, hash_family
     )
-    banded = _cap_buckets(banded, max_bucket_size)
-    a = banded.alias("a")
-    b = banded.alias("b")
+    size = F.size("__m__")
+    keep = size >= 2 if max_bucket_size is None else size.between(2, max_bucket_size)
+    # member i (1-based) pairs with every later member of its list
+    pairs_sql = (
+        "explode(flatten(transform(sequence(1, size(__m__) - 1), i -> "
+        "transform(slice(__m__, i + 1, size(__m__) - i), y -> named_struct("
+        "'id_a', least(__m__[i - 1], y), 'id_b', greatest(__m__[i - 1], y))))))"
+    )
     cand = (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bucket") == F.col("b.bucket"))
-            & (F.col("a.__id__") < F.col("b.__id__")),
-        )
-        .select(
-            F.col("a.__id__").alias("id_a"),
-            F.col("b.__id__").alias("id_b"),
-        )
+        banded.groupBy("band", "bucket")
+        .agg(F.collect_list("__id__").alias("__m__"))
+        .filter(keep)
+        .select(F.expr(pairs_sql).alias("__p__"))
+        .select(F.col("__p__.id_a").alias("id_a"), F.col("__p__.id_b").alias("id_b"))
+        .filter(F.col("id_a") < F.col("id_b"))
         .dropDuplicates(["id_a", "id_b"])
     )
     sh_a = shingles.select(
@@ -406,11 +417,13 @@ def dedup_clusters(
     minimum label in its neighborhood; converged when no label changes.
     cluster_id = the minimum member id of the component — deterministic.
 
-    Each round is ONE join + one groupBy-min over the *edge list* (the node's
-    own label rides along via a union instead of a second join), never the
-    documents; rounds needed = graph diameter, and near-dup components are
-    overwhelmingly tiny cliques (diameter ≤ 2), so this converges in 2-3
-    rounds in practice. Eager ``localCheckpoint`` after every round truncates
+    Each round is one join + one groupBy-min over the *edge list* (the
+    node's own label rides along via a union instead of a second join),
+    never the documents; rounds needed = graph diameter, and near-dup
+    components are overwhelmingly tiny cliques (diameter ≤ 2), so this
+    converges in 2-3 rounds in practice. Round 1 needs no label frame: with
+    every label still the node's own id, it is ``least(src, min(dst))`` per
+    edge source. An eager ``localCheckpoint`` after every round truncates
     lineage — without it each round's plan re-derives all previous rounds
     (and the upstream LSH pipeline), the classic iterative-algorithm trap.
 
@@ -426,74 +439,79 @@ def dedup_clusters(
     propagation rounds actually executed, so tests can pin the
     O(log diameter) convergence claim instead of trusting the docstring.
 
-    Convergence detection is O(1) per round: labels only ever decrease
+    Convergence detection rides the checkpoint: labels only ever decrease
     (new = min(own, neighbors), and the shortcut only replaces a label with
     its component-minimum-so-far), so the global label sum is monotone and a
-    fixpoint shows up as an unchanged sum — one cheap aggregate on
-    checkpointed data instead of a join-based diff.
+    fixpoint shows up as an unchanged sum. An ``Observation`` on the round's
+    frame reads that sum from the job that materializes the eager
+    checkpoint, so a round runs no separate aggregate job. The checkpoint
+    must be eager: on a lazy one the observation reads zero rows and a NULL
+    sum, which would end the loop after one round. Round 1 compares against
+    the identity labels' sum, observed in the same pass as the sum of ids.
     """
+    if max_iterations < 1:
+        raise ValueError(f"max_iterations must be >= 1, got {max_iterations}")
+    # a duplicate edge cannot change a min, so the edges are not distinct'd
     edges = (
         pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
         .union(pairs.select(F.col("id_b").alias("src"), F.col("id_a").alias("dst")))
-        .distinct()
         .localCheckpoint()
     )
-    # lazy checkpoint + sum-agg fusion (the khop-frontier move): ONE job
-    # both materializes each labels frame (truncating lineage) and answers
-    # the convergence sum — the old eager-checkpoint + agg pair ran two
-    # jobs per round
-    labels = (
-        edges.select(F.col("src").alias("id"))
-        .distinct()
-        .withColumn("label", F.col("id"))
-        .localCheckpoint(eager=False)
+
+    def settle(step: DataFrame) -> tuple[DataFrame, dict]:
+        """The two-hop shortcut (if on), then one eager checkpoint whose job
+        also observes the label and id sums."""
+        if two_hop:
+            # pointer doubling: follow the label to ITS label. Every label is
+            # a node id (min-merge over ids preserves that), so the lookup
+            # side is the same frame; labels are monotone (a node's label ≤
+            # its id), hence parent.label ≤ child.label and min() keeps the
+            # invariant.
+            parent = step.select(
+                F.col("id").alias("__p_id__"), F.col("label").alias("__p_label__")
+            )
+            step = step.join(parent, step.label == F.col("__p_id__"), "left").select(
+                "id",
+                F.least(
+                    F.col("label"), F.coalesce(F.col("__p_label__"), F.col("label"))
+                ).alias("label"),
+            )
+        # DECIMAL(38) sums: ids may be full-range 63-bit hashes, and an
+        # ANSI-mode long overflow in the convergence check would kill the job
+        obs = Observation()
+        done = step.observe(
+            obs,
+            F.sum(F.col("label").cast("decimal(38,0)")).alias("label_sum"),
+            F.sum(F.col("id").cast("decimal(38,0)")).alias("id_sum"),
+        ).localCheckpoint()
+        return done, obs.get
+
+    labels, sums = settle(
+        edges.groupBy("src").agg(F.least(F.col("src"), F.min("dst")).alias("label"))
+        .withColumnRenamed("src", "id")
     )
-    # DECIMAL(38) sum: ids may be full-range 63-bit hashes, and an ANSI-mode
-    # long overflow in the convergence check would kill the whole job
-    _label_sum = F.sum(F.col("label").cast("decimal(38,0)"))
-    prev_sum = labels.agg(_label_sum).first()[0]
-    rounds = 0
-    for _ in range(max_iterations):
+    prev_sum = sums["id_sum"]
+    rounds = 1
+    while sums["label_sum"] != prev_sum:
+        if rounds == max_iterations:
+            # components with diameter > max_iterations would keep stale
+            # labels, splitting one true cluster into several (recall
+            # bound, not an error)
+            warnings.warn(
+                f"dedup_clusters hit max_iterations={max_iterations} before label "
+                "propagation converged; labels may split large-diameter components",
+                RuntimeWarning,
+                stacklevel=2,
+            )
+            break
+        prev_sum = sums["label_sum"]
         rounds += 1
-        new_labels = (
+        labels, sums = settle(
             edges.join(labels, edges.dst == labels.id)
             .select(F.col("src").alias("id"), F.col("label"))
             .union(labels.select("id", "label"))
             .groupBy("id")
             .agg(F.min("label").alias("label"))
-        )
-        if two_hop:
-            # pointer doubling: follow the label to ITS label. Every label is
-            # a node id (init = own id, min-merge preserves that), so the
-            # lookup side is the same frame; labels are monotone (a node's
-            # label ≤ its id), hence parent.label ≤ child.label and min()
-            # keeps the invariant.
-            parent = new_labels.select(
-                F.col("id").alias("__p_id__"), F.col("label").alias("__p_label__")
-            )
-            new_labels = (
-                new_labels.join(parent, new_labels.label == F.col("__p_id__"), "left")
-                .select(
-                    "id",
-                    F.least(
-                        F.col("label"), F.coalesce(F.col("__p_label__"), F.col("label"))
-                    ).alias("label"),
-                )
-            )
-        new_labels = new_labels.localCheckpoint(eager=False)
-        new_sum = new_labels.agg(_label_sum).first()[0]
-        labels = new_labels
-        if new_sum == prev_sum:
-            break
-        prev_sum = new_sum
-    else:
-        # components with diameter > max_iterations would keep stale labels,
-        # splitting one true cluster into several (recall bound, not an error)
-        warnings.warn(
-            f"dedup_clusters hit max_iterations={max_iterations} before label "
-            "propagation converged; labels may split large-diameter components",
-            RuntimeWarning,
-            stacklevel=2,
         )
     if stats is not None:
         stats["rounds"] = rounds

@@ -213,11 +213,11 @@ def k_hop(
     layers = [frontier.withColumn("hop", F.lit(0))]
     visited_nodes = frontier
     for h in range(1, k + 1):
-        # lazy checkpoint + count(): ONE job per round both materializes
-        # the new frontier (truncating lineage) and answers the emptiness
-        # check — the old eager checkpoint + rdd.isEmpty() pair ran two
-        # jobs per round plus a DataFrame->RDD conversion (round-7 verdict
-        # item 9; the same fusion as BPE training's merge loop)
+        # lazy checkpoint + count(): the count materializes the new
+        # frontier (truncating lineage) and answers the emptiness check.
+        # It is not one job: under AQE, building the lazy checkpoint runs
+        # every shuffle stage of the round's plan as its own job, and the
+        # count then runs its own
         nxt = (
             e.join(frontier, e.u == frontier.node)
             .select(F.col("v").alias("node"))
@@ -228,8 +228,8 @@ def k_hop(
         # the count both materializes the lazy checkpoint and answers the
         # emptiness check — but the FINAL round needs neither (the loop
         # ends regardless, and an empty layer unions to nothing), so skip
-        # its barrier job entirely and let the consumer's one job compute
-        # the last frontier (one fewer job per k_hop call)
+        # its barrier jobs entirely and let the consumer's jobs compute
+        # the last frontier
         if h < k:
             if nxt.count() == 0:
                 break

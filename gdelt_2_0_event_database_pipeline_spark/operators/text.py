@@ -817,23 +817,27 @@ def normalize_text(col: Column | str, *, form: str = "NFKC") -> Column:
     (full-width forms, ligatures, compatibility chars), strip C0/C1 control
     chars, collapse whitespace runs to single spaces, trim.
 
-    Unicode normalization has no Column-level equivalent, so the NFKC step
-    is an Arrow-batched ``pandas_udf`` using pandas' vectorized
-    ``str.normalize``; the regex hygiene stays in JVM expressions around
-    it. Rows-only surface (DuckDB ships no NFKC either); round-trip
-    invariants in ``test_text.py``. NULL → NULL.
+    The normalization step runs in the JVM: ``reflect`` calls ICU4J's
+    ``Normalizer.compose`` (NFC / NFKC) or ``decompose`` (NFD / NFKD), which
+    ships in Spark's own jars, so no row crosses into Python. ``reflect``
+    throws on NULL, hence the ``when`` guard. ICU follows a newer Unicode
+    version than Python's ``unicodedata`` may, so code points unassigned in
+    the older table can normalize differently; assigned ones agree
+    (``test_text.py``). ``reflect`` is nondeterministic to Catalyst, so
+    filters do not push below this projection. The regex hygiene stays in
+    JVM expressions around it. Rows-only surface (DuckDB ships no NFKC
+    either); round-trip invariants in ``test_text.py``. NULL → NULL.
     """
-    from pyspark.sql.functions import pandas_udf
-
-    if form not in ("NFC", "NFKC", "NFD", "NFKD"):
+    methods = {"NFC": ("compose", False), "NFKC": ("compose", True),
+               "NFD": ("decompose", False), "NFKD": ("decompose", True)}
+    if form not in methods:
         raise ValueError(f"unknown normalization form {form!r}")
-
-    @pandas_udf("string")
-    def _nfkc(s: pd.Series) -> pd.Series:
-        return s.str.normalize(form)
-
+    method, compat = methods[form]
     c = F.col(col) if isinstance(col, str) else col
-    folded = _nfkc(c)
+    folded = F.when(
+        c.isNotNull(),
+        F.reflect(F.lit("com.ibm.icu.text.Normalizer"), F.lit(method), c, F.lit(compat)),
+    )
     no_ctrl = F.regexp_replace(folded, r"[\x00-\x08\x0B\x0C\x0E-\x1F\x7F-\x9F]", "")
     return F.trim(F.regexp_replace(no_ctrl, r"\s+", " "))
 

@@ -53,7 +53,7 @@ def merge_upsert_batch(
     # was the single largest per-micro-batch cost (r12 verdict item 3).
     # r16: the checkpoint is LAZY and materialized by the distinct-collect
     # itself — ONE job both severs the batch and answers the touched-
-    # partition probe (the dedup_clusters/khop fusion, guide §5 job-count
+    # partition probe (the khop-frontier fusion, guide §5 job-count
     # discipline); the write below then reads the materialized blocks.
     batch = batch.localCheckpoint(eager=False)
     parts = [r[0] for r in batch.select(partition_col).distinct().collect()]

@@ -698,3 +698,86 @@ def test_fuzzy_join_blocked_matches_and_blocks(spark):
     assert got[(1, 2)] == 1 and got[(1, 3)] == 1 and got[(2, 3)] == 2
     # the blocking caveat is real: doc 5 is 1 edit from doc 1 but unblocked
     assert not any(5 in pair for pair in got)
+
+
+def test_minhash_bucket_candidates_match_bruteforce(spark):
+    """Candidate generation against a brute-force reference: a pair is a
+    candidate iff the two docs share a (band, bucket) cell holding at most
+    ``max_bucket_size`` rows. The reference checks every doc pair against
+    the banded rows; threshold 0.0 makes the output the whole candidate
+    set, each with its exact shingle Jaccard. Template clusters of exactly
+    ``cap`` members (every pair kept) and ``cap + 1`` members (every
+    bucket over the cap, no pair) pin both edges of the cap."""
+    import itertools
+    import random
+    from collections import Counter
+
+    from gdelt_2_0_event_database_pipeline_spark.operators.dedup import (
+        _minhash_banded,
+    )
+
+    cap = 5
+    rng = random.Random(11)
+    words = [f"w{i}" for i in range(30)]
+    bases = [" ".join(rng.choice(words) for _ in range(12)) for _ in range(6)]
+    rows = []
+    for i in range(50):
+        toks = rng.choice(bases).split()
+        for _ in range(rng.randint(0, 3)):
+            toks[rng.randrange(len(toks))] = rng.choice(words)
+        rows.append((i, " ".join(toks)))
+    rows += [(100 + i, "template body held by exactly cap members") for i in range(cap)]
+    rows += [(200 + i, "template body held by one member over the cap") for i in range(cap + 1)]
+    docs = spark.createDataFrame(rows, "doc_id long, text string")
+    text = dict(rows)
+
+    def shingles(t):
+        t = t.lower()
+        return {t[i:i + 3] for i in range(max(len(t) - 2, 1))}
+
+    for family in ("xxhash64", "md5"):
+        banded, _ = _minhash_banded(docs, "doc_id", "text", 64, 16, 3, family)
+        cells = [(r["__id__"], r.band, r.bucket) for r in banded.collect()]
+        size = Counter((b, k) for _, b, k in cells)
+        for limit in (None, cap):
+            ok: dict = {}
+            for i, b, k in cells:
+                if limit is None or size[(b, k)] <= limit:
+                    ok.setdefault(i, set()).add((b, k))
+            want = {}
+            for a, b in itertools.combinations(sorted(text), 2):
+                if ok.get(a, set()) & ok.get(b, set()):
+                    sa, sb = shingles(text[a]), shingles(text[b])
+                    want[(a, b)] = len(sa & sb) / len(sa | sb)
+            got = {
+                (r.id_a, r.id_b): r.jaccard_sim
+                for r in minhash_near_dup_pairs(
+                    docs, "doc_id", "text", threshold=0.0,
+                    hash_family=family, max_bucket_size=limit,
+                ).collect()
+            }
+            assert got == want, (family, limit)
+            held = {p for p in got if p[0] >= 100 and p[1] < 200}
+            over = {p for p in got if p[0] >= 200}
+            assert len(held) == cap * (cap - 1) // 2, (family, limit)
+            assert len(over) == (0 if limit else (cap + 1) * cap // 2), (family, limit)
+
+
+def test_dedup_clusters_rounds_pinned(spark):
+    """``stats["rounds"]`` on the chain and clique fixtures above and on an
+    empty pair set, both propagation modes: the round count is part of the
+    convergence contract, so a change to the loop must not move it."""
+    from gdelt_2_0_event_database_pipeline_spark.operators.dedup import dedup_clusters
+
+    fixtures = {
+        "chain": ([(1, 2), (2, 3), (3, 4), (10, 11)], 4, 3),
+        "clique": ([(1, 2), (2, 3), (10, 11), (20, 21), (21, 22), (22, 20)], 3, 2),
+        "empty": ([], 1, 1),
+    }
+    for name, (edges, plain, fast) in fixtures.items():
+        pairs = spark.createDataFrame(edges, "id_a long, id_b long")
+        for two_hop, want in ((False, plain), (True, fast)):
+            stats: dict = {}
+            out = dedup_clusters(pairs, two_hop=two_hop, stats=stats).collect()
+            assert stats["rounds"] == want, (name, two_hop, stats)
+            assert len(out) == len({n for e in edges for n in e})

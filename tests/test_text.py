@@ -3,6 +3,8 @@ fingerprint, simhash."""
 
 from __future__ import annotations
 
+import re
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -541,6 +543,45 @@ def test_normalize_text_folds_and_cleans(spark):
 
     with pytest.raises(ValueError):
         normalize_text("t", form="XXX")
+
+
+def test_normalize_text_forms_match_unicodedata(spark):
+    """All four forms equal Python's ``unicodedata`` on every code point
+    assigned in its Unicode table (U+0020-U+2FFFF, packed 256 to a row, so
+    combining marks also reorder and compose across neighbours), on a few
+    combining sequences, and NULL stays NULL. Unassigned code points are
+    left out: the JVM side may follow a newer Unicode version."""
+    import unicodedata
+
+    from gdelt_2_0_event_database_pipeline_spark.operators.text import (
+        normalize_text,
+    )
+
+    assigned = [
+        chr(c) for c in range(0x20, 0x30000)
+        if unicodedata.category(chr(c)) not in ("Cn", "Cs")
+    ]
+    texts = ["".join(assigned[i:i + 256]) for i in range(0, len(assigned), 256)]
+    texts += ["é", "각", "ą́", "ÅΩ"]
+    df = spark.createDataFrame(
+        [(i, t) for i, t in enumerate(texts)] + [(len(texts), None)],
+        "id long, t string",
+    )
+    forms = ("NFC", "NFKC", "NFD", "NFKD")
+    got = df.select(
+        "id", *[normalize_text("t", form=f).alias(f) for f in forms]
+    ).collect()
+    assert len(got) == len(texts) + 1
+    for r in got:
+        for f in forms:
+            if r.id == len(texts):
+                assert r[f] is None
+                continue
+            want = unicodedata.normalize(f, texts[r.id])
+            # the JVM regex \s and trim() are ASCII-only
+            want = re.sub(r"[\x00-\x08\x0B\x0C\x0E-\x1F\x7F-\x9F]", "", want)
+            want = re.sub(r"[ \t\n\x0B\f\r]+", " ", want).strip(" ")
+            assert r[f] == want, (f, hex(ord(texts[r.id][0])))
 
 
 def test_bm25_ranking_semantics(spark):
