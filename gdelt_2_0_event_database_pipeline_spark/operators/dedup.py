@@ -250,7 +250,7 @@ def minhash_near_dup_pairs(
     Plan: signature+bands in the scan stage → explode bands (rows × bands,
     each row only (id, band, bucket)) → one groupBy (band, bucket) that
     collects each bucket's member ids → every i<j pair of each member list
-    in one ``explode(flatten(transform(...)))`` → distinct candidate pairs →
+    in one ``flatten(transform(...))`` exploded → distinct candidate pairs →
     exact Jaccard ≥ threshold. Candidates form only inside a bucket
     (bucket-local pair generation), and the member list makes that ONE
     shuffle on short keys: no bucket-count aggregate joined back, no
@@ -281,17 +281,19 @@ def minhash_near_dup_pairs(
     )
     size = F.size("__m__")
     keep = size >= 2 if max_bucket_size is None else size.between(2, max_bucket_size)
-    # member i (1-based) pairs with every later member of its list
+    # member i (1-based) pairs with every later member of its list; the
+    # nested HOFs run in a Project, not inside the Generate (plans/audit.py)
     pairs_sql = (
-        "explode(flatten(transform(sequence(1, size(__m__) - 1), i -> "
+        "flatten(transform(sequence(1, size(__m__) - 1), i -> "
         "transform(slice(__m__, i + 1, size(__m__) - i), y -> named_struct("
-        "'id_a', least(__m__[i - 1], y), 'id_b', greatest(__m__[i - 1], y))))))"
+        "'id_a', least(__m__[i - 1], y), 'id_b', greatest(__m__[i - 1], y)))))"
     )
     cand = (
         banded.groupBy("band", "bucket")
         .agg(F.collect_list("__id__").alias("__m__"))
         .filter(keep)
-        .select(F.expr(pairs_sql).alias("__p__"))
+        .select(F.expr(pairs_sql).alias("__ps__"))
+        .select(F.explode("__ps__").alias("__p__"))
         .select(F.col("__p__.id_a").alias("id_a"), F.col("__p__.id_b").alias("id_b"))
         .filter(F.col("id_a") < F.col("id_b"))
         .dropDuplicates(["id_a", "id_b"])
