@@ -211,27 +211,34 @@ def _bands_from_sig(
     ).select("__id__", F.col("__b__.band").alias("band"), F.col("__b__.bucket").alias("bucket"))
 
 
-def _cap_buckets(banded: DataFrame, max_bucket_size: int | None) -> DataFrame:
+def _cap_buckets(
+    banded: DataFrame,
+    max_bucket_size: int | None,
+    keys: tuple[str, str] = ("band", "bucket"),
+) -> DataFrame:
     """Drop (band, bucket) cells with more than ``max_bucket_size`` members
     before candidate generation — the standard guard against bucket-local
     O(m²) blow-up on skewed corpora (boilerplate pages, empty documents,
-    template spam all collapse into single buckets). Cost: one counting
-    aggregate over short keys, joined back on the same key the candidate
-    join shuffles on anyway. Pairs inside a capped bucket can still surface
-    through the document's OTHER bands (that is why the cap composes with
-    banding instead of destroying recall); pairs whose EVERY shared band is
-    over the cap are the documented recall trade."""
+    template spam all collapse into single buckets). Cost: one count over a
+    window partitioned by the cell key, i.e. one shuffle on the key every
+    candidate step then groups or joins on anyway, so that step reads it
+    without another exchange. The window buffers a cell's rows in a
+    spillable array, so an oversized cell costs disk, never one task's
+    memory, and is dropped before any member list or pair forms. Pairs
+    inside a capped bucket can still surface through the document's OTHER
+    bands (that is why the cap composes with banding instead of destroying
+    recall); pairs whose EVERY shared band is over the cap are the
+    documented recall trade."""
     if max_bucket_size is None:
         return banded
     if max_bucket_size < 2:
         raise ValueError(f"max_bucket_size must be >= 2, got {max_bucket_size}")
-    ok = (
-        banded.groupBy("band", "bucket")
-        .agg(F.count(F.lit(1)).alias("__bc__"))
+    cell = Window.partitionBy(*keys)
+    return (
+        banded.withColumn("__bc__", F.count(F.lit(1)).over(cell))
         .filter(F.col("__bc__") <= max_bucket_size)
-        .select("band", "bucket")
+        .drop("__bc__")
     )
-    return banded.join(ok, ["band", "bucket"])
 
 
 def minhash_near_dup_pairs(
@@ -248,15 +255,16 @@ def minhash_near_dup_pairs(
     """MinHash+LSH near-duplicate pairs with exact-Jaccard verification.
 
     Plan: signature+bands in the scan stage → explode bands (rows × bands,
-    each row only (id, band, bucket)) → one groupBy (band, bucket) that
-    collects each bucket's member ids → every i<j pair of each member list
-    in one ``flatten(transform(...))`` exploded → distinct candidate pairs →
-    exact Jaccard ≥ threshold. Candidates form only inside a bucket
-    (bucket-local pair generation), and the member list makes that ONE
-    shuffle on short keys: no bucket-count aggregate joined back, no
-    self-join. A bucket of m members emits the same m(m-1)/2 pairs the
-    self-join did; ``max_bucket_size`` (the :func:`_cap_buckets` skew guard,
-    same recall trade) drops lists longer than the cap before they emit.
+    each row only (id, band, bucket)) → ``max_bucket_size`` cap (the
+    :func:`_cap_buckets` window count, skipped when uncapped) → one groupBy
+    (band, bucket) that collects each bucket's member ids → every i<j pair
+    of each member list → distinct candidate pairs → exact Jaccard ≥
+    threshold. Candidates form only inside a bucket (bucket-local pair
+    generation), and the member list makes that ONE shuffle on short keys:
+    no bucket-count aggregate joined back, no self-join. The pairs come from
+    two plain generators — member a at position i, then every member after
+    i — so a bucket of m members streams the same m(m-1)/2 pairs the
+    self-join did while no row holds more than its m-id list.
     With b bands of r rows the match probability is 1-(1-s^r)^b — at
     b=16, r=4: s=0.7 → ~0.97 recall; the verify stage removes false
     positives, so precision is exact.
@@ -274,27 +282,25 @@ def minhash_near_dup_pairs(
 
     Returns (id_a, id_b, jaccard_sim) with id_a < id_b.
     """
-    if max_bucket_size is not None and max_bucket_size < 2:
-        raise ValueError(f"max_bucket_size must be >= 2, got {max_bucket_size}")
     banded, shingles = _minhash_banded(
         df, id_col, text_col, num_hashes, bands, shingle_n, hash_family
     )
-    size = F.size("__m__")
-    keep = size >= 2 if max_bucket_size is None else size.between(2, max_bucket_size)
-    # member i (1-based) pairs with every later member of its list; the
-    # nested HOFs run in a Project, not inside the Generate (plans/audit.py)
-    pairs_sql = (
-        "flatten(transform(sequence(1, size(__m__) - 1), i -> "
-        "transform(slice(__m__, i + 1, size(__m__) - i), y -> named_struct("
-        "'id_a', least(__m__[i - 1], y), 'id_b', greatest(__m__[i - 1], y)))))"
+    members = (
+        _cap_buckets(banded, max_bucket_size)
+        .groupBy("band", "bucket")
+        .agg(F.collect_list("__id__").alias("__m__"))
+        .filter(F.size("__m__") >= 2)
     )
     cand = (
-        banded.groupBy("band", "bucket")
-        .agg(F.collect_list("__id__").alias("__m__"))
-        .filter(keep)
-        .select(F.expr(pairs_sql).alias("__ps__"))
-        .select(F.explode("__ps__").alias("__p__"))
-        .select(F.col("__p__.id_a").alias("id_a"), F.col("__p__.id_b").alias("id_b"))
+        members.select("__m__", F.posexplode("__m__").alias("__i__", "__a__"))
+        .select(
+            "__a__",
+            F.explode(F.slice("__m__", F.col("__i__") + 2, F.size("__m__"))).alias("__b__"),
+        )
+        .select(
+            F.least("__a__", "__b__").alias("id_a"),
+            F.greatest("__a__", "__b__").alias("id_b"),
+        )
         .filter(F.col("id_a") < F.col("id_b"))
         .dropDuplicates(["id_a", "id_b"])
     )
@@ -335,9 +341,9 @@ def simhash_near_dup_pairs(
     ``hash_family`` follows :func:`~..operators.text.simhash64`: "md5"
     makes the signature — hence blocks, candidates, and verified pairs —
     engine-portable and oracle-checkable. ``max_bucket_size`` skips
-    oversized (blk, key) cells before the candidate join — same skew guard
-    (and same recall trade on all-blocks-capped pairs) as the MinHash
-    ``_cap_buckets``.
+    oversized (blk, key) cells before the candidate join — the MinHash
+    :func:`_cap_buckets` skew guard on the block key, with the same recall
+    trade on all-blocks-capped pairs.
 
     Returns (id_a, id_b, hamming) with id_a < id_b.
     """
@@ -372,16 +378,7 @@ def simhash_near_dup_pairs(
         F.col("__x__.blk").alias("blk"),
         F.col("__x__.key").alias("key"),
     )
-    if max_bucket_size is not None:
-        if max_bucket_size < 2:
-            raise ValueError(f"max_bucket_size must be >= 2, got {max_bucket_size}")
-        ok = (
-            blocks.groupBy("blk", "key")
-            .agg(F.count(F.lit(1)).alias("__bc__"))
-            .filter(F.col("__bc__") <= max_bucket_size)
-            .select("blk", "key")
-        )
-        blocks = blocks.join(ok, ["blk", "key"])
+    blocks = _cap_buckets(blocks, max_bucket_size, ("blk", "key"))
     a, b = blocks.alias("a"), blocks.alias("b")
     cand = (
         a.join(

@@ -781,3 +781,24 @@ def test_dedup_clusters_rounds_pinned(spark):
             out = dedup_clusters(pairs, two_hop=two_hop, stats=stats).collect()
             assert stats["rounds"] == want, (name, two_hop, stats)
             assert len(out) == len({n for e in edges for n in e})
+
+
+def test_minhash_uncapped_large_bucket_streams_pairs(spark):
+    """An uncapped bucket of 2,000 identical documents (the empty or
+    boilerplate page case) emits all m(m-1)/2 pairs. Pairs are generated
+    per member, so no row carries more than the bucket's id list; a single
+    array of every pair in the bucket would hold ~2M structs here and hit
+    the array size limit near 65k members."""
+    from gdelt_2_0_event_database_pipeline_spark.operators.dedup import (
+        minhash_near_dup_pairs,
+    )
+
+    m = 2000
+    docs = spark.range(m).selectExpr("id AS doc_id", "'same boilerplate page body' AS text")
+    pairs = minhash_near_dup_pairs(
+        docs, "doc_id", "text", threshold=0.9, num_hashes=4, bands=2
+    )
+    got = pairs.selectExpr(
+        "count(*) AS n", "count_if(id_a < id_b) AS ordered", "min(jaccard_sim) AS j"
+    ).first()
+    assert (got.n, got.ordered, got.j) == (m * (m - 1) // 2, m * (m - 1) // 2, 1.0)
